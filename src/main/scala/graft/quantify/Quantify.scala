@@ -1,7 +1,9 @@
 package graft.quantify
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.kmer.Kmers
 import graft.model.{Read, Transcript}
 
@@ -15,18 +17,22 @@ import graft.model.{Read, Transcript}
   * normalizer (Quantify.scala:263-274, SURVEY A8) is a broadcast scalar
   * over the tiny per-transcript frame.
   *
-  * Scale design: the only large relation is the (ec, tid, kj) membership edge
-  * table — k_j pre-joined ONCE (it is iteration-invariant) and cached; per EM
-  * iteration only per-task partial aggregates shuffle (class totals by ec,
-  * then µ by tid) — the edges themselves never move when the per-class
-  * totals broadcast, and a hot class cannot pin a task (see eStep).
-  * The µ state is one row per transcript (small even at 100 TB read sets),
-  * kept UNNORMALIZED across iterations (the E step is scale-invariant, so
-  * Σ=1 is applied once at the end) and localCheckpoint()ed so each iteration
-  * is a single eager job and the Catalyst plan does not grow with
-  * iterations (SURVEY §7.4 risk I1).
+  * Scale design: the distributed part ends at the per-class read counts —
+  * k-mer counting, the k-mer → class join and the class aggregate scale
+  * with the read set. The EM itself runs over the (class, transcript)
+  * membership edges of the counted classes, and those number one per
+  * (transcript, multiplicity) class (Indexer), so they grow with the
+  * annotation, not the reads. They are collected ONCE, with the class
+  * counts and effective lengths, and every iteration is a loop over flat
+  * arrays on the driver ([[emLoop]]), as Sailfish and Salmon run it in
+  * memory: no Spark job per iteration, and a job count that does not
+  * depend on `maxIterations`. µ stays UNNORMALIZED across iterations (the
+  * E step is scale-invariant), and Σ=1 is applied once at the end. The
+  * DataFrame steps [[initializeEM]], [[eStep]] and [[mStep]] remain the
+  * query-surface and reference form of the same math.
   */
 object Quantify {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Count k-mers across a read set — ADAM's adamCountKmers re-expressed
     * (reference Quantify.scala:57-60, SURVEY A3).
@@ -101,8 +107,9 @@ object Quantify {
       .select("ec", "tid", "alpha")
   }
 
-  /** M step: µᵢ = (Σ_{sⱼ ⊆ tᵢ} α(j,i)·kⱼ) / (lᵢ − k + 1), then
-    * µ̂ᵢ = µᵢ / Σµ (reference Quantify.scala:238-275). `relEc` carries
+  /** M step: µᵢ = (Σ_{sⱼ ⊆ tᵢ} α(j,i)·kⱼ) / max(lᵢ − k + 1, 1), then
+    * µ̂ᵢ = µᵢ / Σµ (reference Quantify.scala:238-275; the floor is
+    * [[effectiveLength]]'s). `relEc` carries
     * k_j = relative k-mer count of class j (Quantify.scala:79-87); `tLen`
     * is the broadcast transcript-length dim (J4).
     * @param alpha DataFrame(ec, tid, alpha)
@@ -115,16 +122,15 @@ object Quantify {
     // broadcast hint; AQE picks broadcast when the runtime size allows.
     // mus is referenced twice below (its rows AND its scalar total), so it
     // is materialized ONCE via localCheckpoint — without it the whole
-    // join/aggregate chain would execute twice per EM iteration. The
-    // checkpoint also truncates lineage, which is what keeps the driver
-    // EM loop's plan constant-depth (SURVEY §7.4 risk I1) — callers need
-    // no further checkpointing.
+    // join/aggregate chain would execute twice. The checkpoint also
+    // truncates lineage, so a caller chaining eStep/mStep keeps a
+    // constant-depth plan (SURVEY §7.4 risk I1).
     val mus = alpha
       .join(relEc, "ec")
       .groupBy("tid")
       .agg(sum(col("alpha") * col("kj")).as("sumAlpha"))
       .join(broadcast(tLen), "tid")
-      .withColumn("mu", col("sumAlpha") / (col("len") - k + 1).cast("double"))
+      .withColumn("mu", col("sumAlpha") / effectiveLength(col("len"), k))
       .localCheckpoint() // small: one row per transcript
     // scalar normalizer as a broadcast 1-row cross join — a global window here
     // would funnel every row through one partition (Quantify.scala:263-274's
@@ -133,39 +139,103 @@ object Quantify {
       .select(col("tid"), (col("mu") / col("totalMu")).as("muHat"))
   }
 
-  /** One fused EM iteration for the internal loop: E step (class totals
-    * aggregated then joined back — skew-safe, see eStep) and M step
-    * (per-transcript aggregate) over `edges` that already carry the
-    * iteration-invariant k_j — so the loop never re-joins `relEc`. The α
-    * normalization is scale-invariant in µ (α = µᵢ/Σµₜ), so the
-    * per-iteration µ̂ = µ/Σµ normalizer is algebraically redundant and
-    * deferred to the END of the loop: each iteration is exactly ONE eager
-    * job (the localCheckpoint). When the per-EC totals broadcast (they are
-    * one row per class), the cached edges never shuffle — the only shuffles
-    * are the tiny per-task partial aggregates by ec and by tid.
-    * @param mu    DataFrame(tid, mu) — unnormalized abundances
-    * @param edges DataFrame(ec, tid, kj) — membership edges with k_j
-    * @return DataFrame(tid, mu)
+  /** Effective length max(len − k + 1, 1) as a double: the number of k-mer
+    * start positions, floored at 1 so that a transcript shorter than k
+    * divides by 1 instead of by zero or a negative. */
+  private def effectiveLength(len: Column, k: Int): Column =
+    greatest(len - (k - 1), lit(1L)).cast("double")
+
+  /** The counted classes' membership edges in flat form, for [[emLoop]].
+    * @param tids       transcript ids, in the type of `ecToTx.tid`
+    * @param effLen     effective length of each transcript
+    * @param classCount read count of each counted class
+    * @param edgeClass  class of each edge
+    * @param edgeTx     transcript of each edge, −1 when it has no length row
+    * @param clamped    transcripts whose effective length was floored
     */
-  private def emIterate(mu: DataFrame, edges: DataFrame, tLen: DataFrame,
-      k: Int): DataFrame = {
-    val withMu = edges.join(mu, "tid")
-    val classTotals = withMu.groupBy("ec").agg(sum("mu").as("classTotal"))
-    mAgg(withMu.join(classTotals, "ec")
-      .withColumn("alpha", col("mu") / col("classTotal")), tLen, k)
+  private final case class Edges(tids: IndexedSeq[Any], effLen: Array[Double],
+      classCount: Array[Double], edgeClass: Array[Int], edgeTx: Array[Int],
+      clamped: Int)
+
+  /** Collect every class of `ecCounts` with its `ecToTx` rows and their
+    * transcripts' lengths, in one job. The left joins keep what the
+    * DataFrame form's inner joins drop from the EM but not from its
+    * constants: a counted class with no member still feeds k_j's
+    * denominator, and a member with no length row still counts in its
+    * class's size. Transcripts are those with a length row and an edge. */
+  private def collectEdges(ecCounts: DataFrame, ecToTx: DataFrame,
+      tLen: DataFrame, k: Int): Edges = {
+    val rows = ecCounts
+      .join(ecToTx, Seq("ec"), "left")
+      .join(tLen, Seq("tid"), "left")
+      .select(col("ec"), col("count").cast("double"), col("tid"), col("len"),
+        effectiveLength(col("len"), k))
+      .collect()
+    val classIdx = scala.collection.mutable.HashMap.empty[Any, Int]
+    val txIdx = scala.collection.mutable.HashMap.empty[Any, Int]
+    val tids = Vector.newBuilder[Any]
+    val effLen, classCount = Array.newBuilder[Double]
+    val edgeClass, edgeTx = Array.newBuilder[Int]
+    var clamped = 0
+    rows.foreach { r =>
+      val c = classIdx.getOrElseUpdate(r.get(0), {
+        classCount += r.getDouble(1); classIdx.size
+      })
+      if (!r.isNullAt(2)) {
+        edgeClass += c
+        edgeTx += (if (r.isNullAt(3)) -1 else txIdx.getOrElseUpdate(r.get(2), {
+          tids += r.get(2); effLen += r.getDouble(4)
+          if (r.getDouble(4) > r.getLong(3) - k + 1) clamped += 1
+          txIdx.size
+        }))
+      }
+    }
+    Edges(tids.result(), effLen.result(), classCount.result(),
+      edgeClass.result(), edgeTx.result(), clamped)
   }
 
-  /** The M-step aggregate over (ec, tid, alpha, kj) rows, WITHOUT the µ̂
-    * normalizer (see emIterate). localCheckpoint keeps the driver loop's
-    * plan constant-depth — one eager job per call. */
-  private def mAgg(alphaKj: DataFrame, tLen: DataFrame, k: Int): DataFrame =
-    alphaKj
-      .groupBy("tid")
-      .agg(sum(col("alpha") * col("kj")).as("sumAlpha"))
-      .join(broadcast(tLen), "tid")
-      .select(col("tid"),
-        (col("sumAlpha") / (col("len") - k + 1).cast("double")).as("mu"))
-      .localCheckpoint() // small: one row per transcript
+  /** The EM over flat edge arrays: the equal split and one M step, then
+    * `iterations` E/M rounds — the same math as [[initializeEM]] →
+    * [[mStep]] → ([[eStep]] → [[mStep]])×n. k_j = count_j / Σ count over
+    * every counted class; the initial α is count_j over the class's edge
+    * count; the E step's class totals and the M step run over transcripts
+    * with a length row only. A class whose µ total is 0 contributes α = 0.
+    * µ stays unnormalized until the end.
+    * @return µ̂ per transcript, Σ = 1 (the equal split when no class has a
+    *   non-zero count)
+    */
+  private[graft] def emLoop(edgeClass: Array[Int], edgeTx: Array[Int],
+      classCount: Array[Double], effLen: Array[Double], iterations: Int): Array[Double] = {
+    val nTx = effLen.length
+    val totalCount = classCount.sum
+    val kj = classCount.map(c => if (totalCount > 0) c / totalCount else 0.0)
+    val classSize = new Array[Int](classCount.length)
+    edgeClass.foreach(c => classSize(c) += 1)
+
+    val acc = new Array[Double](nTx)
+    for (e <- edgeClass.indices if edgeTx(e) >= 0) {
+      val c = edgeClass(e)
+      acc(edgeTx(e)) += classCount(c) / classSize(c) * kj(c)
+    }
+    val mu = Array.tabulate(nTx)(t => acc(t) / effLen(t))
+
+    val classTotal = new Array[Double](classCount.length)
+    for (_ <- 0 until iterations) {
+      java.util.Arrays.fill(classTotal, 0.0)
+      java.util.Arrays.fill(acc, 0.0)
+      for (e <- edgeClass.indices if edgeTx(e) >= 0)
+        classTotal(edgeClass(e)) += mu(edgeTx(e))
+      for (e <- edgeClass.indices if edgeTx(e) >= 0) {
+        val c = edgeClass(e)
+        val t = edgeTx(e)
+        if (classTotal(c) != 0) acc(t) += mu(t) / classTotal(c) * kj(c)
+      }
+      for (t <- 0 until nTx) mu(t) = acc(t) / effLen(t)
+    }
+
+    val total = mu.sum
+    if (total > 0) mu.map(_ / total) else Array.fill(nTx)(1.0 / nTx)
+  }
 
   /** Transcript length = Σ over exons of (region.width − 1) — exactly the
     * reference's Σ(end − start − 1) (Quantify.scala:137-141 with
@@ -211,45 +281,23 @@ object Quantify {
       else readKmers
 
     val ecCounts = Timers.time("mapKmersToClasses") {
-      mapKmersToClasses(calibrated, kmerToEc).cache()
+      mapKmersToClasses(calibrated, kmerToEc)
     }
 
-    // k_j = relative k-mer count of each class (Quantify.scala:79-87).
-    // A scalar agg + broadcast cross join replaces the reference's
-    // reduce+collectAsMap without a single-partition window.
-    val relEc = ecCounts
-      .crossJoin(broadcast(ecCounts.agg(sum("count").as("totalCount"))))
-      .select(col("ec"), (col("count").cast("double") / col("totalCount")).as("kj"))
-      .cache()
-
-    // membership edges with the iteration-INVARIANT k_j pre-joined ONCE —
-    // the loop below must never re-join relEc (it doesn't change across
-    // iterations), so the per-iteration work is exactly the two shuffles
-    // the math requires
-    val edges = ecToTx.join(relEc, "ec").cache()
-
-    // init: equal split + one (unnormalized) M aggregate (Quantify.scala:89-102)
-    var mu = Timers.time("initializeEM") {
-      mAgg(initializeEM(ecCounts, ecToTx).join(relEc, "ec"), tLen, kmerLength)
+    // the edges are collected once and the EM runs on the driver; µ̂ comes
+    // back as a one-row-per-transcript frame keyed by ecToTx's tid type.
+    // The collect is the first action, so `em` also times the lazy stages above.
+    val muHat = Timers.time("em") {
+      val edges = collectEdges(ecCounts, ecToTx, tLen, kmerLength)
+      if (edges.clamped > 0)
+        log.warn(s"${edges.clamped} transcript(s) have len - k + 1 < 1; " +
+          "their effective length is floored at 1")
+      val mu = emLoop(edges.edgeClass, edges.edgeTx, edges.classCount,
+        edges.effLen, maxIterations)
+      spark.createDataFrame(
+        edges.tids.zip(mu).map { case (t, m) => Row(t, m) }.asJava,
+        StructType(Seq(ecToTx.schema("tid"), StructField("muHat", DoubleType))))
     }
-
-    // EM loop — driver-side iteration over a constant-depth plan: mAgg
-    // localCheckpoints the per-transcript state (ONE eager job per
-    // iteration, as the reference's µ reduce), so each iteration's plan
-    // roots at the previous checkpoint and never grows. µ stays
-    // unnormalized inside the loop (the E step is scale-invariant); the
-    // single µ̂ = µ/Σµ normalization happens once, below.
-    (0 until maxIterations).foreach { _ =>
-      Timers.time("emIteration") {
-        mu = emIterate(mu, edges, tLen, kmerLength)
-      }
-    }
-
-    // the deferred Σ=1 normalization (reference Quantify.scala:263-275):
-    // scalar agg broadcast-cross-joined, never a single-partition window
-    val muHat = mu
-      .crossJoin(broadcast(mu.agg(sum("mu").as("totalMu"))))
-      .select(col("tid"), (col("mu") / col("totalMu")).as("muHat"))
 
     val calibratedMu =
       if (calibrateLengthBias) Timers.time("calibrateTxLenBias") {

@@ -143,7 +143,7 @@ object GenomicsQueries {
       |  FROM classes c JOIN ecc e USING (ec)),""".stripMargin
     // µ stays UNNORMALIZED across iterations (the E step is scale-invariant
     // in µ, so the per-iteration µ̂ = µ/Σµ is algebraically redundant) —
-    // mirroring Quantify.emIterate; the single normalization is in the
+    // mirroring Quantify.emLoop; the single normalization is in the
     // final SELECT.
     def mBlock(i: Int) = s"""
       |mus$i AS MATERIALIZED (

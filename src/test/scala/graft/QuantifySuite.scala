@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.index.Indexer
 import graft.model.{Exon, Read, ReferenceRegion, Transcript}
@@ -231,5 +235,129 @@ class QuantifySuite extends SparkSuite {
     assert(fpEquals(ab("5"), 0.025, 0.0125))
     assert(fpEquals(ab("6"), 0.025, 0.0125))
     assert(fpEquals(ab("7"), 0.4, 0.05))
+  }
+
+  // EM fixture for the specs below, k = 3. Classes 1-4 and 6 are counted,
+  // 1-3 with several members; class 5 has no read k-mer, and "f", in no
+  // other class, drops out; class 7 is counted but has no member (it still
+  // feeds k_j's denominator); "e" has no length row.
+  private val emK = 3
+  private val emReads = Seq("AAAAA", "CCCC", "GGGGGG", "TTT", "GTAC", "CATT", "AAAT")
+  private val emKmers = Map("AAA" -> 1L, "CCC" -> 2L, "GGG" -> 3L, "TTT" -> 4L,
+    "ACG" -> 5L, "GTA" -> 6L, "CAT" -> 7L, "AAT" -> 3L)
+  private val emClasses = Map(1L -> Seq("a", "b"), 2L -> Seq("b", "c", "e"),
+    3L -> Seq("a", "c", "d"), 4L -> Seq("d"), 5L -> Seq("a", "f"), 6L -> Seq("c"))
+  private val emWidths = Map("a" -> 11L, "b" -> 15L, "c" -> 9L, "d" -> 21L, "f" -> 12L)
+
+  private def emInputs(widths: Map[String, Long]) = {
+    val kmerToEc = emKmers.toSeq.toDF("kmer", "ec")
+    val ecToTx = emClasses.toSeq.flatMap { case (ec, ts) => ts.map(t => (ec, t)) }
+      .toDF("ec", "tid")
+    val txDs = widths.toSeq.map { case (n, w) =>
+      Transcript(n, Seq(n), n, true, Seq(Exon(n + "exon", n, true, ReferenceRegion(n, 0L, w))))
+    }.toDS()
+    (emReads.map(Read(_)).toDS(), kmerToEc, ecToTx, txDs)
+  }
+
+  private def abundances(df: DataFrame, value: String): Map[String, Double] =
+    df.select("tid", value).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
+  /** Quantify.apply (calibrations off) and the DataFrame reference chain
+    * initializeEM → mStep → (eStep → mStep)×n on the same inputs. */
+  private def applyAndReference(widths: Map[String, Long], n: Int) = {
+    val (reads, kmerToEc, ecToTx, txDs) = emInputs(widths)
+    val got = abundances(Quantify(reads, kmerToEc, ecToTx, txDs, emK, n,
+      calibrateKmerBias = false, calibrateLengthBias = false), "abundance")
+    val ecCounts = Quantify.mapKmersToClasses(Quantify.countKmers(reads.toDF(), emK), kmerToEc)
+    val relEc = ecCounts.crossJoin(ecCounts.agg(sum("count").as("total")))
+      .select($"ec", ($"count".cast("double") / $"total").as("kj"))
+    val tLen = Quantify.transcriptLengths(txDs)
+    var muHat = Quantify.mStep(Quantify.initializeEM(ecCounts, ecToTx), relEc, tLen, emK)
+    for (_ <- 0 until n) muHat = Quantify.mStep(Quantify.eStep(muHat, ecToTx), relEc, tLen, emK)
+    (got, abundances(muHat, "muHat"))
+  }
+
+  private def assertSimplex(ab: Iterable[Double]): Unit = {
+    assert(ab.forall(v => !v.isNaN && !v.isInfinite && v >= 0), ab)
+    assert(fpEquals(ab.sum, 1.0, 1e-9))
+  }
+
+  test("the driver-side EM equals the DataFrame reference chain") {
+    for (n <- Seq(0, 1, 5)) {
+      val (got, ref) = applyAndReference(emWidths, n)
+      assert(got.keySet === Set("a", "b", "c", "d"), s"n = $n")
+      assert(ref.keySet === got.keySet, s"n = $n")
+      got.foreach { case (t, v) => assert(math.abs(v - ref(t)) <= 1e-12, s"$t at n = $n") }
+      assertSimplex(got.values)
+    }
+  }
+
+  test("effective lengths of 0 and below are floored at 1") {
+    // len = width − 1, so with k = 3 "a" has len − k + 1 = 0 and "c" −1;
+    // the reference chain floors through the same helper
+    val widths = emWidths ++ Map("a" -> 3L, "c" -> 2L)
+    val (got, ref) = applyAndReference(widths, 5)
+    assert(got.keySet === Set("a", "b", "c", "d"))
+    assertSimplex(got.values)
+    got.foreach { case (t, v) => assert(math.abs(v - ref(t)) <= 1e-12, t) }
+  }
+
+  test("a zero-count class contributes nothing and leaves the estimate finite") {
+    // t2 is only in zero-count classes 1 and 3, so its µ is 0 and class
+    // 1's µ total is 0 in every E step
+    val mu = Quantify.emLoop(edgeClass = Array(0, 0, 1, 2, 3, 3),
+      edgeTx = Array(0, 1, 2, 1, 0, 2), classCount = Array(5.0, 0.0, 3.0, 0.0),
+      effLen = Array(4.0, 2.0, 1.0), iterations = 5)
+    assertSimplex(mu)
+    assert(mu(0) > 0 && mu(1) > 0)
+    assert(mu(2) === 0.0)
+    // with no count at all the estimate is the equal split
+    val none = Quantify.emLoop(Array(0, 1), Array(0, 1), Array(0.0, 0.0),
+      Array(4.0, 2.0), iterations = 3)
+    assert(none.toSeq === Seq(0.5, 0.5))
+  }
+
+  test("Quantify.apply's Spark job count does not depend on the iteration count") {
+    val (reads, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
+    val jobs = Seq(1, 50).map { n =>
+      spark.catalog.clearCache()
+      jobsSubmitted {
+        Quantify(reads, kmerToEc, ecToTx, txDs, emK, n,
+          calibrateKmerBias = false, calibrateLengthBias = false).collect()
+      }
+    }
+    assert(jobs.head > 0)
+    assert(jobs.head === jobs.last)
+  }
+
+  /** Spark jobs submitted while `body` runs, as a SparkListener sees them:
+    * the body runs in its own job group, and a marker job in a second group
+    * shows that the listener has been sent every earlier job's start. */
+  private def jobsSubmitted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"quantify-jobs-${System.nanoTime()}"
+    val marker = group + "-end"
+    val jobs = new AtomicInteger
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => seen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 }
