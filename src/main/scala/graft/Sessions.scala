@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** One place to build sessions so every entry point (Verify, Bench, tests)
-  * carries the same scale-relevant config.
+/** One place to build sessions so every entry point (Verify, Bench, the CLI,
+  * tests) carries the same scale-relevant config.
   *
-  * - shuffle.partitions sized to the local core count (not the 200 default);
-  *   on a real cluster this would be tuned to ~2-3× total cores or left to AQE
-  *   coalescing, which is enabled here and does the right thing at any SF.
+  * - master and shuffle.partitions: `local[N]` and N (not the 200 default),
+  *   unless the SparkConf already names them — under spark-submit its
+  *   `--master` and `--conf spark.sql.shuffle.partitions` win, so the CLI
+  *   reaches a cluster. AQE coalescing is enabled and does the right thing
+  *   at any SF.
   * - nanosAsLong: older vintages of the driver corpus stored `events.ts`
   *   as parquet TIMESTAMP(NANOS), which Spark 4 refuses by default; with
   *   the flag it reads as a nanosecond Long and the loader normalizes it
@@ -15,7 +18,13 @@ import org.apache.spark.sql.SparkSession
   *   vintage, where the flag is simply inert).
   */
 object Sessions {
-  def local(cpus: String): SparkSession = forMaster(s"local[$cpus]", cpus)
+  def local(cpus: String): SparkSession = build(localDefaults(new SparkConf(), cpus))
+
+  /** The settings [[local]] adds to `conf`: master `local[cpus]` and `cpus`
+    * shuffle partitions, each only when `conf` has no value of its own. */
+  private[graft] def localDefaults(conf: SparkConf, cpus: String): Map[String, String] =
+    Map("spark.master" -> s"local[$cpus]", "spark.sql.shuffle.partitions" -> cpus)
+      .filter { case (key, _) => !conf.contains(key) }
 
   /** Same config surface as [[local]] for an arbitrary master URL — the
     * Scale cluster probe passes `local-cluster[n,cores,mem]` here to run
@@ -25,15 +34,17 @@ object Sessions {
     * only its jars, so the library's own classes are shipped via
     * `spark.executor.extraClassPath` (the compiled classes dir — on a
     * real cluster this is the application jar `spark-submit` distributes). */
-  def forMaster(master: String, shufflePartitions: String): SparkSession = {
+  def forMaster(master: String, shufflePartitions: String): SparkSession =
+    build(Map("spark.master" -> master, "spark.sql.shuffle.partitions" -> shufflePartitions))
+
+  private def build(conf: Map[String, String]): SparkSession = {
     val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config(conf)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
+    if (conf.get("spark.master").exists(_.startsWith("local-cluster"))) {
       // resolve the classes dir from this class's own code source, not the
       // CWD: launched from any other directory, a relative path would hand
       // executors a nonexistent classpath and every task would die in an

@@ -2,147 +2,159 @@ package graft.calibrate
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.regression.LinearRegression
-import org.apache.spark.ml.functions.array_to_vector
-import graft.kmer.Kmers
 
-/** Bias calibration — Spark-SQL/spark.ml re-expression of the reference's
-  * Tare (rice-core .../algorithms/Tare.scala).
+/** Bias calibration — Spark-SQL re-expression of the reference's Tare
+  * (rice-core .../algorithms/Tare.scala).
   *
-  * Two corrections:
-  *  - k-mer GC/sequence-context bias: regress log(count) on the 16-dim
-  *    dinucleotide-context histogram, keep the residual (Tare.scala:110-136).
+  * Two corrections, each a least-squares fit whose normal equations are
+  * solved on the driver:
+  *  - k-mer GC/sequence-context bias: regress log(count) on the k-mer's 16
+  *    dinucleotide-context counts, keep the residual (Tare.scala:110-136).
+  *    One aggregate scan gives the 16×16 Gram; the reference's distributed
+  *    SGD is not needed for a 16-column design.
   *  - transcript length bias: driver-side OLS of log(µ̂) on log(len) over a
   *    collected sample — deliberately NOT distributed; the reference found
   *    MLlib SGD does not converge for 1-D features (Tare.scala:156-177 and
   *    the comment at :164-167), and the sample is tiny.
   */
 object Tare {
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Recalibrate k-mer counts for sequence-context bias
-    * (Tare.scala:110-136).
-    *
-    * calibrated = exp(sampleMeanLog + (log(count) − model(features))) as Long
-    * where sampleMeanLog = log(Σ count / #kmers) — the reference computes it
-    * with two accumulators (Tare.scala:112-117); here it is one two-aggregate
-    * pass (SURVEY A10). The SGD regressor becomes spark.ml LinearRegression
-    * (normal-equation/LBFGS solver — SGD was removed in Spark 2 and converged
-    * poorly anyway).
+    * (Tare.scala:110-136): [[kmerBiasFit]]'s calibrated abundance,
+    * truncated to a Long.
     *
     * @param kmers DataFrame(kmer, count)
-    * @return DataFrame(kmer, count) with calibrated counts
+    * @return DataFrame(kmer, count long) with calibrated counts
     */
-  def calibrateKmers(kmers: DataFrame): DataFrame = {
-    val featurized = kmers
-      .withColumn("label", log(col("count").cast("double")))
-      .withColumn("features", array_to_vector(Kmers.dinucFeatures(col("kmer"))))
-      .cache()
+  def calibrateKmers(kmers: DataFrame): DataFrame =
+    kmerBiasFit(kmers).select(col("kmer"),
+      col("calibrated").cast("long").as("count"))
 
-    val Seq(nKmers, totalMult) =
-      featurized.agg(count(lit(1)), sum("count")).head().toSeq.map(_.toString.toDouble)
-    val mean = math.log(totalMult / nKmers)
+  /** The k-mer sequence-context bias fit (reference Tare.scala:110-136):
+    *
+    *   calibrated = exp(ln(Σ count / n) + ln(count) − x·w)
+    *
+    * where w is the least-squares fit of ln(count) on x, and the mean runs
+    * over the n fitted k-mers (the reference's two accumulators,
+    * Tare.scala:112-117).
+    *
+    * Design: x_b counts the k-mer's positions whose context is dinucleotide
+    * b ([[dinucs]] order, case-insensitive), read off the string with
+    * `replace` length deltas (`regexp_replace("x(?=x)")` for the
+    * overlapping xx) — no higher-order functions. A k-mer whose k−1
+    * contexts are all valid keeps these integer counts; one with some
+    * non-ACGT base has them scaled by (k−1)/n_valid. Every row then sums to
+    * k−1, so for k-mers of one length the constant lies in the column space
+    * and the no-intercept fit predicts exactly what the reference's
+    * fit-with-intercept on the normalized histogram (Kmers.dinucFeatures)
+    * predicts, without the collinearity an intercept column would add. A
+    * k-mer with no valid context (the reference asserts, Tare.scala:91) is
+    * left out of the fit and of the mean, keeps its raw count, and is
+    * counted in a warning.
+    *
+    * Solve: one aggregate scan gives the Gram XᵀX, Xᵀy with y = ln(count)
+    * floor-quantized per row to ×1e6 integers, Σ count and n. For an
+    * integer design every sum is then an exact integer below 2^53
+    * (addition-order independent); the driver runs a no-pivot Gaussian
+    * elimination whose operation tree [[exactSolveSql]] mirrors term for
+    * term, so q26 hash-matches a DuckDB oracle. A pivot that vanishes
+    * against its column's diagonal marks a column in the span of the
+    * earlier ones (a rank-deficient design, e.g. a dinucleotide no k-mer
+    * holds): its weight is 0, which leaves the projection unchanged. With
+    * no fitted k-mer (empty input) there is no solve.
+    *
+    * @param kmers DataFrame(kmer, count)
+    * @return DataFrame(kmer, count, calibrated double)
+    */
+  def kmerBiasFit(kmers: DataFrame): DataFrame = {
+    val d = 16
+    val u = upper(col("kmer"))
+    val contexts = dinucs.map { dn =>
+      if (dn(0) == dn(1))
+        length(u) - length(regexp_replace(u, s"${dn(0)}(?=${dn(0)})", ""))
+      else (length(u) - length(replace(u, lit(dn), lit("")))) / 2
+    }
+    // the counts are columns of their own so that the scaling below reads
+    // them instead of repeating 16 string scans per use
+    val c = kmers.select((col("kmer") :: col("count") ::
+      contexts.zipWithIndex.map { case (e, b) => e.as(s"c$b") }.toList): _*)
+    val nValid = (0 until d).map(b => col(s"c$b")).reduce(_ + _)
+    val k1 = length(col("kmer")) - 1
+    val scale = when(nValid === k1, 1.0).when(nValid > 0, k1 / nValid).otherwise(0.0)
+    val x = c.select((col("kmer") :: col("count") :: (nValid > 0).as("valid") ::
+      (0 until d).map(b => (col(s"c$b") * scale).as(s"x$b")).toList): _*)
 
-    val model = new LinearRegression().setFitIntercept(true).fit(featurized)
+    val valid = col("valid")
+    // ln(count) quantized per row to a ×1e6 integer (floor — unambiguous
+    // across engines)
+    val y = floor(log(col("count").cast("double")) * 1e6)
+    val aggs =
+      (for { i <- 0 until d; j <- i until d }
+        yield sum(col(s"x$i") * col(s"x$j")).as(s"a${i}_$j")) ++
+      (0 until d).map(i => (sum(col(s"x$i") * y) / 1e6).as(s"b$i")) ++
+      Seq(sum(when(valid, col("count"))).as("total"),
+        count(when(valid, 1)).as("n"), count(when(!valid, 1)).as("skipped"))
+    val row = x.agg(aggs.head, aggs.tail: _*).head()
+    val n = row.getAs[Long]("n")
+    val skipped = row.getAs[Long]("skipped")
+    if (skipped > 0)
+      logger.warn(s"$skipped k-mer(s) have no valid dinucleotide context; " +
+        "they pass through bias calibration with their raw counts")
 
-    val predicted = model.transform(featurized) // adds "prediction"
-    val out = predicted
-      .select(col("kmer"),
-        exp(lit(mean) + (col("label") - col("prediction"))).cast("long").as("count"))
-    featurized.unpersist()
-    out
+    val passThrough = col("count").cast("double")
+    val calibrated =
+      if (n == 0) passThrough
+      else {
+        val a = Array.tabulate(d, d)((i, j) =>
+          if (j >= i) row.getAs[Double](s"a${i}_$j") else 0.0)
+        val w = solve(a, Array.tabulate(d)(i => row.getAs[Double](s"b$i")))
+        val mean = math.log(row.getAs[Long]("total").toDouble / n)
+        val pred = (0 until d).map(i => lit(w(i)) * col(s"x$i")).reduce(_ + _)
+        when(valid, exp(lit(mean) + log(col("count").cast("double")) - pred))
+          .otherwise(passThrough)
+      }
+    x.select(col("kmer"), col("count"), calibrated.as("calibrated"))
   }
 
-  /** Oracle-expressible variant of [[calibrateKmers]]: the same
-    * OLS-residual recalibration (reference Tare.scala:110-136), but the
-    * fit is an EXPLICIT normal-equation solve instead of spark.ml — the
-    * 16×16 Gram matrix of raw integer dinucleotide counts is one
-    * aggregation pass (exact BIGINT entries; Xᵀy rounded to 6 dp so both
-    * engines solve from matching inputs), then a driver-side
-    * no-pivot symmetric Gaussian elimination whose operation tree is
-    * mirrored term-for-term by [[exactSolveSql]], so a DuckDB oracle can
-    * hash-match the result.
-    *
-    * Fit equivalence with calibrateKmers: every k-mer has exactly k−1
-    * valid dinucleotide contexts here (DNA-alphabet input), so
-    * Σ_b count_b = k−1 — the constant vector lies in the span of the raw
-    * count columns, which means the no-intercept fit on integer counts
-    * produces the SAME predictions as spark.ml's fitIntercept=true fit on
-    * the normalized histogram (same column space), without the exact
-    * collinearity an explicit intercept column would introduce. Output is
-    * the calibrated abundance rounded to 6 dp (a double, not the long
-    * cast — floor sits on an integer lattice, which cross-engine ulp
-    * noise could straddle; TareSuite pins the two variants against each
-    * other).
-    *
-    * @param kmers DataFrame(kmer, count), DNA-alphabet kmers of length k
-    */
-  def calibrateKmersExact(kmers: DataFrame, k: Int): DataFrame = {
-    val d = 16
-    val feat = kmers.select(
-      (col("kmer") :: col("count") ::
-        dinucs.zipWithIndex.map { case (dn, b) =>
-          (1 until k).map(p =>
-            when(col("kmer").substr(p, 2) === dn, 1).otherwise(0))
-            .reduce(_ + _).as(s"c$b")
-        }.toList): _*)
-      .cache()
-
-    val gramExprs =
-      (for { i <- 0 until d; j <- i until d }
-        yield sum(col(s"c$i") * col(s"c$j")).as(s"a${i}_$j")) ++
-      (0 until d).map(i =>
-        // Xᵀy as exact integers: ln(count) quantized per row to a ×1e6
-        // BIGINT (floor — unambiguous across engines), so the sum is
-        // addition-order independent and the cross-engine value identical
-        // by construction, not by a transcendental-boundary argument.
-        (sum(col(s"c$i") * floor(log(col("count").cast("double")) * 1e6))
-          .cast("double") / 1e6).as(s"b$i")) ++
-      Seq(sum(col("count")).as("total"), count(lit(1)).as("n"))
-    val row = feat.agg(gramExprs.head, gramExprs.tail: _*).head()
-
-    val a = Array.ofDim[Double](d, d) // upper triangle (j >= i) only
-    var idx = 0
-    for (i <- 0 until d; j <- i until d) { a(i)(j) = row.getLong(idx).toDouble; idx += 1 }
-    val bv = Array.tabulate(d)(i => row.getDouble(idx + i))
-    val total = row.getLong(idx + d)
-    val n = row.getLong(idx + d + 1)
-
-    // forward elimination without pivoting (the Gram of a full-column-rank
-    // design is SPD, so every pivot is positive); each update is written as
-    // x - (p / q) * y, the exact shape exactSolveSql emits
-    for (kk <- 0 until d - 1; i <- kk + 1 until d) {
+  /** Solve the symmetric system (upper triangle of `a`, right-hand side
+    * `b`; both overwritten) by no-pivot Gaussian elimination: each update
+    * is written x - (p / q) * y and back substitution subtracts in
+    * ascending-j order, the exact shapes [[exactSolveSql]] emits. A Gram
+    * of a full-column-rank design is SPD, so every pivot is positive; a
+    * pivot at or below 1e-9 of its original diagonal drops its column
+    * (weight 0, no elimination step). */
+  private def solve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+    val d = b.length
+    val diag = Array.tabulate(d)(i => a(i)(i))
+    def live(i: Int) = a(i)(i) > 1e-9 * diag(i)
+    for (kk <- 0 until d - 1 if live(kk); i <- kk + 1 until d) {
       for (j <- i until d)
         a(i)(j) = a(i)(j) - (a(kk)(i) / a(kk)(kk)) * a(kk)(j)
-      bv(i) = bv(i) - (a(kk)(i) / a(kk)(kk)) * bv(kk)
+      b(i) = b(i) - (a(kk)(i) / a(kk)(kk)) * b(kk)
     }
-    // back substitution, subtracted terms in ascending-j order
     val w = new Array[Double](d)
-    for (i <- d - 1 to 0 by -1) {
-      var s = bv(i)
+    for (i <- d - 1 to 0 by -1 if live(i)) {
+      var s = b(i)
       for (j <- i + 1 until d) s = s - a(i)(j) * w(j)
       w(i) = s / a(i)(i)
     }
-
-    val mean = math.log(total.toDouble / n)
-    val pred = (0 until d).map(i => lit(w(i)) * col(s"c$i")).reduce(_ + _)
-    val out = feat.select(col("kmer"),
-      round(exp(lit(mean) + log(col("count").cast("double")) - pred), 6)
-        .as("cal_count"))
-    feat.unpersist()
-    out
+    w
   }
 
   /** ACGT-ordered dinucleotides — index b = 4·idx(first) + idx(second),
     * the same ordering Kmers.dinucFeatures bins into. */
   val dinucs: Seq[String] = for (x <- "ACGT"; y <- "ACGT") yield s"$x$y"
 
-  /** The DuckDB mirror of [[calibrateKmersExact]]'s solve: CTEs from a
-    * relation `f(kmer, cnt, c0..c15)` to the final calibrated SELECT.
-    * Every elimination/back-substitution term is generated with the same
-    * association order as the Scala loops, so the double arithmetic is
-    * bit-identical given identical inputs: exact integer Gram, and Xᵀy
-    * summed as exact ×1e6-scaled BIGINTs (per-row floor-quantized ln —
-    * addition-order independent, so no FP-boundary caveat survives). */
+  /** The DuckDB mirror of [[kmerBiasFit]]'s solve: CTEs from a relation
+    * `f(kmer, cnt, c0..c15)` of DNA-alphabet k-mers (every context valid,
+    * full-rank design) to the final SELECT of the fit's calibrated
+    * abundance rounded to 6 dp. Every elimination/back-substitution term
+    * is generated with the same association order as the Scala loops, so
+    * the double arithmetic is bit-identical given identical inputs: exact
+    * integer Gram, and Xᵀy summed as exact ×1e6-scaled integers (per-row
+    * floor-quantized ln — addition-order independent, so no FP-boundary
+    * caveat survives). */
   def exactSolveSql(d: Int = 16): String = {
     val gram =
       (for { i <- 0 until d; j <- i until d }

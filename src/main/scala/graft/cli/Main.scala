@@ -30,7 +30,13 @@ import graft.quantify.Quantify
   */
 object Main {
 
-  def main(args: Array[String]): Unit = args.toList match {
+  def main(args: Array[String]): Unit = {
+    // stage timings are per command, not per JVM
+    graft.util.Timers.reset()
+    dispatch(args.toList)
+  }
+
+  private def dispatch(args: List[String]): Unit = args match {
     case "index" :: genome :: gtf :: k :: out :: rest
         if rest.forall(_ == "-avro_compat") =>
       runIndex(genome, gtf, k.toInt, out,
@@ -75,7 +81,7 @@ object Main {
 
   /** Reporting parity with the reference's `.instrument()` + metrics dump
     * (rice-cli/.../Index.scala:68, rice-core/.../Timers.scala:25-63): after
-    * each command, print the accumulated driver-side stage wall times. */
+    * each command, print the driver-side stage wall times it recorded. */
   private[cli] def printTimers(): Unit = {
     val snap = graft.util.Timers.snapshot()
     if (snap.nonEmpty) {

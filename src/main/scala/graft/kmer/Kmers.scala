@@ -47,6 +47,11 @@ object Kmers {
     * contexts = kmer.sliding(2); invalid contexts are dropped (Tare.scala:90);
     * zero valid contexts is an error (assert at Tare.scala:91) — here surfaced
     * via `raise_error` to keep the same fail-fast contract.
+    *
+    * This is the reference's featurizer form, not the one the bias fit
+    * runs on: `Tare.kmerBiasFit` reads the same contexts off the string
+    * without higher-order functions, in a design with the same column
+    * space as this histogram plus an intercept.
     */
   def dinucFeatures(kmer: Column): Column = {
     val contexts = kmers(kmer, 2)

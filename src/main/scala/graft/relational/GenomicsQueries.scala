@@ -316,27 +316,27 @@ object GenomicsQueries {
     // I3: the sequence-context (GC) bias regression (reference
     // Tare.scala:110-136): regress log(count) on the 16-dim
     // dinucleotide-context features, keep the residual, rescale to the
-    // mean. Runs through Tare.calibrateKmersExact — the explicit
-    // normal-equation form of the fit (exact integer Gram + integer
-    // ×1e6-quantized Xᵀy, driver-side no-pivot elimination mirrored term-for-term by
-    // Tare.exactSolveSql) — so the FULL 16-feature OLS is hash-checked
-    // against DuckDB. TareSuite pins calibrateKmersExact against the
-    // spark.ml calibrateKmers fit (same predictions: the raw-count column
-    // space contains the intercept), and value-pins the math on
-    // hand-computed fixtures.
+    // mean. Runs through Tare.kmerBiasFit, the fit Quantify calibrates
+    // with (exact integer Gram + integer ×1e6-quantized Xᵀy, driver-side
+    // no-pivot elimination mirrored term-for-term by Tare.exactSolveSql),
+    // and projects its calibrated abundance to 6 dp — so the FULL
+    // 16-feature OLS is hash-checked against DuckDB. TareSuite pins the fit
+    // against a spark.ml LinearRegression reference (same predictions: the
+    // raw-count column space contains the intercept).
     Q("q26_kmer_calibration",
       (s, d) => {
         import s.implicits._
-        // the calibrator needs DNA-alphabet k-mers (the dinucleotide
-        // featurizer rejects anything else), so the corpus slice is mapped
-        // to a deterministic DNA sequence first: md5(text) hex → ACGT.
+        // the oracle mirrors the fit for DNA-alphabet k-mers (every context
+        // valid, an exact integer Gram), so the corpus slice is mapped to a
+        // deterministic DNA sequence first: md5(text) hex → ACGT.
         // k=4 over a 256-kmer space gives multiplicities big enough for the
         // log-count regression to have signal.
         val dna = Tables.documents(s, d).filter($"doc_id" < 200)
           .select(translate(md5($"text"),
             "0123456789abcdef", "ACGTACGTACGTACGT").as("sequence"))
         val kmers = Quantify.countKmers(dna, 4)
-        graft.calibrate.Tare.calibrateKmersExact(kmers, 4)
+        graft.calibrate.Tare.kmerBiasFit(kmers)
+          .select($"kmer", round($"calibrated", 6).as("cal_count"))
           .orderBy($"kmer")
       },
       Some(q26OracleSql)),

@@ -3,7 +3,8 @@ package graft.util
 /** Lightweight stage timers — the shim for the reference's bdg-utils
   * metrics inventory (rice-core/.../Timers.scala:25-63, SURVEY I7).
   * Spark's own SQL metrics/UI cover operator-level detail; this records
-  * driver-side stage wall times for parity of reporting.
+  * driver-side stage wall times for parity of reporting. Totals live for
+  * the JVM; `cli.Main` resets them when each command starts.
   */
 object Timers {
   private val totals = scala.collection.concurrent.TrieMap[String, Long]()

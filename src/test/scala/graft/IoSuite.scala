@@ -385,34 +385,53 @@ class IoSuite extends SparkSuite {
     check("ltz", base.select(timestamp_micros($"us").as("ts")))
   }
 
-  test("cli index + quantify end to end on the stub fixture") {
-    // the QuantifySuite stub genome laid out as chr1 (QuantifySuite.scala:31-37)
-    val fa = write("genome", ">chr1\nCAATCCTTCGCCGCAGTGCA\n")
-    val gtf = write("ann3",
+  /** `index` then `quantify` through the CLI on the QuantifySuite stub
+    * genome (QuantifySuite.scala:31-37) laid out as chr1, with reads drawn
+    * verbatim from its two transcripts.
+    * @return the output dir and the stage timers after each command */
+  private def cliIndexThenQuantify(tag: String)
+      : (String, Map[String, Double], Map[String, Double]) = {
+    val fa = write("genome_" + tag, ">chr1\nCAATCCTTCGCCGCAGTGCA\n")
+    val gtf = write("ann_" + tag,
       """chr1	t	exon	1	10	.	+	.	gene_id "g1"; transcript_id "transcript1";
         |chr1	t	exon	12	20	.	+	.	gene_id "g1"; transcript_id "transcript2";
         |""".stripMargin)
-    val out = Files.createTempDirectory("graft_cli").toString
+    val out = Files.createTempDirectory("graft_cli_" + tag).toString
     graft.cli.Main.main(Array("index", fa, gtf, "5", s"$out/idx"))
-    val kmers = spark.read.parquet(s"$out/idx_kmers")
-    assert(kmers.count() > 0)
-    assert(kmers.filter($"kmer" === "CAATC").count() === 1)
-
-    // reads drawn verbatim from the two transcripts
+    val afterIndex = graft.util.Timers.snapshot()
     Seq("CAATCCTTCG", "CGCAGTGCA", "CAATCCTTCG")
       .toDF("sequence").write.mode("overwrite").parquet(s"$out/reads")
     graft.cli.Main.main(Array("quantify", s"$out/reads", s"$out/idx", gtf, "5",
       s"$out/abundances", "-max_iterations", "5",
       "-disable_kmer_calibration", "-disable_length_calibration"))
+    (out, afterIndex, graft.util.Timers.snapshot())
+  }
+
+  test("cli index + quantify end to end on the stub fixture") {
+    val (out, afterIndex, afterQuantify) = cliIndexThenQuantify("e2e")
+    val kmers = spark.read.parquet(s"$out/idx_kmers")
+    assert(kmers.count() > 0)
+    assert(kmers.filter($"kmer" === "CAATC").count() === 1)
+
     val lines = spark.read.text(s"$out/abundances").collect().map(_.getString(0))
     assert(lines.length === 2)
     assert(lines.forall(_.contains(", ")))
 
-    // reporting parity: both commands accumulate (and print) stage timers
-    val snap = graft.util.Timers.snapshot()
-    for (stage <- Seq("loadGenome", "buildIndex", "writeIndex",
-        "countKmers", "writeAbundances"))
-      assert(snap.contains(stage), s"missing timer for $stage")
+    // reporting parity: both commands record (and print) stage timers
+    for (stage <- Seq("loadGenome", "buildIndex", "writeIndex"))
+      assert(afterIndex.contains(stage), s"missing timer for $stage")
+    for (stage <- Seq("countKmers", "writeAbundances"))
+      assert(afterQuantify.contains(stage), s"missing timer for $stage")
+  }
+
+  test("each cli command reports only its own stage timers") {
+    graft.util.Timers.time("leftover") { () }
+    val (_, afterIndex, afterQuantify) = cliIndexThenQuantify("timers")
+    assert(!afterIndex.contains("leftover"))
+    assert(afterIndex.contains("buildIndex"))
+    assert(!afterQuantify.contains("buildIndex"))
+    assert(!afterQuantify.contains("writeIndex"))
+    assert(afterQuantify.contains("em"))
   }
 
   test("-avro_compat index round-trips through the reference's avdl field names") {

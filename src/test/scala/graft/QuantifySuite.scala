@@ -237,6 +237,39 @@ class QuantifySuite extends SparkSuite {
     assert(fpEquals(ab("7"), 0.4, 0.05))
   }
 
+  test("calibrated quantify: an all-N read and scattered Ns leave the estimate defined") {
+    val tLen = Seq(1000, 600, 400, 550, 1275, 1400)
+    val (transcripts, names, kmerMap, classMap) =
+      TranscriptGenerator.generateIndependentTranscripts(20, tLen, Some(1234L))
+    // every fourth read has one to three bases masked to N
+    val rand = new scala.util.Random(99L)
+    val reads = ReadGenerator(transcripts, Seq(0.2, 0.1, 0.3, 0.2, 0.1, 0.1), 4000, 75,
+      Some(4321L)).zipWithIndex.map { case (r, i) =>
+        if (i % 4 != 0) r
+        else Read((0 to rand.nextInt(3)).foldLeft(r.sequence)((s, _) =>
+          s.updated(rand.nextInt(s.length), 'N')))
+      }
+    def run(rs: Seq[Read]) = runQuantify(transcripts, names, kmerMap, classMap, rs, 20, 20,
+      calibrate = true)
+    // the all-N read's one k-mer has no valid context: it is left out of the
+    // bias fit and matches no class, so the estimate is the same to the bit
+    // (appended last, the read moves no other read to another partition, so
+    // every sum runs in the same order)
+    val withAllN = run(reads :+ Read("N" * 75))
+    assert(withAllN.size === 6)
+    assertSimplex(withAllN.values)
+    assert(withAllN === run(reads))
+  }
+
+  test("calibrated quantify of an empty read set or reads shorter than k gives zero rows") {
+    val (_, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
+    for (reads <- Seq(Seq.empty[Read], Seq(Read("AC"), Read("G"), Read("")))) {
+      val out = Quantify(reads.toDS(), kmerToEc, ecToTx, txDs, emK, 5,
+        calibrateKmerBias = true, calibrateLengthBias = true)
+      assert(out.count() === 0, reads)
+    }
+  }
+
   // EM fixture for the specs below, k = 3. Classes 1-4 and 6 are counted,
   // 1-3 with several members; class 5 has no read k-mer, and "f", in no
   // other class, drops out; class 7 is counted but has no member (it still

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.regression.LinearRegression
+import org.apache.spark.sql.{DataFrame, functions}
 import org.apache.spark.sql.functions._
 import scala.math.{exp, log}
 import scala.util.Random
@@ -63,29 +66,89 @@ class TareSuite extends SparkSuite {
     assert(origMin < newMin)
   }
 
-  test("calibrateKmersExact matches the spark.ml fit's predictions") {
-    // all 256 DNA 4-mers with a GC-biased count — the explicit
-    // normal-equation solve (raw integer dinuc counts, no intercept) must
-    // reproduce spark.ml LinearRegression's predictions (normalized
-    // features + intercept): the two designs span the same column space,
-    // so the OLS projections coincide. calibrateKmers floors to Long;
-    // the exact variant keeps the 6-dp double, hence the <1.01 bound.
-    val bases = "ACGT"
-    val kmers4 = for (a <- bases; b <- bases; c <- bases; d <- bases)
-      yield s"$a$b$c$d"
-    val fixture = kmers4.map { s =>
-      val gc = s.count(ch => ch == 'C' || ch == 'G').toDouble / 4.0
-      (s, (100.0 * exp(2.0 + 1.0 * (gc - 0.5))).toLong)
-    }.toDF("kmer", "count")
-    val ml = Tare.calibrateKmers(fixture)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = Tare.calibrateKmersExact(fixture, 4)
+  /** Test-side reference for the k-mer bias fit: spark.ml
+    * LinearRegression of ln(count) on the normalized dinucleotide histogram
+    * (Kmers.dinucFeatures) plus an intercept, its residual rescaled to the
+    * sample mean — the reference's design (Tare.scala:110-136).
+    * @return kmer → calibrated abundance */
+  private def mlReference(kmers: DataFrame): Map[String, Double] = {
+    val f = kmers
+      .withColumn("label", functions.log($"count".cast("double")))
+      .withColumn("features", array_to_vector(Kmers.dinucFeatures($"kmer")))
+    val mean = math.log(f.agg(avg($"count")).head().getDouble(0))
+    new LinearRegression().setFitIntercept(true).fit(f).transform(f)
+      .select($"kmer", functions.exp(lit(mean) + $"label" - $"prediction"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(exact.size === 256)
-    exact.foreach { case (k, v) =>
-      assert(math.abs(v - ml(k)) < 1.01,
-        s"$k: exact=$v vs ml-floored=${ml(k)}")
+  }
+
+  private def dna(n: Int, rand: Random): String =
+    Seq.fill(n)("ACGT"(rand.nextInt(4))).mkString
+
+  /** GC-biased counts, as the reference's biased-k-mer fixture draws them. */
+  private def gcBiased(kmers: Seq[String]): DataFrame = kmers.map { s =>
+    val gc = s.count(ch => "CGcg".contains(ch)).toDouble / s.length
+    (s, (100.0 * exp(2.0 + 1.0 * (gc - 0.5))).toLong)
+  }.toDF("kmer", "count")
+
+  /** The fit against [[mlReference]] on `kmers`: the calibrated abundance
+    * to 1e-6 relative, and calibrateKmers' Long within 1.01 of it. */
+  private def assertMatchesReference(kmers: DataFrame): Unit = {
+    val ref = mlReference(kmers)
+    val fit = Tare.kmerBiasFit(kmers).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    val floored = Tare.calibrateKmers(kmers).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(fit.keySet === ref.keySet)
+    assert(floored.keySet === ref.keySet)
+    ref.foreach { case (k, v) =>
+      assert(math.abs(fit(k) - v) <= 1e-6 * v, s"$k: fit=${fit(k)} vs ml=$v")
+      assert(math.abs(floored(k) - v) < 1.01, s"$k: floored=${floored(k)} vs ml=$v")
     }
+  }
+
+  test("the k-mer bias fit matches the spark.ml reference on all 256 4-mers") {
+    // the no-intercept fit on raw integer dinucleotide counts and spark.ml's
+    // fit-with-intercept on the normalized histogram span the same column
+    // space, so their OLS projections coincide
+    val bases = "ACGT"
+    assertMatchesReference(gcBiased(
+      for (a <- bases; b <- bases; c <- bases; d <- bases) yield s"$a$b$c$d"))
+  }
+
+  test("k = 20 k-mers with N bases: N-scaled counts keep the reference's fit") {
+    // k-mers of a random sequence, every fifth with one to three bases
+    // masked to N (upper or lower case), some of them in lower case
+    val rand = new Random(20200L)
+    val kmers = dna(600, rand).sliding(20).zipWithIndex.map { case (s, i) =>
+      if (i % 5 != 0) s
+      else (1 to 1 + rand.nextInt(3)).foldLeft(s) { (m, _) =>
+        m.updated(rand.nextInt(20), if (rand.nextBoolean()) 'N' else 'n')
+      }
+    }.map(s => if (s.hashCode % 7 == 0) s.toLowerCase else s).toSeq.distinct
+    assert(kmers.exists(_.exists("Nn".contains(_))))
+    val fixture = gcBiased(kmers)
+    assertMatchesReference(fixture)
+    // a k-mer with no valid context stays out of the fit and of the mean
+    // (the reference rejects it) and keeps its raw count
+    val noContext = Seq(("N" * 20, 17L), ("ANNNNNNNNNNNNNNNNNNA", 4L)).toDF("kmer", "count")
+    val withNoContext = Tare.kmerBiasFit(fixture.union(noContext)).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    val fit = Tare.kmerBiasFit(fixture).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    assert(withNoContext("N" * 20) === 17.0)
+    assert(withNoContext("ANNNNNNNNNNNNNNNNNNA") === 4.0)
+    assert(withNoContext.size === fit.size + 2)
+    // N-scaled rows make the sums inexact, so summation order may move ulps
+    fit.foreach { case (k, v) => assert(math.abs(withNoContext(k) - v) <= 1e-12 * v, k) }
+  }
+
+  test("a rank-deficient design keeps the reference's fit") {
+    // only the AC, CA, AG and GA contexts occur: 12 of the 16 columns are
+    // zero and the rest are collinear with the constant
+    val kmers = Seq("ACACACAC", "CACACACA", "AGAGAGAG", "GAGAGAGA", "ACAGACAG",
+      "CAGACAGA", "AGACAGAC", "GACAGACA")
+    assertMatchesReference(
+      kmers.zipWithIndex.map { case (k, i) => (k, 10L + 7L * i) }.toDF("kmer", "count"))
   }
 
   test("calibrateTxLenBias for 4 hand-picked values") { // TareSuite.scala:96-118
