@@ -14,9 +14,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BAM as a SPLITTABLE DataSource V2 connector —
-  * `spark.read.format("graft.bam").load(path)`. Unlike FASTQ (whole-file
-  * partitions), BAM's BGZF container lets the planner slice one file into
-  * many byte-range `InputPartition`s: each task seeks to its compressed
+  * `spark.read.format("graft.bam").load(path)`. Where FASTQ's byte ranges
+  * find their records at line boundaries, BAM's BGZF container lets the
+  * planner slice one compressed file into many byte-range
+  * `InputPartition`s: each task seeks to its compressed
   * offset, finds the first BGZF block it owns, and decodes only records
   * starting in its range (the same split protocol `Bam.reads` has always
   * used — the connector re-plates that chunking as connector-API

@@ -9,9 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Reads go through the DataSource V2 connector (`FastqSource`,
   * `format("graft.fastq")`): the narrow `.select("sequence")` pushes column
   * pruning into the reader, so name/quality lines are skipped, not
-  * materialized — the same contract as a parquet scan. (An earlier
-  * implementation used `textFile().zipWithIndex` to recover record framing;
-  * the connector owns framing per file and needs no extra counting job.)
+  * materialized — the same contract as a parquet scan. The connector splits
+  * an uncompressed file into byte ranges, one task each, so k-mer counting
+  * over one large FASTQ runs on every core with no shuffle of the reads;
+  * each range finds its own record framing and needs no extra counting job.
+  * Malformed records fail with the file and byte offset.
   */
 object Fastq {
 

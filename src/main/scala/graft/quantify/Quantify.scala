@@ -255,7 +255,8 @@ object Quantify {
     * @param transcripts transcript descriptors (for lengths + final join)
     * @return DataFrame(tid, names, geneId, strand, exons, abundance) — the
     *   full transcript descriptor plus abundance (Σ abundance = 1), as the
-    *   reference's RDD[(Transcript, Double)]
+    *   reference's RDD[(Transcript, Double)]; no rows, with a warning, when
+    *   no read k-mer matches the index
     */
   def apply(
       reads: Dataset[Read],
@@ -289,6 +290,10 @@ object Quantify {
     // The collect is the first action, so `em` also times the lazy stages above.
     val muHat = Timers.time("em") {
       val edges = collectEdges(ecCounts, ecToTx, tLen, kmerLength)
+      if (edges.classCount.isEmpty)
+        log.warn(s"no read $kmerLength-mer matches the index: the read set is " +
+          s"empty, every read is shorter than k = $kmerLength, or the index was " +
+          "built with another k; the result has no rows")
       if (edges.clamped > 0)
         log.warn(s"${edges.clamped} transcript(s) have len - k + 1 < 1; " +
           "their effective length is floored at 1")

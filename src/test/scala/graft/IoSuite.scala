@@ -92,6 +92,21 @@ class IoSuite extends SparkSuite {
   }
 
   test("FASTQ reader extracts sequence lines, loader dispatches by extension") {
+    fastqLoaderChecks()
+  }
+
+  test("FASTQ DSv2 connector: full schema, pruned scan, gz, multi-file dir") {
+    fastqConnectorChecks()
+  }
+
+  test("FASTQ specs hold when every file is split into 5-byte ranges") {
+    withSplitBytes(5) {
+      fastqLoaderChecks()
+      fastqConnectorChecks()
+    }
+  }
+
+  private def fastqLoaderChecks(): Unit = {
     val fq = Files.createTempFile("graft_reads", ".fastq")
     Files.writeString(fq,
       "@r1\nCAATCCTTCG\n+\nIIIIIIIIII\n@r2\nGCAGTGCA\n+\nIIIIIIII\n")
@@ -100,7 +115,7 @@ class IoSuite extends SparkSuite {
     assert(seqs.toSeq === Seq("CAATCCTTCG", "GCAGTGCA"))
   }
 
-  test("FASTQ DSv2 connector: full schema, pruned scan, gz, multi-file dir") {
+  private def fastqConnectorChecks(): Unit = {
     val dir = Files.createTempDirectory("graft_fq_dir")
     Files.writeString(dir.resolve("a.fastq"),
       "@r1\nCAATCCTTCG\n+\nIIIIIIIIII\n@r2\nGCAGTGCA\n+\n@IIIIIII\n")
@@ -124,6 +139,66 @@ class IoSuite extends SparkSuite {
       s"pruned scan should read only `sequence`:\n$scan")
     assert(pruned.collect().map(_.getString(0)).sorted.toSeq ===
       Seq("CAATCCTTCG", "GCAGTGCA", "TTTT"))
+  }
+
+  /** The FASTQ connector's (name, sequence, quality) rows for `content`. */
+  private def fastqRows(content: String): Seq[(String, String, String)] = {
+    val fq = Files.createTempFile("graft_reads", ".fastq")
+    Files.writeString(fq, content)
+    spark.read.format("graft.fastq").load(fq.toString).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+  }
+
+  /** The IOException that reading `content` as FASTQ fails with. */
+  private def fastqFailure(content: String): java.io.IOException = {
+    val fq = Files.createTempFile("graft_bad", ".fastq")
+    Files.writeString(fq, content)
+    val e = intercept[Exception] {
+      spark.read.format("graft.fastq").load(fq.toString).collect()
+    }
+    val io = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: java.io.IOException => x }
+    assert(io.isDefined, s"no IOException in the cause chain of $e")
+    assert(io.get.getMessage.contains(fq.getFileName.toString), io.get.getMessage)
+    io.get
+  }
+
+  private val goodRecord = "@r1\nACGT\n+\nIIII\n" // 16 bytes
+
+  test("FASTQ: blank lines after the last record are ignored; an empty file has no rows") {
+    for (split <- Seq(128L << 20, 3L)) withSplitBytes(split) {
+      assert(fastqRows(goodRecord + "\n") === Seq(("r1", "ACGT", "IIII")), split)
+      assert(fastqRows(goodRecord + "\r\n\n\n\n\n") === Seq(("r1", "ACGT", "IIII")), split)
+      assert(fastqRows("") === Nil, split)
+    }
+  }
+
+  test("FASTQ: a record without '@' or '+', or with a short quality line, fails at its offset") {
+    // a multi-line FASTA named .fastq
+    assert(fastqFailure(">chr1\nACGT\nACGT\n>chr2\nGG\nTT\n").getMessage
+      .contains("at byte 0"))
+    assert(fastqFailure(goodRecord + "r2\nACGT\n+\nIIII\n").getMessage
+      .contains("at byte 16"))
+    assert(fastqFailure(goodRecord + "@r2\nACGT\n-\nIIII\n").getMessage
+      .contains("at byte 16"))
+    assert(fastqFailure(goodRecord + "@r2\nACGT\n+\nIII\n" + goodRecord).getMessage
+      .contains("at byte 16"))
+    // offsets count the CR of CRLF line ends
+    assert(fastqFailure((goodRecord + "@r2\nACGT\n+\nIII\n").replace("\n", "\r\n"))
+      .getMessage.contains("at byte 20"))
+    // under any split the file still fails, and the error names the file
+    for (split <- 1L to 20L) withSplitBytes(split) {
+      fastqFailure(">chr1\nACGT\nACGT\n>chr2\nGG\nTT\n")
+      fastqFailure(goodRecord * 3 + "@r2\nACGT\n+\nIII\n" + goodRecord * 3)
+    }
+  }
+
+  test("FASTQ: a truncated final record fails, also in the last of several ranges") {
+    val content = goodRecord * 4 + "@r5\nACGT\n+\n"
+    assert(fastqFailure(content).getMessage.contains("truncated FASTQ record starting at byte 64"))
+    for (split <- 1L to 24L) withSplitBytes(split) {
+      assert(fastqFailure(content).getMessage.contains("truncated"), split)
+    }
   }
 
   test("SAM reader extracts SEQ column, loader dispatches .sam") {

@@ -6,13 +6,14 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * expressions/operators — the invariants that must hold on EVERY input,
   * not just the corpus: Morton-interleave bit placement and invertibility,
   * the band-join bin-cover lemma RangeBinJoin's correctness rests on,
-  * top-k merge associativity under arbitrary splits, and the WAV header
-  * round trip over the full parameter space. */
+  * top-k merge associativity under arbitrary splits, the WAV header
+  * round trip over the full parameter space, and the FASTQ connector's
+  * byte-range splits. */
 class PropertySuite extends SparkSuite {
 
-  private def check(name: String, p: Prop): Unit = {
+  private def check(name: String, p: Prop, cases: Int = 500): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(500), p)
+      SCTest.Parameters.default.withMinSuccessfulTests(cases), p)
     assert(res.passed, s"$name: ${res.status}")
   }
 
@@ -93,5 +94,42 @@ class PropertySuite extends SparkSuite {
       f.sample_rate == rate && f.channels == ch && f.bits == bits &&
         f.n_samples == n.toLong && f.duration_ms == n.toLong * 1000 / rate
     })
+  }
+
+  test("FASTQ byte-range splits read every record once, in file order") {
+    val text = Gen.listOf(Gen.choose(' ', '~')).map(_.mkString)
+    val record = for {
+      name <- Gen.oneOf(text, text.map("@" + _))
+      seq <- Gen.listOf(Gen.oneOf('A', 'C', 'G', 'T', 'N')).map(_.mkString)
+      qual <- Gen.listOfN(seq.length, Gen.choose('!', '~')).map(_.mkString)
+      lead <- Gen.oneOf("", "@", "+")
+      plus <- Gen.oneOf("+", "+" + name)
+    } yield (name, seq, if (qual.isEmpty || lead.isEmpty) qual else lead + qual.tail, plus)
+    val file = Gen.zip(Gen.choose(1, 12).flatMap(Gen.listOfN(_, record)),
+      Gen.oneOf("\n", "\r\n"), Gen.oneOf(true, false))
+    // no shrinking: a shrunk String need not be a line ending or a FASTQ line
+    check("splits", Prop.forAllNoShrink(file, Gen.choose(1, 40)) {
+        case ((records, eol, finalEol), small) =>
+      // a last record with an empty quality line needs its terminator, or
+      // the file would end in a truncated record
+      val content = records.flatMap { case (n, s, q, p) => Seq("@" + n, s, p, q) }
+        .mkString(eol) + (if (finalEol || records.last._2.isEmpty) eol else "")
+      val fq = java.nio.file.Files.createTempFile("graft_split", ".fastq")
+      java.nio.file.Files.writeString(fq, content)
+      val len = content.length.toLong
+      def read(split: Long) = withSplitBytes(split) {
+        val df = spark.read.format("graft.fastq").load(fq.toString)
+        (df.rdd.getNumPartitions,
+          df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq)
+      }
+      val (one, whole) = read(len)
+      val expected = records.map { case (n, s, q, _) => (n, s, q) }
+      val splits = Seq(small.toLong, len / 3 + 1, len - 1).filter(_ > 0).map { split =>
+        val (parts, rows) = read(split)
+        parts == (len + split - 1) / split && (split >= len || parts > 1) && rows == whole
+      }
+      java.nio.file.Files.delete(fq)
+      one == 1 && whole == expected && splits.forall(identity)
+    }, cases = 60)
   }
 }

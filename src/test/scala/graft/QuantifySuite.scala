@@ -350,6 +350,47 @@ class QuantifySuite extends SparkSuite {
     assert(none.toSeq === Seq(0.5, 0.5))
   }
 
+  test("uncalibrated quantify: no read k-mer in the index gives zero rows and a warning") {
+    val (reads, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
+    def run(rs: Seq[Read], k: Int): (Long, Seq[String]) = {
+      var rows = -1L
+      val warned = quantifyWarnings {
+        rows = Quantify(rs.toDS(), kmerToEc, ecToTx, txDs, k, 5,
+          calibrateKmerBias = false, calibrateLengthBias = false).count()
+      }
+      (rows, warned.filter(_.contains("matches the index")))
+    }
+    // an empty read set, reads shorter than k, and a k the index was not built with
+    for ((rs, k) <- Seq((Seq.empty[Read], emK), (Seq(Read("AC"), Read("G"), Read("")), emK),
+        (emReads.map(Read(_)), emK + 1))) {
+      val (rows, warned) = run(rs, k)
+      assert(rows === 0, (rs, k))
+      assert(warned.size === 1, (rs, k))
+    }
+    val (rows, warned) = run(emReads.map(Read(_)), emK)
+    assert(rows === 4)
+    assert(warned.isEmpty)
+  }
+
+  /** Messages that Quantify logs while `body` runs. */
+  private def quantifyWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(Quantify.getClass.getName).asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("quantify-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   test("Quantify.apply's Spark job count does not depend on the iteration count") {
     val (reads, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
     val jobs = Seq(1, 50).map { n =>

@@ -18,6 +18,21 @@ trait SparkSuite extends AnyFunSuite {
     passed
   }
 
+  /** Runs `body` with `spark.sql.files.maxPartitionBytes` set to `bytes`,
+    * which sizes the byte ranges of a file scan, and restores the previous
+    * value after: every suite shares one session, so a leaked split size
+    * would change other suites' scans. */
+  def withSplitBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** equalDouble from QuantifySuite.scala:318-320. */
   def equalDouble(a: Double, b: Double): Boolean = math.abs(a - b) < 1e-3
 }
