@@ -1,5 +1,6 @@
 package graft.calibrate
 
+import java.util.Locale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * solved on the driver:
   *  - k-mer GC/sequence-context bias: regress log(count) on the k-mer's 16
   *    dinucleotide-context counts, keep the residual (Tare.scala:110-136).
-  *    One aggregate scan gives the 16×16 Gram; the reference's distributed
-  *    SGD is not needed for a 16-column design.
+  *    One typed pass over the k-mers gives the 16×16 Gram; the
+  *    reference's distributed SGD is not needed for a 16-column design.
   *  - transcript length bias: driver-side OLS of log(µ̂) on log(len) over a
   *    collected sample — deliberately NOT distributed; the reference found
   *    MLlib SGD does not converge for 1-D features (Tare.scala:156-177 and
@@ -39,82 +40,117 @@ object Tare {
     * over the n fitted k-mers (the reference's two accumulators,
     * Tare.scala:112-117).
     *
-    * Design: x_b counts the k-mer's positions whose context is dinucleotide
-    * b ([[dinucs]] order, case-insensitive), read off the string with
-    * `replace` length deltas (`regexp_replace("x(?=x)")` for the
-    * overlapping xx) — no higher-order functions. A k-mer whose k−1
-    * contexts are all valid keeps these integer counts; one with some
-    * non-ACGT base has them scaled by (k−1)/n_valid. Every row then sums to
-    * k−1, so for k-mers of one length the constant lies in the column space
-    * and the no-intercept fit predicts exactly what the reference's
-    * fit-with-intercept on the normalized histogram (Kmers.dinucFeatures)
-    * predicts, without the collinearity an intercept column would add. A
-    * k-mer with no valid context (the reference asserts, Tare.scala:91) is
-    * left out of the fit and of the mean, keeps its raw count, and is
-    * counted in a warning.
+    * Design: one typed pass, no generated columns. A Scala featurizer
+    * ([[contexts]]) reads x_b, the number of the k-mer's positions whose
+    * context is dinucleotide b ([[dinucs]] order, case-insensitive). A
+    * k-mer whose k−1 contexts are all valid keeps these integer counts; one
+    * with some non-ACGT base has them scaled by (k−1)/n_valid. Every row
+    * then sums to k−1, so for k-mers of one length the constant lies in the
+    * column space and the no-intercept fit predicts exactly what the
+    * reference's fit-with-intercept on the normalized histogram
+    * (Kmers.dinucFeatures) predicts, without the collinearity an intercept
+    * column would add. A k-mer with no valid context (the reference
+    * asserts, Tare.scala:91) is left out of the fit and of the mean, keeps
+    * its raw count, and is counted in a warning.
     *
-    * Solve: one aggregate scan gives the Gram XᵀX, Xᵀy with y = ln(count)
-    * floor-quantized per row to ×1e6 integers, Σ count and n. For an
-    * integer design every sum is then an exact integer below 2^53
-    * (addition-order independent); the driver runs a no-pivot Gaussian
-    * elimination whose operation tree [[exactSolveSql]] mirrors term for
-    * term, so q26 hash-matches a DuckDB oracle. A pivot that vanishes
-    * against its column's diagonal marks a column in the span of the
-    * earlier ones (a rank-deficient design, e.g. a dinucleotide no k-mer
-    * holds): its weight is 0, which leaves the projection unchanged. With
-    * no fitted k-mer (empty input) there is no solve.
+    * Solve: one `mapPartitions` pass emits a partial per partition (the
+    * Gram XᵀX, Xᵀy with y = ln(count) floor-quantized per row to ×1e6
+    * integers, Σ count, n); only these partials reach the driver, never the
+    * k-mers. For an integer design every sum is then an exact integer below
+    * 2^53 (addition-order independent, so the partitioning cannot move the
+    * fit); the driver runs a no-pivot Gaussian elimination whose operation
+    * tree [[exactSolveSql]] mirrors term for term, so q26 hash-matches a
+    * DuckDB oracle. A pivot that vanishes against its column's diagonal
+    * marks a column in the span of the earlier ones (a rank-deficient
+    * design, e.g. a dinucleotide no k-mer holds): its weight is 0, which
+    * leaves the projection unchanged. With no fitted k-mer (empty input)
+    * there is no solve.
+    *
+    * Output: one Scala UDF over (kmer, count) that closes over w and the
+    * mean. Its ln and exp are `StrictMath`'s, the functions Spark's `log`
+    * and `exp` call, and x·w is summed in ascending order, so the result
+    * is bit-identical to the same formula written as SQL columns.
     *
     * @param kmers DataFrame(kmer, count)
     * @return DataFrame(kmer, count, calibrated double)
     */
   def kmerBiasFit(kmers: DataFrame): DataFrame = {
+    import kmers.sparkSession.implicits._
     val d = 16
-    val u = upper(col("kmer"))
-    val contexts = dinucs.map { dn =>
-      if (dn(0) == dn(1))
-        length(u) - length(regexp_replace(u, s"${dn(0)}(?=${dn(0)})", ""))
-      else (length(u) - length(replace(u, lit(dn), lit("")))) / 2
-    }
-    // the counts are columns of their own so that the scaling below reads
-    // them instead of repeating 16 string scans per use
-    val c = kmers.select((col("kmer") :: col("count") ::
-      contexts.zipWithIndex.map { case (e, b) => e.as(s"c$b") }.toList): _*)
-    val nValid = (0 until d).map(b => col(s"c$b")).reduce(_ + _)
-    val k1 = length(col("kmer")) - 1
-    val scale = when(nValid === k1, 1.0).when(nValid > 0, k1 / nValid).otherwise(0.0)
-    val x = c.select((col("kmer") :: col("count") :: (nValid > 0).as("valid") ::
-      (0 until d).map(b => (col(s"c$b") * scale).as(s"x$b")).toList): _*)
-
-    val valid = col("valid")
-    // ln(count) quantized per row to a ×1e6 integer (floor — unambiguous
-    // across engines)
-    val y = floor(log(col("count").cast("double")) * 1e6)
-    val aggs =
-      (for { i <- 0 until d; j <- i until d }
-        yield sum(col(s"x$i") * col(s"x$j")).as(s"a${i}_$j")) ++
-      (0 until d).map(i => (sum(col(s"x$i") * y) / 1e6).as(s"b$i")) ++
-      Seq(sum(when(valid, col("count"))).as("total"),
-        count(when(valid, 1)).as("n"), count(when(!valid, 1)).as("skipped"))
-    val row = x.agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getAs[Long]("n")
-    val skipped = row.getAs[Long]("skipped")
+    val nGram = d * (d + 1) / 2
+    // per partition: the upper triangle of XᵀX then Xᵀy, row by row in scan
+    // order, with Σ count, n and skipped; the driver adds the partials in
+    // partition order
+    val partials = kmers.select(col("kmer"), col("count").cast("long"))
+      .as[(String, Long)]
+      .mapPartitions { rows =>
+        val s = new Array[Double](nGram + d)
+        var total, n, skipped = 0L
+        rows.foreach { case (kmer, count) =>
+          contexts(kmer) match {
+            case None => skipped += 1
+            case Some(x) =>
+              // ln(count) quantized to a ×1e6 integer (floor — unambiguous
+              // across engines)
+              val y = StrictMath.floor(StrictMath.log(count.toDouble) * 1e6)
+              var t = 0
+              for (i <- 0 until d; j <- i until d) { s(t) += x(i) * x(j); t += 1 }
+              for (i <- 0 until d) s(nGram + i) += x(i) * y
+              total += count
+              n += 1
+          }
+        }
+        Iterator((s, total, n, skipped))
+      }.collect()
+    val sums = new Array[Double](nGram + d)
+    for ((s, _, _, _) <- partials; t <- sums.indices) sums(t) += s(t)
+    val total = partials.map(_._2).sum
+    val n = partials.map(_._3).sum
+    val skipped = partials.map(_._4).sum
     if (skipped > 0)
       logger.warn(s"$skipped k-mer(s) have no valid dinucleotide context; " +
         "they pass through bias calibration with their raw counts")
 
-    val passThrough = col("count").cast("double")
-    val calibrated =
-      if (n == 0) passThrough
+    // with no fitted k-mer every row passes through, so there is no solve
+    val (w, mean) =
+      if (n == 0) (new Array[Double](d), 0.0)
       else {
-        val a = Array.tabulate(d, d)((i, j) =>
-          if (j >= i) row.getAs[Double](s"a${i}_$j") else 0.0)
-        val w = solve(a, Array.tabulate(d)(i => row.getAs[Double](s"b$i")))
-        val mean = math.log(row.getAs[Long]("total").toDouble / n)
-        val pred = (0 until d).map(i => lit(w(i)) * col(s"x$i")).reduce(_ + _)
-        when(valid, exp(lit(mean) + log(col("count").cast("double")) - pred))
-          .otherwise(passThrough)
+        val a = Array.ofDim[Double](d, d)
+        var t = 0
+        for (i <- 0 until d; j <- i until d) { a(i)(j) = sums(t); t += 1 }
+        (solve(a, Array.tabulate(d)(i => sums(nGram + i) / 1e6)),
+          math.log(total.toDouble / n))
       }
-    x.select(col("kmer"), col("count"), calibrated.as("calibrated"))
+    val calibrate = udf { (kmer: String, count: Long) =>
+      contexts(kmer).fold(count.toDouble) { x =>
+        var pred = w(0) * x(0)
+        for (i <- 1 until d) pred += w(i) * x(i)
+        StrictMath.exp(mean + StrictMath.log(count.toDouble) - pred)
+      }
+    }
+    kmers.select(col("kmer"), col("count"),
+      calibrate(col("kmer"), col("count").cast("long")).as("calibrated"))
+  }
+
+  /** The k-mer's 16 dinucleotide-context counts, x_b = the number of
+    * adjacent base pairs equal to dinucleotide b ([[dinucs]] order,
+    * case-insensitive). If some of the k−1 contexts hold a non-ACGT base the
+    * counts are scaled by (k−1)/n_valid; None when no context is valid. */
+  private def contexts(kmer: String): Option[Array[Double]] = {
+    val u = kmer.toUpperCase(Locale.ROOT)
+    val x = new Array[Double](16)
+    var nValid = 0
+    for (p <- 0 until u.length - 1) {
+      val i = "ACGT".indexOf(u(p).toInt)
+      val j = "ACGT".indexOf(u(p + 1).toInt)
+      if (i >= 0 && j >= 0) { x(4 * i + j) += 1; nValid += 1 }
+    }
+    if (nValid == 0) None
+    else {
+      val scale = (kmer.length - 1).toDouble / nValid // 1.0 when all are valid
+      for (b <- x.indices) x(b) *= scale
+      Some(x)
+    }
   }
 
   /** Solve the symmetric system (upper triangle of `a`, right-hand side
@@ -198,7 +234,13 @@ object Tare {
     *
     * then renormalized to Σ = 1 (Tare.scala:189-192).
     *
-    * @param muHat DataFrame(tid, muHat) — all abundances must be > 0
+    * The line is fitted on the µ̂ > 0 only (log 0 would make every sum, and
+    * so every output, NaN), and a µ̂ of 0 stays 0. A fit with fewer than two
+    * positive µ̂, or with all their lengths equal, has no slope
+    * (n·sxx − sx² = 0): it logs a warning and µ̂ passes through uncalibrated,
+    * apart from the renormalization.
+    *
+    * @param muHat DataFrame(tid, muHat) — abundances ≥ 0
     * @param tLen  DataFrame(tid, len)
     * @return DataFrame(tid, muHat) calibrated
     */
@@ -209,21 +251,29 @@ object Tare {
       .select(col("muHat"), col("len").cast("double"))
       .sample(withReplacement = false, samplingRate)
       .collect()
+      .filter(_.getDouble(0) > 0)
       .map(r => (math.log(r.getDouble(0)), math.log(r.getDouble(1))))
 
-    val n = local.length.toDouble
-    val mean = -math.log(n)
-    val sx = local.map(_._2).sum
-    val sy = local.map(_._1).sum
-    val sxx = local.map(p => p._2 * p._2).sum
-    val sxy = local.map(p => p._1 * p._2).sum
-    // closed-form normal equations for y = slope·x + intercept (the
-    // reference solves the same 2×2 system with jblas, Tare.scala:168-176)
-    val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    val intercept = (sy - slope * sx) / n
-
-    val cal = muHat.withColumn("cal",
-      exp(lit(mean) + (lit(slope) * col("muHat") + lit(intercept)) - col("muHat")))
+    val calibrated =
+      if (local.length < 2 || local.forall(_._2 == local.head._2)) {
+        logger.warn(s"length-bias fit is degenerate (${local.length} positive " +
+          "abundance(s), distinct lengths needed); abundances are not length-calibrated")
+        col("muHat")
+      } else {
+        val n = local.length.toDouble
+        val mean = -math.log(n)
+        val sx = local.map(_._2).sum
+        val sy = local.map(_._1).sum
+        val sxx = local.map(p => p._2 * p._2).sum
+        val sxy = local.map(p => p._1 * p._2).sum
+        // closed-form normal equations for y = slope·x + intercept (the
+        // reference solves the same 2×2 system with jblas, Tare.scala:168-176)
+        val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+        val intercept = (sy - slope * sx) / n
+        when(col("muHat") > 0, exp(lit(mean) +
+          (lit(slope) * col("muHat") + lit(intercept)) - col("muHat"))).otherwise(0.0)
+      }
+    val cal = muHat.withColumn("cal", calibrated)
     // Σ=1 renormalization (Tare.scala:189-192) via broadcast scalar agg
     cal.crossJoin(broadcast(cal.agg(sum("cal").as("totalCal"))))
       .select(col("tid"), (col("cal") / col("totalCal")).as("muHat"))

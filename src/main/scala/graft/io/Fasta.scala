@@ -1,5 +1,6 @@
 package graft.io
 
+import java.util.Locale
 import scala.io.Source
 
 /** Minimal FASTA reference-sequence source, standing in for the reference's
@@ -13,7 +14,9 @@ import scala.io.Source
   */
 object Fasta {
 
-  /** name → full sequence, concatenating wrapped lines. */
+  /** name → full sequence, concatenating wrapped lines. Bases are
+    * upper-cased, so a soft-masked (lower-case) block indexes like the rest
+    * of its sequence and like the same genome read from .2bit. */
   def read(path: String): Map[String, String] = {
     val src = Source.fromFile(path)
     try {
@@ -24,7 +27,7 @@ object Fasta {
           val name = line.drop(1).trim.split("\\s+").head
           current = new StringBuilder
           out(name) = current
-        } else if (current != null) current.append(line.trim)
+        } else if (current != null) current.append(line.trim.toUpperCase(Locale.ROOT))
       }
       out.map { case (k, v) => (k, v.toString) }.toMap
     } finally src.close()

@@ -10,9 +10,11 @@ import java.nio.file.{Files, Paths}
   * reference's TwoBitFile the whole genome is decoded at the DRIVER and
   * broadcast, and random-access extraction is a per-task substring.
   *
-  * Soft-mask blocks are decoded as upper-case (the k-mer index is
-  * case-insensitive either way); N blocks are materialized as 'N' so illegal
-  * k-mers are filtered exactly as with the FASTA path (SURVEY P2).
+  * Soft-mask blocks are decoded as upper-case, as [[Fasta.read]] upper-cases
+  * a soft-masked FASTA: k-mer matching is case-sensitive, so both readers
+  * fold case to give one genome the same index; N blocks are materialized
+  * as 'N' so illegal k-mers are filtered exactly as with the FASTA path
+  * (SURVEY P2).
   */
 object TwoBit {
   private val Signature = 0x1A412743

@@ -49,8 +49,8 @@ object Kmers {
     * via `raise_error` to keep the same fail-fast contract.
     *
     * This is the reference's featurizer form, not the one the bias fit
-    * runs on: `Tare.kmerBiasFit` reads the same contexts off the string
-    * without higher-order functions, in a design with the same column
+    * runs on: `Tare.kmerBiasFit` counts the same contexts with a plain Scala
+    * featurizer inside one typed pass, in a design with the same column
     * space as this histogram plus an intercept.
     */
   def dinucFeatures(kmer: Column): Column = {

@@ -317,12 +317,14 @@ object GenomicsQueries {
     // Tare.scala:110-136): regress log(count) on the 16-dim
     // dinucleotide-context features, keep the residual, rescale to the
     // mean. Runs through Tare.kmerBiasFit, the fit Quantify calibrates
-    // with (exact integer Gram + integer ×1e6-quantized Xᵀy, driver-side
-    // no-pivot elimination mirrored term-for-term by Tare.exactSolveSql),
-    // and projects its calibrated abundance to 6 dp — so the FULL
+    // with (one typed pass for the exact integer Gram + integer
+    // ×1e6-quantized Xᵀy, driver-side no-pivot elimination mirrored
+    // term-for-term by Tare.exactSolveSql, a StrictMath UDF for the
+    // output), and projects its calibrated abundance to 6 dp — so the FULL
     // 16-feature OLS is hash-checked against DuckDB. TareSuite pins the fit
     // against a spark.ml LinearRegression reference (same predictions: the
-    // raw-count column space contains the intercept).
+    // raw-count column space contains the intercept) and against
+    // exactSolveSql run by Spark SQL.
     Q("q26_kmer_calibration",
       (s, d) => {
         import s.implicits._

@@ -89,6 +89,11 @@ class IoSuite extends SparkSuite {
 
     val genome = graft.io.Genome.read(path.toString)
     assert(genome === Map("chr1" -> "CAATCCTTCGNNNGCAG", "chr2" -> "GCAGTGCA"))
+
+    // the same soft-masked genome as FASTA: the masked block is lower case
+    // there, and both readers must give the same map (hence the same index)
+    val fa = write("ref_masked", ">chr1\ncaatCCTTCG\nNNNGCAG\n>chr2\nGCAGTGCA\n")
+    assert(graft.io.Genome.read(fa) === genome)
   }
 
   test("FASTQ reader extracts sequence lines, loader dispatches by extension") {

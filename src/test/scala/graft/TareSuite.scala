@@ -151,6 +151,67 @@ class TareSuite extends SparkSuite {
       kmers.zipWithIndex.map { case (k, i) => (k, 10L + 7L * i) }.toDF("kmer", "count"))
   }
 
+  /** Counted k-mers of a seeded random DNA string. */
+  private def dnaKmerCounts(n: Int, k: Int, seed: Long): Seq[(String, Long)] =
+    dna(n, new Random(seed)).sliding(k).toSeq.groupBy(identity)
+      .map { case (s, hits) => (s, hits.size.toLong) }.toSeq.sortBy(_._1)
+
+  test("the k-mer bias fit equals exactSolveSql run by Spark SQL, row for row") {
+    // q26's oracle shape: f(kmer, cnt, c0..c15) with integer context counts
+    val counts = dnaKmerCounts(3000, 4, 2626L)
+    val f = counts.map { case (s, cnt) =>
+      val c = Array.fill(16)(0L)
+      s.sliding(2).foreach(p => c(Tare.dinucs.indexOf(p)) += 1)
+      (s, cnt, c.toSeq)
+    }.toDF("kmer", "cnt", "c")
+      .select(($"kmer" +: $"cnt" +: (0 until 16).map(b => $"c"(b).as(s"c$b"))): _*)
+    f.createOrReplaceTempView("f")
+    try {
+      val sql = spark.sql("WITH " + Tare.exactSolveSql()).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val fit = Tare.kmerBiasFit(counts.toDF("kmer", "count"))
+        .select($"kmer", round($"calibrated", 6)).orderBy($"kmer").collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      assert(sql.length === 256)
+      assert(fit === sql)
+    } finally spark.catalog.dropTempView("f")
+  }
+
+  test("the k-mer bias fit does not depend on the partitioning") {
+    // every context valid: the Gram and Xᵀy partials are exact integers,
+    // so summing them per partition in any grouping gives the same bits
+    val kmers = dnaKmerCounts(4000, 6, 777L).toDF("kmer", "count")
+    def bits(parts: Int): Map[String, Long] =
+      Tare.kmerBiasFit(kmers.repartition(parts)).collect()
+        .map(r => r.getString(0) ->
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val one = bits(1)
+    assert(one.size === kmers.count())
+    assert(bits(7) === one)
+  }
+
+  test("calibrateTxLenBias keeps a µ̂ of 0 at 0 and fits on the positive µ̂") {
+    val muHat = Seq(("a", 0.5), ("b", 0.5), ("c", 0.0)).toDF("tid", "muHat")
+    val tLen = Seq(("a", 100L), ("b", 300L), ("c", 200L)).toDF("tid", "len")
+    val cal = Tare.calibrateTxLenBias(muHat, tLen)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(cal.size === 3)
+    assert(cal("c") === 0.0)
+    Seq("a", "b").foreach(t => assert(fpEquals(cal(t), 0.5), s"at $t: ${cal(t)}"))
+  }
+
+  test("calibrateTxLenBias with a degenerate fit leaves µ̂ unchanged") {
+    // one positive µ̂, then two positive µ̂ of one length: no slope either way
+    for ((mus, lens) <- Seq((Seq(1.0, 0.0, 0.0), Seq(100L, 300L, 200L)),
+        (Seq(0.25, 0.75, 0.0), Seq(150L, 150L, 90L)))) {
+      val ids = mus.indices.map(i => s"t$i")
+      val cal = Tare.calibrateTxLenBias(ids.zip(mus).toDF("tid", "muHat"),
+        ids.zip(lens).toDF("tid", "len"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(cal === ids.zip(mus).toMap)
+    }
+  }
+
   test("calibrateTxLenBias for 4 hand-picked values") { // TareSuite.scala:96-118
     val muHat = Seq(("a", 0.28), ("b", 0.17), ("c", 0.31), ("d", 0.24)).toDF("tid", "muHat")
     val tLen = Seq(("a", 28L), ("b", 17L), ("c", 31L), ("d", 24L)).toDF("tid", "len")
