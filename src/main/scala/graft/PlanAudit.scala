@@ -167,7 +167,6 @@ object PlanAudit {
     // total) + the final sort over the cluster-SIZE histogram, whose
     // row count is bounded by max cluster size, not corpus size
     "q245_cluster_sizes" -> 3,
-    "q25_length_calibration" -> 3,
     "q28_set_ops" -> 5,
     "q40_dedup_exact" -> 1,
     "q45_embed_neardup" -> 1,

@@ -1,8 +1,10 @@
 package graft.calibrate
 
 import java.util.Locale
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Bias calibration — Spark-SQL re-expression of the reference's Tare
   * (rice-core .../algorithms/Tare.scala).
@@ -13,10 +15,10 @@ import org.apache.spark.sql.functions._
   *    dinucleotide-context counts, keep the residual (Tare.scala:110-136).
   *    One typed pass over the k-mers gives the 16×16 Gram; the
   *    reference's distributed SGD is not needed for a 16-column design.
-  *  - transcript length bias: driver-side OLS of log(µ̂) on log(len) over a
-  *    collected sample — deliberately NOT distributed; the reference found
-  *    MLlib SGD does not converge for 1-D features (Tare.scala:156-177 and
-  *    the comment at :164-167), and the sample is tiny.
+  *  - transcript length bias: driver-side OLS of log(µ̂) on log(len), one
+  *    pair per transcript — deliberately NOT distributed; the reference
+  *    found MLlib SGD does not converge for 1-D features (Tare.scala:156-177
+  *    and the comment at :164-167).
   */
 object Tare {
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -226,56 +228,76 @@ object Tare {
   }
 
   /** Recalibrate transcript abundances for length bias
-    * (Tare.scala:150-193). As-built semantics preserved exactly, including
-    * the quirk that the fitted line is applied to the abundance µ̂ itself,
-    * not to log-length (Tare.scala:187, SURVEY F6):
+    * (Tare.scala:150-193): [[lengthBias]] over `muHat` left-joined to
+    * `tLen`. A µ̂ row with no `tLen` row is calibrated but not fitted.
     *
-    *   cal_i = exp(mean + slope·µ̂_i + intercept − µ̂_i),  mean = −log(n_sample)
-    *
-    * then renormalized to Σ = 1 (Tare.scala:189-192).
-    *
-    * The line is fitted on the µ̂ > 0 only (log 0 would make every sum, and
-    * so every output, NaN), and a µ̂ of 0 stays 0. A fit with fewer than two
-    * positive µ̂, or with all their lengths equal, has no slope
-    * (n·sxx − sx² = 0): it logs a warning and µ̂ passes through uncalibrated,
-    * apart from the renormalization.
+    * Both inputs are collected in one job, as one union, and joined on the
+    * driver: a Spark join would first run a job to broadcast `tLen`.
     *
     * @param muHat DataFrame(tid, muHat) — abundances ≥ 0
-    * @param tLen  DataFrame(tid, len)
-    * @return DataFrame(tid, muHat) calibrated
+    * @param tLen  DataFrame(tid, len), one row per tid
+    * @return DataFrame(tid, muHat) calibrated, a local relation keyed by
+    *   `muHat`'s tid type
     */
-  def calibrateTxLenBias(muHat: DataFrame, tLen: DataFrame,
-      samplingRate: Double = 1.0): DataFrame = {
-    // driver-side OLS on the (small, possibly sampled) (log µ̂, log len) pairs
-    val local = muHat.join(broadcast(tLen), "tid")
-      .select(col("muHat"), col("len").cast("double"))
-      .sample(withReplacement = false, samplingRate)
+  def calibrateTxLenBias(muHat: DataFrame, tLen: DataFrame): DataFrame = {
+    val tid = muHat.schema("tid")
+    val (mus, lens) = muHat.select(col("tid"), col("muHat"), lit(true))
+      .union(tLen.select(col("tid").cast(tid.dataType), col("len").cast("double"), lit(false)))
       .collect()
-      .filter(_.getDouble(0) > 0)
-      .map(r => (math.log(r.getDouble(0)), math.log(r.getDouble(1))))
+      .partition(_.getBoolean(2))
+    val lenOf = lens.map(r => r.get(0) -> r.getDouble(1)).toMap
+    val cal = lengthBias(mus.map(_.getDouble(1)),
+      mus.map(r => lenOf.getOrElse(r.get(0), Double.NaN)))
+    muHat.sparkSession.createDataFrame(
+      mus.indices.map(i => Row(mus(i).get(0), cal(i))).asJava,
+      StructType(Seq(tid, StructField("muHat", DoubleType))))
+  }
 
-    val calibrated =
-      if (local.length < 2 || local.forall(_._2 == local.head._2)) {
-        logger.warn(s"length-bias fit is degenerate (${local.length} positive " +
+  /** The length-bias calibration on the driver (Tare.scala:150-193). As-built
+    * semantics preserved exactly, including the quirk that the fitted line
+    * is applied to the abundance µ̂ itself, not to log-length
+    * (Tare.scala:187, SURVEY F6):
+    *
+    *   cal_i = exp(mean + slope·µ̂_i + intercept − µ̂_i),  mean = −log(n)
+    *
+    * where (slope, intercept) is the OLS line of log(µ̂) on log(len) over the
+    * n fitted transcripts, then renormalized to Σ = 1 (Tare.scala:189-192).
+    * A pure function over arrays, like Quantify's EM loop.
+    *
+    * The line is fitted on the µ̂ > 0 with a known length only (log 0 would
+    * make every sum, and so every output, NaN), and a µ̂ of 0 stays 0. A fit
+    * with fewer than two such µ̂, or with all their lengths equal, has no
+    * slope (n·sxx − sx² = 0): it logs a warning and µ̂ passes through
+    * uncalibrated, apart from the renormalization. An all-zero µ̂ stays 0.
+    *
+    * @param mu  abundances ≥ 0
+    * @param len transcript lengths, NaN where unknown
+    * @return calibrated abundances, Σ = 1 unless every µ̂ is 0
+    */
+  def lengthBias(mu: Array[Double], len: Array[Double]): Array[Double] = {
+    val fit = mu.indices.filter(i => mu(i) > 0 && !len(i).isNaN)
+      .map(i => (math.log(mu(i)), math.log(len(i))))
+    val cal =
+      if (fit.length < 2 || fit.forall(_._2 == fit.head._2)) {
+        logger.warn(s"length-bias fit is degenerate (${fit.length} positive " +
           "abundance(s), distinct lengths needed); abundances are not length-calibrated")
-        col("muHat")
+        mu
       } else {
-        val n = local.length.toDouble
+        val n = fit.length.toDouble
         val mean = -math.log(n)
-        val sx = local.map(_._2).sum
-        val sy = local.map(_._1).sum
-        val sxx = local.map(p => p._2 * p._2).sum
-        val sxy = local.map(p => p._1 * p._2).sum
+        val sx = fit.map(_._2).sum
+        val sy = fit.map(_._1).sum
+        val sxx = fit.map(p => p._2 * p._2).sum
+        val sxy = fit.map(p => p._1 * p._2).sum
         // closed-form normal equations for y = slope·x + intercept (the
         // reference solves the same 2×2 system with jblas, Tare.scala:168-176)
         val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
         val intercept = (sy - slope * sx) / n
-        when(col("muHat") > 0, exp(lit(mean) +
-          (lit(slope) * col("muHat") + lit(intercept)) - col("muHat"))).otherwise(0.0)
+        // StrictMath.exp is what Spark's exp calls; the association is the
+        // column form's, mean + (slope·µ̂ + intercept) − µ̂
+        mu.map(m => if (m > 0) StrictMath.exp(mean + (slope * m + intercept) - m) else 0.0)
       }
-    val cal = muHat.withColumn("cal", calibrated)
-    // Σ=1 renormalization (Tare.scala:189-192) via broadcast scalar agg
-    cal.crossJoin(broadcast(cal.agg(sum("cal").as("totalCal"))))
-      .select(col("tid"), (col("cal") / col("totalCal")).as("muHat"))
+    val total = cal.sum
+    if (total > 0) cal.map(_ / total) else cal
   }
 }

@@ -99,18 +99,8 @@ object Main {
     // driver-side genome load + broadcast, as the reference does
     // (cli/Index.scala:59-62 then Index.scala:76-78); .2bit or FASTA
     val genome = Timers.time("loadGenome") { graft.io.Genome.read(genomePath) }
-    val bc = spark.sparkContext.broadcast(genome)
     val transcripts = graft.io.Gtf.transcripts(spark, gtfPath)
-    val extract = udf { (exons: Seq[org.apache.spark.sql.Row]) =>
-      // transcript hull on its reference sequence (Index.scala:85 uses t.region)
-      val regions = exons.map(_.getStruct(3))
-      val name = regions.head.getString(0)
-      val start = regions.map(_.getLong(1)).min
-      val end = regions.map(_.getLong(2)).max
-      bc.value(name).substring(start.toInt, end.toInt)
-    }
-    val seqs = transcripts.select(col("id"), extract(col("exons")).as("sequence"))
-    val idx = Timers.time("buildIndex") { Indexer(seqs, k) }
+    val idx = Timers.time("buildIndex") { Indexer.fromGenome(spark, transcripts, genome, k) }
     Timers.time("writeIndex") {
       val (km, cl) =
         if (avroCompat)

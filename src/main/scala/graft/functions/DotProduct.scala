@@ -100,15 +100,4 @@ object DotProduct {
   def dot_product(x: Column, y: Column): Column =
     GraftColumnBridge.column(
       DotProduct(GraftColumnBridge.expression(x), GraftColumnBridge.expression(y)))
-
-  /** SQL registration, mirroring KmerGenerator.register:
-    * `SELECT dot_product(embedding, embedding) FROM embeddings`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => {
-        require(exprs.length == 2, "usage: dot_product(x, y)")
-        DotProduct(exprs.head, exprs(1))
-      },
-      "built-in")
 }

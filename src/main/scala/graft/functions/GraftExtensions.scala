@@ -2,16 +2,48 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.kmer.KmerGenerator
 
-/** One-call registration of every graft custom SQL function on a live
-  * session (local tools, tests, notebooks). */
+/** Every graft native SQL function, in one table that both
+  * [[GraftFunctions.registerAll]] and [[GraftExtensions]] are built from. */
 object GraftFunctions {
-  def registerAll(spark: SparkSession): Unit = {
-    graft.kmer.KmerGenerator.register(spark)
-    DotProduct.register(spark)
-    ZValue.register(spark)
-    HllRegisterAgg.register(spark)
+  type Description = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Description =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), exprs => {
+      require(exprs.length == arity, s"usage: $usage")
+      build(exprs)
+    })
+
+  /** `kmer_explode`'s k parameterizes the expression at plan time, so it
+    * must be an integer literal (or fold to one). */
+  private def literalK(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case e if e.foldable => e.eval().toString.toInt
+    case _ => throw new IllegalArgumentException(
+      "kmer_explode: k must be an integer literal")
   }
+
+  val functions: Seq[Description] = Seq(
+    fn("dot_product", classOf[DotProduct], 2, "dot_product(x, y)")(
+      e => DotProduct(e(0), e(1))),
+    fn("kmer_explode", classOf[KmerGenerator], 2, "kmer_explode(seq, k)")(
+      e => KmerGenerator(e(0), literalK(e(1)))),
+    fn("z_value", classOf[ZValue], 2, "z_value(x, y)")(e => ZValue(e(0), e(1))),
+    fn("hilbert_value", classOf[HilbertValue], 2, "hilbert_value(x, y)")(
+      e => HilbertValue(e(0), e(1))),
+    fn("hll_registers", classOf[HllRegisterAgg], 1, "hll_registers(x)")(
+      e => HllRegisterAgg(e(0)).toAggregateExpression()))
+
+  /** Register every function on a live session (local tools, tests,
+    * notebooks), e.g. `SELECT kmer_explode(sequence, 8) FROM reads`. */
+  def registerAll(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }
 
 /** `SparkSessionExtensions` hook — the deployment integration point: a
@@ -25,46 +57,7 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "usage: dot_product(x, y)")
-        DotProduct(exprs.head, exprs(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("kmer_explode"),
-      new ExpressionInfo(classOf[graft.kmer.KmerGenerator].getName, "kmer_explode"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "usage: kmer_explode(seq, k)")
-        val k = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case e if e.foldable => e.eval().toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "kmer_explode: k must be an integer literal")
-        }
-        graft.kmer.KmerGenerator(exprs.head, k)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("z_value"),
-      new ExpressionInfo(classOf[ZValue].getName, "z_value"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "usage: z_value(x, y)")
-        ZValue(exprs.head, exprs(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegisterAgg].getName, "hll_registers"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "usage: hll_registers(x)")
-        HllRegisterAgg(exprs.head).toAggregateExpression()
-      }))
+    GraftFunctions.functions.foreach(ext.injectFunction)
 
     // band-join → binned equi-join rewrite (see plans.RangeBinJoin)
     ext.injectOptimizerRule(_ => graft.plans.RangeBinJoin)

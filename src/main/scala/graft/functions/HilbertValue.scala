@@ -144,14 +144,4 @@ object HilbertValue {
     }
     (init +: steps).mkString(",\n")
   }
-
-  /** SQL registration, mirroring ZValue.register. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_value",
-      exprs => {
-        require(exprs.length == 2, "usage: hilbert_value(x, y)")
-        HilbertValue(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -87,14 +87,4 @@ object HllRegisterAgg {
   def hllRegisters(c: Column): Column =
     GraftColumnBridge.column(
       HllRegisterAgg(GraftColumnBridge.expression(c)).toAggregateExpression())
-
-  /** SQL-name registration, same surface as dot_product/z_value. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_registers",
-      exprs => {
-        require(exprs.length == 1, "usage: hll_registers(x)")
-        HllRegisterAgg(exprs.head).toAggregateExpression()
-      },
-      "built-in")
 }

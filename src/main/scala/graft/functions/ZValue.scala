@@ -95,14 +95,4 @@ object ZValue {
     val ys = (0 until 24).map(i => s"(((($yCol) >> $i) & 1) << ${2 * i + 1})")
     (xs ++ ys).mkString(" | ")
   }
-
-  /** SQL registration, mirroring DotProduct.register. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_value",
-      exprs => {
-        require(exprs.length == 2, "usage: z_value(x, y)")
-        ZValue(exprs.head, exprs(1))
-      },
-      "built-in")
 }

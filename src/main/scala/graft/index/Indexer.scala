@@ -60,25 +60,28 @@ object Indexer {
       ecToTx = withEc.select("ec", "tid").distinct())
   }
 
-  /** Convenience: index transcripts laid out on a reference genome.
-    * The genome accessor mirrors the reference's broadcast TwoBitFile
-    * (Index.scala:76-78, J5): the sequence string is broadcast and sliced
-    * per transcript at the driver — transcript annotation sets are small
-    * relative to read sets, and extraction is a narrow map.
+  /** Index transcripts laid out on a reference genome — `index`'s path
+    * from a GTF and a genome. The genome accessor mirrors the reference's
+    * broadcast TwoBitFile (Index.scala:76-78, J5): the sequences are
+    * broadcast and each transcript is sliced per task — transcript
+    * annotation sets are small relative to read sets, and extraction is a
+    * narrow map.
     *
-    * @param transcripts DataFrame(id string, exons array<struct<start long, end long>>)
-    * @param genome      the reference sequence (test stub: plain string,
-    *                    QuantifySuite.scala:31-37)
+    * @param transcripts DataFrame(id string, exons array<struct<exonId,
+    *                    transcriptId, strand, region struct<referenceName,
+    *                    start, end>>>), as `io.Gtf.transcripts` reads it
+    * @param genome      reference sequence name → sequence (`io.Genome.read`)
     */
-  def fromGenome(spark: SparkSession, transcripts: DataFrame, genome: String, k: Int,
-      deterministicIds: Boolean = false): Result = {
+  def fromGenome(spark: SparkSession, transcripts: DataFrame,
+      genome: Map[String, String], k: Int, deterministicIds: Boolean = false): Result = {
     val bc = spark.sparkContext.broadcast(genome)
     // the reference extracts the transcript's full region — the hull of its
-    // exons (Index.scala:85 uses t.region) — not a per-exon splice
-    val extract = udf { exons: Seq[org.apache.spark.sql.Row] =>
-      val starts = exons.map(_.getLong(0))
-      val ends = exons.map(_.getLong(1))
-      bc.value.substring(starts.min.toInt, ends.max.toInt)
+    // exons on their reference sequence (Index.scala:85 uses t.region) — not
+    // a per-exon splice
+    val extract = udf { (exons: Seq[org.apache.spark.sql.Row]) =>
+      val regions = exons.map(_.getStruct(3))
+      bc.value(regions.head.getString(0)).substring(
+        regions.map(_.getLong(1)).min.toInt, regions.map(_.getLong(2)).max.toInt)
     }
     apply(transcripts.select(col("id"), extract(col("exons")).as("sequence")), k, deterministicIds)
   }

@@ -1,12 +1,14 @@
 package graft.io
 
 import java.util.Locale
-import scala.io.Source
+import scala.io.{Codec, Source}
 
 /** Minimal FASTA reference-sequence source, standing in for the reference's
   * TwoBitFile (cli/Index.scala:60-62, SURVEY S5). Like the reference, the
   * genome is loaded at the DRIVER and broadcast — random-access extraction
   * is a per-task substring, not a distributed scan (Index.scala:76-78, J5).
+  * The file is opened through Hadoop `FileSystem` ([[Genome.open]]), so the
+  * path may be any URI the session can read (hdfs://, s3a://, file://).
   *
   * Sized for transcriptome-scale references (what this pipeline indexes);
   * a chromosome-scale genome would move to a bgzip+faidx range reader with
@@ -18,7 +20,7 @@ object Fasta {
     * upper-cased, so a soft-masked (lower-case) block indexes like the rest
     * of its sequence and like the same genome read from .2bit. */
   def read(path: String): Map[String, String] = {
-    val src = Source.fromFile(path)
+    val src = Source.fromInputStream(Genome.open(path))(Codec.UTF8)
     try {
       val out = scala.collection.mutable.LinkedHashMap[String, StringBuilder]()
       var current: StringBuilder = null

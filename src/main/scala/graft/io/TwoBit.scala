@@ -1,7 +1,8 @@
 package graft.io
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
 /** UCSC .2bit reference-sequence reader (public format spec: 16-byte header,
   * name index, per-sequence N/mask block lists, 2-bit packed DNA with
@@ -22,7 +23,8 @@ object TwoBit {
 
   /** name → full sequence, same contract as [[Fasta.read]]. */
   def read(path: String): Map[String, String] = {
-    val buf = ByteBuffer.wrap(Files.readAllBytes(Paths.get(path)))
+    val in = Genome.open(path)
+    val buf = try ByteBuffer.wrap(in.readAllBytes()) finally in.close()
     buf.order(ByteOrder.LITTLE_ENDIAN)
     if (buf.getInt(0) != Signature) {
       buf.order(ByteOrder.BIG_ENDIAN)
@@ -79,4 +81,11 @@ object TwoBit {
 object Genome {
   def read(path: String): Map[String, String] =
     if (path.endsWith(".2bit")) TwoBit.read(path) else Fasta.read(path)
+
+  /** Open a genome file through Hadoop `FileSystem` with the active
+    * session's Hadoop conf, as the FASTQ, GTF and BAM readers do. */
+  private[io] def open(path: String): java.io.InputStream = {
+    val p = new Path(path)
+    p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration).open(p)
+  }
 }

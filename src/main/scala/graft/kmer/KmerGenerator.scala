@@ -76,23 +76,4 @@ object KmerGenerator {
   /** Column form: `df.select(col("id"), kmer_explode(col("seq"), k))`. */
   def kmer_explode(seq: Column, k: Int): Column =
     GraftColumnBridge.column(KmerGenerator(GraftColumnBridge.expression(seq), k))
-
-  /** Register `kmer_explode(seq, k)` in the session's function registry so
-    * plain `spark.sql` queries can use the native generator too:
-    * `SELECT kmer_explode(sequence, 8) FROM reads`. k must be an integer
-    * literal (it parameterizes the expression at plan time). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmer_explode",
-      exprs => {
-        require(exprs.length == 2, "usage: kmer_explode(seq, k)")
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case e if e.foldable => e.eval().toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "kmer_explode: k must be an integer literal")
-        }
-        KmerGenerator(exprs.head, k)
-      },
-      "built-in")
 }

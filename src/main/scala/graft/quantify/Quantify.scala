@@ -28,6 +28,9 @@ import graft.model.{Read, Transcript}
   * memory: no Spark job per iteration, and a job count that does not
   * depend on `maxIterations`. µ stays UNNORMALIZED across iterations (the
   * E step is scale-invariant), and Σ=1 is applied once at the end. The
+  * length calibration ([[graft.calibrate.Tare.lengthBias]]) runs over the
+  * same arrays, so the whole tail after the collect is on the driver, and
+  * µ̂ becomes a frame once, for the final descriptor join. The
   * DataFrame steps [[initializeEM]], [[eStep]] and [[mStep]] remain the
   * query-surface and reference form of the same math.
   */
@@ -147,15 +150,16 @@ object Quantify {
 
   /** The counted classes' membership edges in flat form, for [[emLoop]].
     * @param tids       transcript ids, in the type of `ecToTx.tid`
+    * @param len        length of each transcript
     * @param effLen     effective length of each transcript
     * @param classCount read count of each counted class
     * @param edgeClass  class of each edge
     * @param edgeTx     transcript of each edge, −1 when it has no length row
     * @param clamped    transcripts whose effective length was floored
     */
-  private final case class Edges(tids: IndexedSeq[Any], effLen: Array[Double],
-      classCount: Array[Double], edgeClass: Array[Int], edgeTx: Array[Int],
-      clamped: Int)
+  private final case class Edges(tids: IndexedSeq[Any], len: Array[Double],
+      effLen: Array[Double], classCount: Array[Double], edgeClass: Array[Int],
+      edgeTx: Array[Int], clamped: Int)
 
   /** Collect every class of `ecCounts` with its `ecToTx` rows and their
     * transcripts' lengths, in one job. The left joins keep what the
@@ -174,7 +178,7 @@ object Quantify {
     val classIdx = scala.collection.mutable.HashMap.empty[Any, Int]
     val txIdx = scala.collection.mutable.HashMap.empty[Any, Int]
     val tids = Vector.newBuilder[Any]
-    val effLen, classCount = Array.newBuilder[Double]
+    val len, effLen, classCount = Array.newBuilder[Double]
     val edgeClass, edgeTx = Array.newBuilder[Int]
     var clamped = 0
     rows.foreach { r =>
@@ -184,13 +188,13 @@ object Quantify {
       if (!r.isNullAt(2)) {
         edgeClass += c
         edgeTx += (if (r.isNullAt(3)) -1 else txIdx.getOrElseUpdate(r.get(2), {
-          tids += r.get(2); effLen += r.getDouble(4)
+          tids += r.get(2); len += r.getLong(3).toDouble; effLen += r.getDouble(4)
           if (r.getDouble(4) > r.getLong(3) - k + 1) clamped += 1
           txIdx.size
         }))
       }
     }
-    Edges(tids.result(), effLen.result(), classCount.result(),
+    Edges(tids.result(), len.result(), effLen.result(), classCount.result(),
       edgeClass.result(), edgeTx.result(), clamped)
   }
 
@@ -270,10 +274,6 @@ object Quantify {
 
     import graft.util.Timers
     val spark = reads.sparkSession
-    val tLen = Timers.time("extractTranscriptLengths") {
-      transcriptLengths(transcripts).cache()
-    }
-
     val readKmers = Timers.time("countKmers") { countKmers(reads.toDF(), kmerLength) }
     val calibrated =
       if (calibrateKmerBias) Timers.time("tareKmers") {
@@ -285,11 +285,12 @@ object Quantify {
       mapKmersToClasses(calibrated, kmerToEc)
     }
 
-    // the edges are collected once and the EM runs on the driver; µ̂ comes
-    // back as a one-row-per-transcript frame keyed by ecToTx's tid type.
-    // The collect is the first action, so `em` also times the lazy stages above.
-    val muHat = Timers.time("em") {
-      val edges = collectEdges(ecCounts, ecToTx, tLen, kmerLength)
+    // the edges are collected once and the EM and the length calibration
+    // run on the driver. The collect is the first action, so `em` also times
+    // the lazy stages above.
+    val (edges, mu) = Timers.time("em") {
+      val edges = collectEdges(ecCounts, ecToTx, transcriptLengths(transcripts),
+        kmerLength)
       if (edges.classCount.isEmpty)
         log.warn(s"no read $kmerLength-mer matches the index: the read set is " +
           s"empty, every read is shorter than k = $kmerLength, or the index was " +
@@ -297,18 +298,18 @@ object Quantify {
       if (edges.clamped > 0)
         log.warn(s"${edges.clamped} transcript(s) have len - k + 1 < 1; " +
           "their effective length is floored at 1")
-      val mu = emLoop(edges.edgeClass, edges.edgeTx, edges.classCount,
-        edges.effLen, maxIterations)
-      spark.createDataFrame(
-        edges.tids.zip(mu).map { case (t, m) => Row(t, m) }.asJava,
-        StructType(Seq(ecToTx.schema("tid"), StructField("muHat", DoubleType))))
+      (edges, emLoop(edges.edgeClass, edges.edgeTx, edges.classCount,
+        edges.effLen, maxIterations))
     }
-
     val calibratedMu =
       if (calibrateLengthBias) Timers.time("calibrateTxLenBias") {
-        graft.calibrate.Tare.calibrateTxLenBias(muHat, tLen)
+        graft.calibrate.Tare.lengthBias(mu, edges.len)
       }
-      else muHat
+      else mu
+    // µ̂ as a one-row-per-transcript frame keyed by ecToTx's tid type
+    val muHat = spark.createDataFrame(
+      edges.tids.zip(calibratedMu).map { case (t, m) => Row(t, m) }.asJava,
+      StructType(Seq(ecToTx.schema("tid"), StructField("muHat", DoubleType))))
 
     // final join against full transcript descriptors (Quantify.scala:286-295):
     // the reference returns RDD[(Transcript, Double)] — the COMPLETE
@@ -316,7 +317,7 @@ object Quantify {
     // abundance so gene-level rollups need no second join
     transcripts.select(col("id").as("tid"), col("names"), col("geneId"),
         col("strand"), col("exons"))
-      .join(calibratedMu, "tid")
+      .join(muHat, "tid")
       .select(col("tid"), col("names"), col("geneId"), col("strand"),
         col("exons"), col("muHat").as("abundance"))
   }

@@ -49,7 +49,10 @@ class IoSuite extends SparkSuite {
     assert(genome === Map("chr1" -> "CAATCCTTCG", "chr2" -> "GCAGTGCA"))
   }
 
-  test("2bit reader decodes packed DNA + N blocks, Genome dispatches .2bit") {
+  /** A two-record .2bit genome: chr1 is 17 bases (not a multiple of 4) with
+    * an interior N run and a mask block the reader must skip; chr2 is
+    * exactly two full bytes. */
+  private def twoBitGenome(): java.nio.file.Path = {
     import java.nio.{ByteBuffer, ByteOrder}
     // encode per the public UCSC spec: T=0 C=1 A=2 G=3, first base in the
     // two high-order bits; Ns carried as a (starts[], sizes[]) block list
@@ -71,8 +74,6 @@ class IoSuite extends SparkSuite {
       b.putInt(0).put(dna)
       b.array()
     }
-    // chr1: 17 bases (not a multiple of 4) with an interior N run + a mask
-    // block the reader must skip; chr2: exactly two full bytes
     val r1 = record("CAATCCTTCGTTTGCAG", Seq((10, 3)), Seq((0, 4)))
     val r2 = record("GCAGTGCA", Nil, Nil)
     val names = Seq("chr1", "chr2")
@@ -86,7 +87,11 @@ class IoSuite extends SparkSuite {
     file.put(r1).put(r2)
     val path = Files.createTempFile("graft_ref", ".2bit")
     Files.write(path, file.array())
+    path
+  }
 
+  test("2bit reader decodes packed DNA + N blocks, Genome dispatches .2bit") {
+    val path = twoBitGenome()
     val genome = graft.io.Genome.read(path.toString)
     assert(genome === Map("chr1" -> "CAATCCTTCGNNNGCAG", "chr2" -> "GCAGTGCA"))
 
@@ -94,6 +99,17 @@ class IoSuite extends SparkSuite {
     // there, and both readers must give the same map (hence the same index)
     val fa = write("ref_masked", ">chr1\ncaatCCTTCG\nNNNGCAG\n>chr2\nGCAGTGCA\n")
     assert(graft.io.Genome.read(fa) === genome)
+  }
+
+  test("genome readers open Hadoop URIs, not only local paths") {
+    // the same genome via a file:// URI as via the plain path, for both
+    // formats (cluster submission passes hdfs:// or s3a:// the same way)
+    val twoBit = twoBitGenome()
+    val fa = write("ref_uri", ">chr1\nCAATCCTTCG\n>chr2\nGCAGTGCA\n")
+    for (plain <- Seq(twoBit.toString, fa)) {
+      val uri = "file://" + plain
+      assert(graft.io.Genome.read(uri) === graft.io.Genome.read(plain), uri)
+    }
   }
 
   test("FASTQ reader extracts sequence lines, loader dispatches by extension") {

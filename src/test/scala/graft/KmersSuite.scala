@@ -39,7 +39,7 @@ class KmersSuite extends SparkSuite {
   }
 
   test("kmer_explode is callable from plain SQL after registration") {
-    graft.kmer.KmerGenerator.register(spark)
+    graft.functions.GraftFunctions.registerAll(spark)
     Seq("CAATCC", "GCA").toDF("sequence").createOrReplaceTempView("kmer_sql_test")
     val got = spark.sql(
       "SELECT kmer_explode(sequence, 3) AS km FROM kmer_sql_test")

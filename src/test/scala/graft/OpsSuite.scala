@@ -393,13 +393,16 @@ class OpsSuite extends SparkSuite {
     assert(edges(0).isNullAt(0) && edges(1).isNullAt(0))
     assert(edges(2).getDouble(0) === 0.0)
     // SQL registration path
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftFunctions.registerAll(spark)
     val sqlD = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect()
     assert(sqlD.head.getDouble(0) === 11.0)
   }
 
   test("registerAll exposes the native functions to plain SQL; extensions inject") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+    import graft.functions.HilbertValue
     graft.functions.GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT k.kmer, dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d
@@ -412,10 +415,23 @@ class OpsSuite extends SparkSuite {
       "SELECT hll_registers(x) AS r FROM (SELECT explode(array('a','b','c')) AS x)")
       .collect().head.getSeq[Int](0)
     assert(regs.length === 256 && regs.count(_ > 0) === 3)
+    assert(spark.sql("SELECT hilbert_value(0, 0) AS h").collect().head.getLong(0) === 0L)
     // the cluster-deployment hook (spark.sql.extensions) injects the same
     // builders at session build time; pin that injection itself is sound
-    new graft.functions.GraftExtensions()
-      .apply(new org.apache.spark.sql.SparkSessionExtensions)
+    // and covers every function, hilbert_value included
+    val injected = scala.collection.mutable.Map[String, Seq[Expression] => Expression]()
+    new graft.functions.GraftExtensions().apply(
+      new org.apache.spark.sql.SparkSessionExtensions {
+        override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+            Seq[Expression] => Expression)): Unit = {
+          injected(f._1.funcName) = f._3
+          super.injectFunction(f)
+        }
+      })
+    assert(injected.keySet ===
+      Set("dot_product", "kmer_explode", "z_value", "hilbert_value", "hll_registers"))
+    assert(injected("hilbert_value")(Seq(Literal(3L), Literal(1L))).eval() ===
+      HilbertValue.xy2d(16, 3L, 1L))
   }
 
   test("top-k aggregator: bounded state, order-insensitive merge, no window") {
@@ -539,7 +555,7 @@ class OpsSuite extends SparkSuite {
       }
     } finally spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
     // SQL registration
-    graft.functions.ZValue.register(spark)
+    graft.functions.GraftFunctions.registerAll(spark)
     assert(spark.sql("SELECT z_value(5, 3) AS z").collect().head.getLong(0) === 27L)
     // layout claim (sf0.01 — bins at sf0.001 are too small to separate
     // from noise): a point predicate on the NON-sort dimension
@@ -820,7 +836,7 @@ class OpsSuite extends SparkSuite {
       }
     } finally spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
     // SQL registration
-    HilbertValue.register(spark)
+    graft.functions.GraftFunctions.registerAll(spark)
     assert(spark.sql("SELECT hilbert_value(0, 0) AS h").collect()
       .head.getLong(0) === 0L)
   }

@@ -101,8 +101,8 @@ class QuantifySuite extends SparkSuite {
       ("transcript1", Seq(Exon("exon1", "transcript1", true, ReferenceRegion("region1", 0L, 10L)))),
       ("transcript2", Seq(Exon("exon2", "transcript2", true, ReferenceRegion("region2", 11L, 20L)))))
       .toDF("id", "exons")
-      .select(col("id"), expr("transform(exons, e -> struct(e.region.start AS start, e.region.end AS end))").as("exons"))
-    val idx = Indexer.fromGenome(spark, transcripts, testSeq, 5, deterministicIds = true)
+    val idx = Indexer.fromGenome(spark, transcripts,
+      Map("region1" -> testSeq, "region2" -> testSeq), 5, deterministicIds = true)
 
     val kToEq = idx.kmerToEc.collect().map(r => r.getString(0) -> r.getLong(1))
     assert(kToEq.count(_._1 == "CAATC") === 1)
@@ -370,6 +370,22 @@ class QuantifySuite extends SparkSuite {
     val (rows, warned) = run(emReads.map(Read(_)), emK)
     assert(rows === 4)
     assert(warned.isEmpty)
+  }
+
+  test("a transcript with no counted class gets no output row") {
+    // reference parity: the J3 inner join writes no line for an unexpressed
+    // transcript. t2's 5-mers share nothing with t1's reads; with one
+    // expressed transcript the length fit is degenerate and µ̂ passes through
+    val genome = Map("chr1" -> testSeq, "chr2" -> "TTTTTGGGGGTTTTTGGGGG")
+    val txDs = Seq("t1" -> "chr1", "t2" -> "chr2").map { case (t, chr) =>
+      Transcript(t, Seq(t), "g1", true,
+        Seq(Exon(t + "e1", t, true, ReferenceRegion(chr, 0L, 20L))))
+    }.toDS()
+    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 5, deterministicIds = true)
+    val reads = Seq(testSeq.take(12), testSeq.drop(6)).map(Read(_)).toDS()
+    val ab = abundances(Quantify(reads, idx.kmerToEc, idx.ecToTx, txDs, 5, 5,
+      calibrateKmerBias = false, calibrateLengthBias = true), "abundance")
+    assert(ab === Map("t1" -> 1.0))
   }
 
   /** Messages that Quantify logs while `body` runs. */

@@ -221,6 +221,18 @@ class TareSuite extends SparkSuite {
     Seq("a", "b", "c", "d").foreach(t => assert(fpEquals(cal(t), 0.25), s"at $t"))
   }
 
+  test("lengthBias equals calibrateTxLenBias; an all-zero µ̂ stays 0") {
+    val mus = Array(0.28, 0.17, 0.31, 0.24)
+    val lens = Array(28.0, 17.0, 31.0, 24.0)
+    val ids = Seq("a", "b", "c", "d")
+    val viaFrame = Tare.calibrateTxLenBias(ids.zip(mus).toDF("tid", "muHat"),
+      ids.zip(lens.map(_.toLong)).toDF("tid", "len"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(ids.zip(Tare.lengthBias(mus, lens)).toMap === viaFrame)
+    // no positive µ̂: a degenerate fit, and no 0/0 in the renormalization
+    assert(Tare.lengthBias(Array(0.0, 0.0), Array(10.0, 20.0)).toSeq === Seq(0.0, 0.0))
+  }
+
   private def lengthOnlyVariation(dataSize: Int): Unit = { // TareSuite.scala:120-147
     val rand = new Random(113402062015L)
     val r = (0 to dataSize).map(i => (i.toString, 1L + rand.nextInt(10)))
