@@ -167,6 +167,10 @@ object PlanAudit {
     // total) + the final sort over the cluster-SIZE histogram, whose
     // row count is bounded by max cluster size, not corpus size
     "q245_cluster_sizes" -> 3,
+    // audited through Plans.auditSubstitutes (its fn collects on the
+    // driver): the scalar Σ-token combine over the 20 fitted documents,
+    // one row, broadcast to divide each document's count
+    "q25_length_calibration" -> 1,
     "q28_set_ops" -> 5,
     "q40_dedup_exact" -> 1,
     "q45_embed_neardup" -> 1,

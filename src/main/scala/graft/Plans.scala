@@ -41,9 +41,15 @@ object Plans {
     * the scatter frame itself restores both: plan construction is lazy
     * again, and the fence row counts the query's REAL distributed work.
     * The shuffle-bytes probe (Scale.shuffleProbe) substitutes the same
-    * frame for the same reason. */
+    * frame for the same reason. q25 is the same case: its fn collects the
+    * µ̂/length union and calibrates on the driver, so the audit explains
+    * that union (Tare.lengthInputs) instead. */
   val auditSubstitutes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map("q146_scatter_axis" -> ((s, d) => ops.Similarity.scatterFrame(s, d)))
+    Map("q146_scatter_axis" -> ((s, d) => ops.Similarity.scatterFrame(s, d)),
+      "q25_length_calibration" -> { (s, d) =>
+        val (mu, tLen) = relational.GenomicsQueries.lengthCalibrationInputs(s, d)
+        calibrate.Tare.lengthInputs(mu, tLen)
+      })
 
   /** Memo-BUILD frames audited in ADDITION to the registered queries
     * (ADVICE r14): a stage that moves inside a session memo leaves every

@@ -64,18 +64,12 @@ object Scale {
       shuffleProbe(rankDir, runDir, sel, out)
     case "cluster" :: dir :: master :: sel :: out :: Nil =>
       clusterProbe(dir, master, sel, out)
-    case "skew" :: dir :: out :: Nil =>
-      skewProbe(dir, out)
-    case "straggler" :: dir :: master :: baseTaskMs :: out :: Nil =>
-      stragglerProbe(dir, master, baseTaskMs.toLong, out)
     case _ =>
       System.err.println(
         "usage: graft.Scale synth <srcDir> <dstDir> <copies>\n" +
         "       graft.Scale time <dirA> <dirB> <all|q1,q2,...> <outJson>\n" +
         "       graft.Scale shuffle <rankDir> <runDir> <all|topN|q1,q2,...> <outJson>\n" +
-        "       graft.Scale cluster <dir> <masterUrl> <all|q1,q2,...> <outJson>\n" +
-        "       graft.Scale skew <dir> <outJson>\n" +
-        "       graft.Scale straggler <dir> <masterUrl> <baseTaskMs> <outJson>")
+        "       graft.Scale cluster <dir> <masterUrl> <all|q1,q2,...> <outJson>")
       sys.exit(2)
   }
 
@@ -631,208 +625,4 @@ object Scale {
   private def audit0(spark: SparkSession, dir: String)
       : Seq[(String, PlanAudit.Counts)] =
     Plans.audit(spark, dir, collectText = false).perQuery.toSeq
-
-  // --- skew mitigation, measured (round 12) --------------------------------
-
-  /** Per-stage task-duration capture for the skew/straggler probes: the
-    * skew claim is about the LONGEST task in the join stage (wall time
-    * alone can hide a straggler task overlapped by other stages). */
-  private final class TaskDurations extends org.apache.spark.scheduler.SparkListener {
-    val byStage = scala.collection.mutable.Map[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    val tasksByExecutor = scala.collection.mutable.Map[String, Int]()
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized {
-        byStage.getOrElseUpdate(te.stageId,
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += te.taskInfo.duration
-        tasksByExecutor(te.taskInfo.executorId) =
-          tasksByExecutor.getOrElse(te.taskInfo.executorId, 0) + 1
-      }
-    /** (maxMs, medianMs, nTasks) of the stage holding the longest task. */
-    def worstStage: (Long, Long, Int) = synchronized {
-      if (byStage.isEmpty) (0L, 0L, 0)
-      else {
-        val ds = byStage.values.maxBy(_.max).sorted
-        (ds.max, ds(ds.size / 2), ds.size)
-      }
-    }
-  }
-
-  /** AQE skew-split A/B on a DELIBERATELY skewed join —
-    * `runMain graft.Scale skew <dir> <outJson>`. PLANS.md's skew story is
-    * twofold. Per-class normalizations are aggregates + join-backs whose
-    * hot key collapses MAP-SIDE and whose small side broadcasts (never
-    * unsplittable windows — spec-pinned by QuantifySuite's hot-class
-    * fixture; and note AQE CANNOT split a fact⋈agg SMJ, because the agg
-    * child is not a bare shuffle stage — the broadcast/map-side-combine
-    * design is the mitigation there, not AQE). What AQE skew-split DOES
-    * cover is the surface's fact⋈fact pair joins — LSH (band,bucket)
-    * buckets, PPJoin prefix tokens, trigram keys — where one hot bucket
-    * skews a plain shuffle⋈shuffle join; that claim was argued, not
-    * measured, and this probe measures it. Input: the corpus's events
-    * table with HALF of all rows remapped onto one hot join key on the
-    * left, joined to a uniformly-keyed projection of the same table (both
-    * sides plain scan→shuffle, the splittable shape); broadcast disabled
-    * so the join is a real SMJ, AQE skew thresholds lowered to match
-    * probe-scale partitions (defaults target 256 MB production
-    * partitions; the MECHANISM — split the oversized left partition,
-    * replicate the matching right partition — is what's under test, and
-    * it is threshold-gated, not size-dependent). Metric: the longest
-    * task across the job (the straggler that gates wall-clock) with its
-    * stage's median and the executed plan's skew marks, OFF vs ON —
-    * after the split the longest task is no longer the join's hot
-    * partition at all. */
-  def skewProbe(dir: String, out: String): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    warm(spark, dir)
-    def run(skewJoin: Boolean): (Double, Long, Long, Int, Int) = {
-      val c = spark.conf
-      c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      c.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      c.set("spark.sql.adaptive.skewJoin.enabled", skewJoin.toString)
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-      // coalescing would immediately re-merge the sub-advisory splits
-      c.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      try {
-        // left: 50% of events on hot key 0, the rest spread over 997
-        // keys (the hot-LSH-bucket shape); right: the same table keyed
-        // uniformly (~rows/998 per key), so the hot output is
-        // |hot|·|right match| while both join children stay bare
-        // scan→shuffle stages. The repartition(16) exists because skew
-        // split works at MAP-CHUNK granularity (a skewed reduce
-        // partition is carved along mapper boundaries): the probe corpus
-        // is one parquet file = ONE scan mapper, whose single chunk is
-        // unsplittable — a small-file artifact, not a production
-        // behavior (a 100 TB scan has thousands of mappers). 16 mappers
-        // give the splitter real boundaries; debug-verified that without
-        // it the rule sees the 25x-median partition and still splits 0.
-        val left = Tables.events(spark, dir).repartition(16).select(
-          when($"event_id" % 2 === 0, lit(0L))
-            .otherwise(pmod($"event_id", lit(199)) + 1).as("k"),
-          $"value")
-        val right = Tables.events(spark, dir).select(
-          pmod($"event_id", lit(200)).as("k"),
-          length($"props").as("w"))
-        // downstream agg groups on a NON-join key, as the engine's pair
-        // pipelines do (LSH candidates group by pair id, not bucket):
-        // grouping on the join key itself would make the join's output
-        // partitioning reusable, and AQE's cost evaluator then correctly
-        // DECLINES the skew rewrite (it would add an exchange a
-        // non-skewed plan doesn't need) unless forceOptimizeSkewedJoin
-        // is set — debug-verified: "skewed partitions: left 1" found,
-        // rewrite reverted. Here the join output re-shuffles either way,
-        // so the rewrite is cost-neutral and adopted.
-        val joined = left.join(right, "k")
-          .groupBy($"w")
-          .agg(count(lit(1)).as("n"), sum($"value").as("s"))
-        val listener = new TaskDurations
-        spark.sparkContext.addSparkListener(listener)
-        val t0 = System.nanoTime()
-        joined.queryExecution.toRdd.count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1000) // listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-        val skewMarks = "isSkew=true|skew=true".r
-          .findAllIn(joined.queryExecution.executedPlan.toString).size
-        val (mx, med, n) = listener.worstStage
-        spark.catalog.clearCache()
-        System.gc()
-        (wall, mx, med, n, skewMarks)
-      } finally {
-        Seq("spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.skewJoin.enabled",
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          "spark.sql.adaptive.coalescePartitions.enabled").foreach(c.unset)
-      }
-    }
-    run(skewJoin = false) // discarded JIT/page-cache warm-up leg
-    val (wOff, mxOff, medOff, nOff, marksOff) = run(skewJoin = false)
-    val (wOn, mxOn, medOn, nOn, marksOn) = run(skewJoin = true)
-    def leg(w: Double, mx: Long, med: Long, n: Int, marks: Int): String =
-      f"""{"wallSec":$w%.3f,"maxTaskMs":$mx,""" +
-      f""""worstStageMedianTaskMs":$med,"worstStageTasks":$n,""" +
-      f""""planSkewMarks":$marks}"""
-    val line = s"""{"dir":${jstr(dir)},""" +
-      s""""skewOff":${leg(wOff, mxOff, medOff, nOff, marksOff)},""" +
-      s""""skewOn":${leg(wOn, mxOn, medOn, nOn, marksOn)},""" +
-      f""""maxTaskRatioOffOverOn":${mxOff.toDouble / math.max(1L, mxOn)}%.2f}"""
-    Files.writeString(Paths.get(out), line + "\n")
-    println(line)
-    spark.stop()
-  }
-
-  /** Straggler (slow-node) mitigation on real executor JVMs —
-    * `runMain graft.Scale straggler <dir> <masterUrl> <baseTaskMs>
-    * <outJson>`. One executor is made a 4×-slow node by injection (every
-    * task on the lexicographically-first executor dilates its simulated
-    * work 4×, modeling a contended or degraded host). The mitigation
-    * under test is PULL-BASED SCHEDULING GRANULARITY — the lever the
-    * engine actually controls via partition sizing: with one wave
-    * (32 tasks on 32 slots) the slow node's tasks gate the stage no
-    * matter what; with many waves of small tasks (256 partitions, same
-    * total work) fast executors keep pulling while the slow node
-    * finishes fewer tasks, and the per-executor task-count distribution
-    * in the artifact shows the scheduler adapting. Spark's OTHER
-    * mitigation, speculative re-execution, is structurally
-    * unmeasurable on one machine and this is documented rather than
-    * faked: a speculative copy is never scheduled on the same HOST as
-    * the running attempt (TaskSetManager's hasAttemptOnHost exclusion),
-    * and every local-cluster executor shares localhost — verified
-    * empirically (quantile 0.5, multiplier 1.5, 100 ms interval, 8 tasks
-    * 12× over median: zero speculative launches). Workload: a lineitem
-    * scan (real corpus bytes) plus a per-task sleep of baseTaskMs·32/P
-    * (4× that on the slow node), so total simulated work is identical
-    * across legs. */
-  def stragglerProbe(dir: String, master: String, baseTaskMs: Long,
-      out: String): Unit = {
-    val spark = Sessions.forMaster(master, "32")
-    // wait for executor registration, as in clusterProbe
-    val wantExecs = "local-cluster\\[(\\d+)".r.findFirstMatchIn(master)
-      .map(_.group(1).toInt).getOrElse(0)
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (spark.sparkContext.getExecutorMemoryStatus.size < wantExecs + 1 &&
-           System.nanoTime() < deadline) Thread.sleep(200)
-    warm(spark, dir)
-    val target = spark.sparkContext.parallelize(1 to 256, 32)
-      .mapPartitions(_ =>
-        Iterator(org.apache.spark.SparkEnv.get.executorId))
-      .collect().distinct.filterNot(_ == "driver").sorted.head
-    def leg(partitions: Int): String = {
-      val perTaskMs = baseTaskMs * 32 / partitions
-      val rdd = Tables.load(spark, dir, "lineitem").repartition(partitions)
-        .rdd.mapPartitions { it =>
-          val slow = org.apache.spark.SparkEnv.get.executorId == target
-          Thread.sleep(if (slow) perTaskMs * 4 else perTaskMs)
-          it
-        }
-      val listener = new TaskDurations
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val n = rdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      val byExec = listener.tasksByExecutor.toSeq.sortBy(_._1)
-        .map { case (e, c) => s"${jstr(e)}:$c" }.mkString("{", ",", "}")
-      spark.catalog.clearCache()
-      System.gc()
-      f"""{"partitions":$partitions,"perTaskMs":$perTaskMs,"rows":$n,""" +
-        f""""wallSec":$wall%.3f,"tasksByExecutor":$byExec}"""
-    }
-    val coarse = leg(32)
-    val fine = leg(256)
-    val line = s"""{"dir":${jstr(dir)},"master":${jstr(master)},""" +
-      s""""slowExecutor":${jstr(target)},"slowFactor":4,""" +
-      s""""baseTaskMs":$baseTaskMs,"oneWave":$coarse,"manyWaves":$fine}"""
-    Files.writeString(Paths.get(out), line + "\n")
-    println(line)
-    spark.stop()
-  }
 }

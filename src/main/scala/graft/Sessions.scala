@@ -16,6 +16,14 @@ import org.apache.spark.sql.SparkSession
   *   the flag it reads as a nanosecond Long and the loader normalizes it
   *   (Tables.normalizeTs — which also handles the current MICROS-NTZ
   *   vintage, where the flag is simply inert).
+  * - extensions: every session is built with [[functions.GraftExtensions]]
+  *   (the optimizer rule, the as-of planner strategy and the SQL functions),
+  *   so derived sessions (`newSession`, streaming clones) keep them too. A
+  *   server that builds its own sessions sets
+  *   `spark.sql.extensions=graft.functions.GraftExtensions` instead; a
+  *   user's own `spark.sql.extensions` list applies on top of ours. The
+  *   extensions reach only a session this call creates: `getOrCreate`
+  *   returns an already-running session as it is.
   */
 object Sessions {
   def local(cpus: String): SparkSession = build(localDefaults(new SparkConf(), cpus))
@@ -54,18 +62,8 @@ object Sessions {
         .getOrElse(new java.io.File("target/scala-2.13/classes").getAbsolutePath)
       builder.config("spark.executor.extraClassPath", classes)
     }
-    val spark = builder.getOrCreate()
+    val spark = builder.withExtensions(new functions.GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the library's optimizer extension (a cluster would set
-    // spark.sql.extensions=graft.functions.GraftExtensions instead);
-    // idempotent across getOrCreate-shared sessions
-    if (!spark.experimental.extraOptimizations.contains(plans.RangeBinJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.RangeBinJoin
-    // planner strategy for the native as-of join (plans.AsOfJoinPlan)
-    if (!spark.experimental.extraStrategies.contains(plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ plans.AsOfJoinStrategy
     spark
   }
 }

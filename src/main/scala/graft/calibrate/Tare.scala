@@ -50,7 +50,7 @@ object Tare {
     * then sums to k−1, so for k-mers of one length the constant lies in the
     * column space and the no-intercept fit predicts exactly what the
     * reference's fit-with-intercept on the normalized histogram
-    * (Kmers.dinucFeatures) predicts, without the collinearity an intercept
+    * (Tare.scala:88-101) predicts, without the collinearity an intercept
     * column would add. A k-mer with no valid context (the reference
     * asserts, Tare.scala:91) is left out of the fit and of the mean, keeps
     * its raw count, and is counted in a warning.
@@ -181,7 +181,7 @@ object Tare {
   }
 
   /** ACGT-ordered dinucleotides — index b = 4·idx(first) + idx(second),
-    * the same ordering Kmers.dinucFeatures bins into. */
+    * the same ordering [[contexts]] counts in. */
   val dinucs: Seq[String] = for (x <- "ACGT"; y <- "ACGT") yield s"$x$y"
 
   /** The DuckDB mirror of [[kmerBiasFit]]'s solve: CTEs from a relation
@@ -241,10 +241,7 @@ object Tare {
     */
   def calibrateTxLenBias(muHat: DataFrame, tLen: DataFrame): DataFrame = {
     val tid = muHat.schema("tid")
-    val (mus, lens) = muHat.select(col("tid"), col("muHat"), lit(true))
-      .union(tLen.select(col("tid").cast(tid.dataType), col("len").cast("double"), lit(false)))
-      .collect()
-      .partition(_.getBoolean(2))
+    val (mus, lens) = lengthInputs(muHat, tLen).collect().partition(_.getBoolean(2))
     val lenOf = lens.map(r => r.get(0) -> r.getDouble(1)).toMap
     val cal = lengthBias(mus.map(_.getDouble(1)),
       mus.map(r => lenOf.getOrElse(r.get(0), Double.NaN)))
@@ -252,6 +249,15 @@ object Tare {
       mus.indices.map(i => Row(mus(i).get(0), cal(i))).asJava,
       StructType(Seq(tid, StructField("muHat", DoubleType))))
   }
+
+  /** The one relation [[calibrateTxLenBias]] collects: `muHat`'s
+    * (tid, µ̂, true) rows, then `tLen`'s (tid, len, false) rows with tid
+    * cast to `muHat`'s tid type. It is the calibration's only distributed
+    * part, so `Plans.auditSubstitutes` audits it. */
+  def lengthInputs(muHat: DataFrame, tLen: DataFrame): DataFrame =
+    muHat.select(col("tid"), col("muHat"), lit(true))
+      .union(tLen.select(col("tid").cast(muHat.schema("tid").dataType),
+        col("len").cast("double"), lit(false)))
 
   /** The length-bias calibration on the driver (Tare.scala:150-193). As-built
     * semantics preserved exactly, including the quirk that the fitted line

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.kmer.KmerGenerator
 
-/** Every graft native SQL function, in one table that both
-  * [[GraftFunctions.registerAll]] and [[GraftExtensions]] are built from. */
+/** Every graft native SQL function, in one table that [[GraftExtensions]]
+  * injects. */
 object GraftFunctions {
   type Description = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
@@ -37,23 +36,19 @@ object GraftFunctions {
       e => HilbertValue(e(0), e(1))),
     fn("hll_registers", classOf[HllRegisterAgg], 1, "hll_registers(x)")(
       e => HllRegisterAgg(e(0)).toAggregateExpression()))
-
-  /** Register every function on a live session (local tools, tests,
-    * notebooks), e.g. `SELECT kmer_explode(sequence, 8) FROM reads`. */
-  def registerAll(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, build) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, build)
-    }
 }
 
-/** `SparkSessionExtensions` hook — the deployment integration point: a
-  * cluster sets `spark.sql.extensions=graft.functions.GraftExtensions`
-  * and every session (including Thrift/Connect-served ones that never
-  * run library code) gets the native functions at build time, instead of
-  * each application calling registerAll. Injection happens before any
-  * query is parsed, so plain SQL like
+/** The library's session extensions: the native SQL functions, the
+  * band-join rewrite and the as-of join strategy. This class is the one
+  * way they reach a session. [[graft.Sessions]] builds every session of
+  * the library's own entry points with it; a server that builds sessions
+  * itself (Thrift, Connect) sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Injection
+  * happens before any query is parsed, so plain SQL like
   * `SELECT dot_product(a, b)` / `SELECT kmer_explode(seq, 8)` resolves
-  * with no Scala entry point involved.
+  * with no Scala entry point involved. Sessions derived by `newSession`
+  * keep the injections. An injected rule can be switched off per session
+  * with `spark.sql.optimizer.excludedRules=graft.plans.RangeBinJoin`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -52,9 +52,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: AsOfJoinPlan → SortMergeAsOfJoinExec. Registered via
-  * `spark.experimental.extraStrategies` in Sessions (a cluster would use
-  * SparkSessionExtensions.injectPlannerStrategy). */
+/** Planner strategy: AsOfJoinPlan → SortMergeAsOfJoinExec. Injected by
+  * [[graft.functions.GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>

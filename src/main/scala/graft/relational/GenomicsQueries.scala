@@ -109,6 +109,19 @@ object GenomicsQueries {
       .orderBy($"exon_id")
   }
 
+  /** q25's two inputs, keyed by the doc id as a string: µ̂, the token-count
+    * share of the 20 lowest-id documents, and their lengths (n_chars). */
+  def lengthCalibrationInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val docs = Tables.documents(s, d).filter($"doc_id" < 20)
+    val nt = docs.select($"doc_id".cast("string").as("tid"),
+      size(split($"text", " ")).cast("double").as("nt"))
+    val mu = nt.crossJoin(broadcast(nt.agg(sum($"nt").as("tot"))))
+      .select($"tid", ($"nt" / $"tot").as("muHat"))
+    val tLen = docs.select($"doc_id".cast("string").as("tid"), $"n_chars".as("len"))
+    (mu, tLen)
+  }
+
   private val kmSql =
     """km AS (
       |  SELECT doc_id, substr(text, i, 8) AS kmer
@@ -346,13 +359,7 @@ object GenomicsQueries {
     Q("q25_length_calibration",
       (s, d) => {
         import s.implicits._
-        val docs = Tables.documents(s, d).filter($"doc_id" < 20)
-        val nt = docs.select($"doc_id".cast("string").as("tid"),
-          size(split($"text", " ")).cast("double").as("nt"))
-        val mu = nt.crossJoin(broadcast(nt.agg(sum($"nt").as("tot"))))
-          .select($"tid", ($"nt" / $"tot").as("muHat"))
-        val tLen = docs.select($"doc_id".cast("string").as("tid"),
-          $"n_chars".as("len"))
+        val (mu, tLen) = lengthCalibrationInputs(s, d)
         graft.calibrate.Tare.calibrateTxLenBias(mu, tLen)
           .select($"tid".cast("long").as("doc_id"), round($"muHat", 6).as("mu_cal"))
           .orderBy($"doc_id")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.kmer.Kmers
+import graft.utils.KmerColumns
 
 /** The native KmerGenerator must agree with Scala's `String.sliding` —
   * the reference's own definition of k-merization (Index.scala:87-89) —
@@ -39,7 +40,6 @@ class KmersSuite extends SparkSuite {
   }
 
   test("kmer_explode is callable from plain SQL after registration") {
-    graft.functions.GraftFunctions.registerAll(spark)
     Seq("CAATCC", "GCA").toDF("sequence").createOrReplaceTempView("kmer_sql_test")
     val got = spark.sql(
       "SELECT kmer_explode(sequence, 3) AS km FROM kmer_sql_test")
@@ -51,7 +51,7 @@ class KmersSuite extends SparkSuite {
   test("array form and generator form agree") {
     val cases = Seq("CAATCCTTCG", "日本語abc", "", "xy")
     val viaArray = cases.toDF("s")
-      .select(explode(Kmers.kmers($"s", 3)).as("km"))
+      .select(explode(KmerColumns.kmers($"s", 3)).as("km"))
       .collect().map(_.getString(0)).sorted.toSeq
     val viaGen = cases.toDF("s")
       .select(Kmers.kmerExplode($"s", 3).as("km"))

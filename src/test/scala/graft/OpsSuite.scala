@@ -392,18 +392,16 @@ class OpsSuite extends SparkSuite {
       .select(graft.functions.DotProduct.dot_product($"x", $"y").as("d")).collect()
     assert(edges(0).isNullAt(0) && edges(1).isNullAt(0))
     assert(edges(2).getDouble(0) === 0.0)
-    // SQL registration path
-    graft.functions.GraftFunctions.registerAll(spark)
+    // SQL name, injected by the session's extensions
     val sqlD = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect()
     assert(sqlD.head.getDouble(0) === 11.0)
   }
 
-  test("registerAll exposes the native functions to plain SQL; extensions inject") {
+  test("every session resolves the native functions by SQL name; extensions inject") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
     import graft.functions.HilbertValue
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT k.kmer, dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d
         |FROM (SELECT 'ACGTA' AS seq)
@@ -416,9 +414,8 @@ class OpsSuite extends SparkSuite {
       .collect().head.getSeq[Int](0)
     assert(regs.length === 256 && regs.count(_ > 0) === 3)
     assert(spark.sql("SELECT hilbert_value(0, 0) AS h").collect().head.getLong(0) === 0L)
-    // the cluster-deployment hook (spark.sql.extensions) injects the same
-    // builders at session build time; pin that injection itself is sound
-    // and covers every function, hilbert_value included
+    // the extension class injects every function, hilbert_value included,
+    // and each injected builder is sound
     val injected = scala.collection.mutable.Map[String, Seq[Expression] => Expression]()
     new graft.functions.GraftExtensions().apply(
       new org.apache.spark.sql.SparkSessionExtensions {
@@ -554,8 +551,7 @@ class OpsSuite extends SparkSuite {
           "codegen z must equal the driver-side interleave")
       }
     } finally spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
-    // SQL registration
-    graft.functions.GraftFunctions.registerAll(spark)
+    // SQL name
     assert(spark.sql("SELECT z_value(5, 3) AS z").collect().head.getLong(0) === 27L)
     // layout claim (sf0.01 — bins at sf0.001 are too small to separate
     // from noise): a point predicate on the NON-sort dimension
@@ -637,19 +633,15 @@ class OpsSuite extends SparkSuite {
       .select(unix_micros($"ts").as("p_us"), $"value".as("p_value"))
     def naiveJoin = err.join(purch, abs($"p_us" - $"err_us") <= lit(120000000L))
 
-    val withoutRule = {
-      val saved = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations =
-        saved.filterNot(_ == graft.plans.RangeBinJoin)
-      try {
-        val df = naiveJoin
-        (df.queryExecution.executedPlan.toString, df.collect())
-      } finally spark.experimental.extraOptimizations = saved
+    val withoutRule = withConf("spark.sql.optimizer.excludedRules",
+        graft.plans.RangeBinJoin.ruleName) {
+      val df = naiveJoin
+      (df.queryExecution.executedPlan.toString, df.collect())
     }
     assert(withoutRule._1.contains("NestedLoop"),
       "a pure band join must otherwise plan as a nested-loop join")
 
-    val df = naiveJoin // session rule active (Sessions.local injects it)
+    val df = naiveJoin // session rule active (GraftExtensions injects it)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("NestedLoop"),
       s"the rule must replace the nested loop:\n$plan")
@@ -667,6 +659,16 @@ class OpsSuite extends SparkSuite {
         abs($"p_s" - $"err_s") <= lit(120L))
     assert(dbl.queryExecution.executedPlan.toString.contains("NestedLoop"),
       "the rewrite is integral-only; double inputs stay on the exact plan")
+  }
+
+  test("a derived session keeps the extensions: band-join rewrite and SQL functions") {
+    val derived = spark.newSession()
+    val plan = SparkEntry.queries("q84_auto_range_join")(derived, sf)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoop"),
+      s"newSession must keep the band-join rewrite:\n$plan")
+    assert(derived.sql("SELECT hilbert_value(0, 0) AS h").collect()
+      .head.getLong(0) === 0L)
   }
 
   test("WAV decode round-trips the header and degrades on junk, not throws") {
@@ -835,8 +837,7 @@ class OpsSuite extends SparkSuite {
           HilbertValue.xy2d(16, r.getAs[Long]("user_id"), r.getAs[Long]("sec")))
       }
     } finally spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
-    // SQL registration
-    graft.functions.GraftFunctions.registerAll(spark)
+    // SQL name
     assert(spark.sql("SELECT hilbert_value(0, 0) AS h").collect()
       .head.getLong(0) === 0L)
   }

@@ -22,10 +22,14 @@ trait SparkSuite extends AnyFunSuite {
     * which sizes the byte ranges of a file scan, and restores the previous
     * value after: every suite shares one session, so a leaked split size
     * would change other suites' scans. */
-  def withSplitBytes[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.files.maxPartitionBytes"
+  def withSplitBytes[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", bytes.toString)(body)
+
+  /** Runs `body` with the session conf `key` set to `value`, and restores
+    * the previous value after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, bytes)
+    spark.conf.set(key, value)
     try body
     finally before match {
       case Some(v) => spark.conf.set(key, v)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import scala.math.{exp, log}
 import scala.util.Random
 import graft.calibrate.Tare
-import graft.kmer.Kmers
+import graft.utils.KmerColumns
 import graft.utils.TranscriptGenerator
 
 /** Port of the reference's TareSuite invariants
@@ -17,7 +17,7 @@ class TareSuite extends SparkSuite {
   import spark.implicits._
 
   private def featurize(kmer: String): Array[Double] =
-    Seq(kmer).toDF("kmer").select(Kmers.dinucFeatures(col("kmer")))
+    Seq(kmer).toDF("kmer").select(KmerColumns.dinucFeatures(col("kmer")))
       .head().getSeq[Double](0).toArray
 
   test("can't process illegal k-mers") { // TareSuite.scala:36-46
@@ -68,13 +68,13 @@ class TareSuite extends SparkSuite {
 
   /** Test-side reference for the k-mer bias fit: spark.ml
     * LinearRegression of ln(count) on the normalized dinucleotide histogram
-    * (Kmers.dinucFeatures) plus an intercept, its residual rescaled to the
+    * (KmerColumns.dinucFeatures) plus an intercept, its residual rescaled to the
     * sample mean — the reference's design (Tare.scala:110-136).
     * @return kmer → calibrated abundance */
   private def mlReference(kmers: DataFrame): Map[String, Double] = {
     val f = kmers
       .withColumn("label", functions.log($"count".cast("double")))
-      .withColumn("features", array_to_vector(Kmers.dinucFeatures($"kmer")))
+      .withColumn("features", array_to_vector(KmerColumns.dinucFeatures($"kmer")))
     val mean = math.log(f.agg(avg($"count")).head().getDouble(0))
     new LinearRegression().setFitIntercept(true).fit(f).transform(f)
       .select($"kmer", functions.exp(lit(mean) + $"label" - $"prediction"))
