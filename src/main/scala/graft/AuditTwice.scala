@@ -13,14 +13,14 @@ object AuditTwice {
     val spark = Sessions.local("4")
     val sf = "/root/testdata/sf0.001"
     val a1 = Plans.audit(spark, sf, collectText = false)
-    spark.catalog.clearCache()
+    obs.hygiene(spark)
     // run one streaming query TO COMPLETION between the passes: round 8
     // proved the memo/stream interaction is the coupling point (pinned
     // memo storage taxed the streaming family), so the determinism gate
     // must also hold after a streaming query has executed — state-store
     // providers, sink tables, and watermark bookkeeping included.
     SparkEntry.queries("q70_stream_hourly")(spark, sf).count()
-    spark.catalog.clearCache()
+    obs.hygiene(spark)
     val a2 = Plans.audit(spark, sf, collectText = false)
     println(s"PASS1: ${Plans.summaryLine(a1)}")
     println(s"PASS2: ${Plans.summaryLine(a2)}")

@@ -10,6 +10,11 @@ import java.nio.file.{Files, Paths}
   * A query that throws is NOT timed-as-crashed-and-forgotten: it is excluded
   * from `queries`/total and its message lands in `errors`, and the process
   * exits non-zero so the failure is loud.
+  *
+  * The methodology it shares with Scale (warm-up, best-of-2, inter-query
+  * hygiene, SPARK_GRAFT_ONLY selection, family totals, the JSON line)
+  * lives in [[graft.obs]]; what is Bench's own is the canary legs, the
+  * per-query attribution and the context [[verdict]].
   */
 object Bench {
   /** Committed quiet anchor for the ABSOLUTE context checks (r13 verdict
@@ -45,7 +50,7 @@ object Bench {
     * sf, or its own contextVerdict is not "ok" — an anchor that cannot be
     * traced to a committed clean run is recorded as inapplicable rather
     * than silently trusted. */
-  private def loadAnchor(path: String): Either[String, Anchor] = try {
+  private[graft] def loadAnchor(path: String): Either[String, Anchor] = try {
     if (!Files.isRegularFile(Paths.get(path)))
       return Left(s"anchor file not found: $path")
     val line = Files.readString(Paths.get(path)).linesIterator
@@ -71,24 +76,124 @@ object Bench {
     Left(s"anchor file unreadable: $path (${e.getClass.getSimpleName})")
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** The context verdict of one measurement pass (`text`) and the trips
+    * and load statistics it derives from. */
+  final case class Verdict(slowTrips: Seq[String], fastTrips: Seq[String],
+      anchorTrips: Seq[String], loadMedian: Double,
+      loadPeak: Option[(String, Double)], text: String)
+
+  /** The context verdict as a pure function of values the artifact
+    * records, so a committed bench_runs/ artifact replays to its own
+    * `contextVerdict` and `anchor.tripped`.
+    * @param first  canary medians of the first leg, (q70, q03)
+    * @param mid    the same at the halfway mark
+    * @param last   the same after the whole surface
+    * @param total  the pass's summed best-of-2 seconds
+    * @param loads  host 1-min load average per query, in run order
+    *   (negative when the platform does not report one)
+    * @param anchor the quiet anchor, when its absolute checks apply
+    */
+  private[graft] def verdict(first: Seq[Double], mid: Seq[Double], last: Seq[Double],
+      total: Double, loads: Seq[(String, Double)], anchor: Option[Anchor]): Verdict = {
+    val streamRatio = last(0) / mid(0)
+    val batchRatio = last(1) / mid(1)
+    // direction matters: a canary ABOVE its band means the back half ran
+    // slower (the contention signature — per-query numbers are inflated);
+    // BELOW the band means the back half ran faster (a warming/quieting
+    // drift — totals are honest-or-conservative, never inflated). Both
+    // r12 quiet runs (120.8/120.3 s, the fastest recorded) tripped only
+    // the low side, which the old single-word "degraded" mislabeled.
+    val slowTrips = Seq(
+      Option.when(streamRatio > 1.3)(f"q70 last/mid $streamRatio%.2f > 1.3"),
+      Option.when(batchRatio > 1.1)(f"q03 last/mid $batchRatio%.2f > 1.1")).flatten
+    val fastTrips =
+      Option.when(batchRatio < 0.9)(f"q03 last/mid $batchRatio%.2f < 0.9").toSeq
+    // ABSOLUTE anchor checks (r13 verdict #1b): uniform contention keeps
+    // the last/mid ratios in-band because every leg is inflated alike —
+    // the r13 official run read canary ratios 0.75/0.92 ("ok") while its
+    // absolutes sat at 2-10x the same binary's quiet values. Against the
+    // committed quiet anchor, two independent trips: (a) BOTH first-leg
+    // canary medians above 1.3x their anchor (one canary alone can bounce
+    // — q70 carries ±15% micro-batch jitter); (b) the whole-run total
+    // above 1.25x the anchor total (catches a burst that hits mid-run
+    // blocks after healthy first legs — the r12 incident shape — at the
+    // only resolution that matters, the recorded headline). Either trip
+    // marks the pass degraded and arms the one bounded rerun. Only
+    // meaningful under the anchor's own conditions (sf/cpus match, full
+    // surface); a genuine >25% code regression reruns once and keeps the
+    // still-slow pass — both verdicts land in the artifact, so the
+    // series stays auditable. A loadavg spike ALONE (self-load from a
+    // fully-parallel block reads 10+ on quiet runs, e.g. r12's q26 peak
+    // 10.3 at median 3.4) stays a post-hoc queryAttr adjudication: it
+    // cannot distinguish self-load from neighbors, but any spike big
+    // enough to matter moves the total through trip (b).
+    // Trip (a) is a FIRST-PASS-ONLY signal (ADVICE r14): on a rerun pass
+    // the first legs are measured post-surface-warm (q70 plateaus ~0.9 s
+    // vs ~1.2-1.4 s fresh), so they sit far below a fresh-leg anchor and
+    // (a) is nearly unreachable there — trip (b), the total, carries all
+    // the rerun-pass signal. That is fine: (a) exists to catch a
+    // contended LAUNCH before 240 queries get paid for, which only the
+    // first pass experiences.
+    val anchorTrips = anchor.toSeq.flatMap { a => Seq(
+      Option.when(first(0) > 1.3 * a.q70First && first(1) > 1.3 * a.q03First)(
+        f"both first-leg canaries >1.3x quiet anchor " +
+          f"(q70 ${first(0)}%.2f vs ${a.q70First}%.2f, " +
+          f"q03 ${first(1)}%.2f vs ${a.q03First}%.2f)"),
+      Option.when(total > 1.25 * a.total)(
+        f"total $total%.1f s >1.25x quiet anchor ${a.total}%.1f s")).flatten
+    }
+    // loadavg spike locator: the canary legs sample context at exactly
+    // three instants, and a contention burst strictly between legs is
+    // invisible to them (measured mid-round-12: genomics block 2-3×
+    // inflated, both canaries in-band). The per-query series is the
+    // evidence; this names the peak so a judge starts there.
+    // Threshold (peak > 2×median + 2) is a heuristic calibrated on that
+    // incident: quiet series median ≈1-2, contended block read 3-6.
+    val known = loads.map(_._2).filter(_ >= 0)
+    val loadMedian = if (known.isEmpty) 0.0 else known.sorted.apply(known.size / 2)
+    val loadPeak = Option.when(known.nonEmpty)(loads.maxBy(_._2))
+    val spikeNote = loadPeak match {
+      case Some((n, load)) if load > 2 * loadMedian + 2 =>
+        // the in-band clause is only claimable when no canary tripped
+        // (ADVICE r12: the old unconditional text contradicted a
+        // degraded/shifted-faster verdict it was appended to)
+        val canaryState =
+          if (slowTrips.isEmpty && fastTrips.isEmpty)
+            " even though the canary legs sat in-band"
+          else ""
+        f"; loadavg spike mid-run at $n ($load%.1f vs median " +
+          f"$loadMedian%.1f) - queries near it may be inflated$canaryState" +
+          "; see queryAttr"
+      case _ => ""
+    }
+    // auto-verdict (round-11 verdict #1): the artifact states whether its
+    // own measuring context held, so adjudicating a round-over-round
+    // delta never needs repo folklore. Thresholds are the calibrated
+    // bands from the canary block in main.
+    val text =
+      (if (slowTrips.nonEmpty)
+        "degraded (" + (slowTrips ++ fastTrips ++ anchorTrips).mkString("; ") +
+          "): back half ran slower - believe per-query deltas with " +
+          "suspicion; see contextAttr for contention vs GC"
+      else if (anchorTrips.nonEmpty)
+        "degraded-absolute (" + (anchorTrips ++ fastTrips).mkString("; ") +
+          "): ratios in-band but the run sits far above the committed " +
+          "quiet anchor - uniform contention; see contextAttr/queryAttr"
+      else if (fastTrips.nonEmpty)
+        "shifted-faster (" + fastTrips.mkString("; ") +
+          "): back half ran faster than mid-run - totals are honest or " +
+          "conservative, not inflated"
+      else "ok: both canaries in-band") + spikeNote
+    Verdict(slowTrips, fastTrips, anchorTrips, loadMedian, loadPeak, text)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = obs.cpus
     // SPARK_GRAFT_ONLY (same prefix filter as Verify/Plans): local
     // iteration harness for timing a handful of queries under the exact
-    // bench conditions (warm-up, best-of-2, inter-query hygiene). The
-    // driver sets no filter, so official runs always cover everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+    // bench conditions (warm-up, best-of-2, inter-query hygiene).
+    val only = obs.only
     // a filtered run must never clobber the official artifact: its totals
     // are not comparable to a full-surface run, so it defaults to a
     // scratch path AND the JSON line records the filter either way
@@ -100,13 +205,14 @@ object Bench {
     // inapplicable-with-reason instead of inventing constants
     // (r14 verdict #2).
     val anchor: Either[String, Anchor] =
-      sys.env.get("SPARK_GRAFT_ANCHOR_FILE").map(loadAnchor)
-        .getOrElse(loadAnchor(DefaultAnchorFile))
+      loadAnchor(sys.env.getOrElse("SPARK_GRAFT_ANCHOR_FILE", DefaultAnchorFile))
     anchor match {
       case Right(a) => println(s"[bench] anchor from ${a.file}: " +
         f"total ${a.total}%.1f s, q70First ${a.q70First}%.2f, q03First ${a.q03First}%.2f")
       case Left(reason) => println(s"[bench] anchor inapplicable: $reason")
     }
+    val anchorApplicable = anchor.isRight && only.isEmpty &&
+      cpus == AnchorCpus && sfDir.stripSuffix("/").endsWith(AnchorSfSuffix)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg: Double = osBean.getSystemLoadAverage
     // Pre-flight load gate (r13 verdict #1a): at this point the process
@@ -128,26 +234,8 @@ object Bench {
       gateWaitedSec += 30
     }
     val loadAtStart = loadAvg
-    val spark = Sessions.local(cpus)
-    // warm-up: pull every table's BYTES through the page cache (count()
-    // alone reads only footers/metadata, leaving the first timed queries
-    // to pay the cold read — observed as a 130 s vs 170+ s whole-run
-    // spread depending on cache state) and run one cheap aggregation so
-    // JIT/codegen startup doesn't land on the first timed query
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      val p = Paths.get(s"$sfDir/$t.parquet")
-      if (Files.isRegularFile(p)) {
-        // stream through a fixed buffer: warms the page cache without
-        // materializing the whole file in driver heap (a >heap-sized table
-        // would OOM the bench before any query ran)
-        val in = Files.newInputStream(p)
-        try { val buf = new Array[Byte](1 << 20); while (in.read(buf) >= 0) () }
-        finally in.close()
-      }
-      Tables.load(spark, sfDir, t).count()
-    }
-    SparkEntry.queries.get("q06_forecast_revenue").foreach(_(spark, sfDir).count())
+    val spark = obs.session()
+    obs.warm(spark, sfDir)
 
     // context canaries: two cheap queries timed at three points each —
     // right after warm-up (first), after half the surface (mid), and
@@ -201,7 +289,14 @@ object Bench {
     final case class LegAttr(wall: Double, cpu: Double, gc: Double, load: Double) {
       def json: String =
         f"""{"wallSec":$wall%.3f,"cpuSec":$cpu%.3f,"gcSec":$gc%.3f,""" +
-        f""""cpuPerWall":${if (wall > 0) cpu / wall else 0.0}%.2f,"loadAvg":$load%.2f}"""
+        f""""cpuPerWall":$cpuPerWall%.2f,"loadAvg":$load%.2f}"""
+      def cpuPerWall: Double = if (wall > 0) cpu / wall else 0.0
+    }
+    /** `body` with the wall, process CPU, GC and host load of its window. */
+    def attributed[T](body: => T): (T, LegAttr) = {
+      val w0 = System.nanoTime(); val c0 = procCpuSec; val g0 = gcSec
+      val r = body
+      (r, LegAttr((System.nanoTime() - w0) / 1e9, procCpuSec - c0, gcSec - g0, loadAvg))
     }
     // median-of-5 per leg: min-of-N estimates a floor that itself drifts
     // with the warming plateau (measured legs 0.46 vs 0.53 on a healthy
@@ -209,32 +304,24 @@ object Bench {
     // and averages scheduling jitter; ~15 s of total overhead across all
     // six legs buys the instrument its calibration
     def canaryLeg(): (Seq[Double], LegAttr) = {
-      val w0 = System.nanoTime(); val c0 = procCpuSec; val g0 = gcSec
-      val ts = canaryNames.map { n =>
-        val runs = Seq.fill(5)(canaryOnce(n)).sorted
-        runs(2)
-      }
-      val attr = LegAttr((System.nanoTime() - w0) / 1e9,
-        procCpuSec - c0, gcSec - g0, loadAvg)
+      val leg = attributed(canaryNames.map(n => Seq.fill(5)(canaryOnce(n)).sorted.apply(2)))
       // inter-leg hygiene (ADVICE r11): the canaries cache/stage
       // internally like any query; without this the query timed right
       // after a leg is measured against canary residue, unlike the
       // other 243. Done AFTER the attribution snapshot so the explicit
       // System.gc doesn't pollute the leg's own gcSec.
-      spark.catalog.clearCache()
-      System.gc()
-      (ts, attr)
+      obs.hygiene(spark)
+      leg
     }
 
-    def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    val timed = SparkEntry.queries.toSeq.filter(t => keep(t._1)).sortBy(_._1)
+    val timed = SparkEntry.queries.toSeq.filter(t => obs.keeps(only)(t._1)).sortBy(_._1)
     val midAt = timed.size / 2
 
     /** One full measurement pass over the surface, with its own canary
-      * legs and verdict inputs — factored out so a context-degraded pass
-      * can be retried once (round-12 verdict #2). */
+      * legs and verdict — factored out so a context-degraded pass can be
+      * retried once (round-12 verdict #2). */
     final case class Run(
-        results: Seq[(String, Double, Option[String], LegAttr)],
+        results: Seq[(String, Either[String, Double], LegAttr)],
         canaryFirst: Seq[Double], canaryMid: Seq[Double],
         canaryLast: Seq[Double],
         attrFirst: LegAttr, attrMid: LegAttr, attrLast: LegAttr,
@@ -244,118 +331,21 @@ object Bench {
         // the pass's true wall work reconstructible as total + Σ values,
         // and per-query claims for memo consumers auditable)
         memoBuild: Map[String, Double]) {
-      val ok: Seq[(String, Double, Option[String], LegAttr)] =
-        results.filter(_._3.isEmpty)
-      val failed: Seq[(String, String)] =
-        results.collect { case (n, _, Some(m), _) => n -> m }
+      val ok: Seq[(String, Double)] = results.collect { case (n, Right(t), _) => n -> t }
+      val failed: Seq[(String, String)] = results.collect { case (n, Left(m), _) => n -> m }
       val total: Double = ok.map(_._2).sum
-      val streamRatio: Double = canaryLast(0) / canaryMid(0)
-      val batchRatio: Double = canaryLast(1) / canaryMid(1)
-      // direction matters: a canary ABOVE its band means the back half ran
-      // slower (the contention signature — per-query numbers are inflated);
-      // BELOW the band means the back half ran faster (a warming/quieting
-      // drift — totals are honest-or-conservative, never inflated). Both
-      // r12 quiet runs (120.8/120.3 s, the fastest recorded) tripped only
-      // the low side, which the old single-word "degraded" mislabeled.
-      val slowTrips: Seq[String] = Seq(
-        Option.when(streamRatio > 1.3)(f"q70 last/mid $streamRatio%.2f > 1.3"),
-        Option.when(batchRatio > 1.1)(
-          f"q03 last/mid $batchRatio%.2f > 1.1")).flatten
-      val fastTrips: Seq[String] = Seq(
-        Option.when(batchRatio < 0.9)(
-          f"q03 last/mid $batchRatio%.2f < 0.9")).flatten
-      // ABSOLUTE anchor checks (r13 verdict #1b): uniform contention keeps
-      // the last/mid ratios in-band because every leg is inflated alike —
-      // the r13 official run read canary ratios 0.75/0.92 ("ok") while its
-      // absolutes sat at 2-10x the same binary's quiet values. Against the
-      // committed quiet anchor, two independent trips: (a) BOTH first-leg
-      // canary medians above 1.3x their anchor (one canary alone can bounce
-      // — q70 carries ±15% micro-batch jitter); (b) the whole-run total
-      // above 1.25x the anchor total (catches a burst that hits mid-run
-      // blocks after healthy first legs — the r12 incident shape — at the
-      // only resolution that matters, the recorded headline). Either trip
-      // marks the pass degraded and arms the one bounded rerun. Only
-      // meaningful under the anchor's own conditions (sf/cpus match, full
-      // surface); a genuine >25% code regression reruns once and keeps the
-      // still-slow pass — both verdicts land in the artifact, so the
-      // series stays auditable. A loadavg spike ALONE (self-load from a
-      // fully-parallel block reads 10+ on quiet runs, e.g. r12's q26 peak
-      // 10.3 at median 3.4) stays a post-hoc queryAttr adjudication: it
-      // cannot distinguish self-load from neighbors, but any spike big
-      // enough to matter moves the total through trip (b).
-      // Trip (a) is a FIRST-PASS-ONLY signal (ADVICE r14): on a rerun pass
-      // the first legs are measured post-surface-warm (q70 plateaus ~0.9 s
-      // vs ~1.2-1.4 s fresh), so they sit far below a fresh-leg anchor and
-      // (a) is nearly unreachable there — trip (b), the total, carries all
-      // the rerun-pass signal. That is fine: (a) exists to catch a
-      // contended LAUNCH before 240 queries get paid for, which only the
-      // first pass experiences.
-      val anchorApplicable: Boolean = anchor.isRight && only.isEmpty &&
-        cpus == AnchorCpus && sfDir.stripSuffix("/").endsWith(AnchorSfSuffix)
-      val anchorTrips: Seq[String] = anchor match {
-        case Right(a) if anchorApplicable => Seq(
-          Option.when(canaryFirst(0) > 1.3 * a.q70First &&
-              canaryFirst(1) > 1.3 * a.q03First)(
-            f"both first-leg canaries >1.3x quiet anchor " +
-              f"(q70 ${canaryFirst(0)}%.2f vs ${a.q70First}%.2f, " +
-              f"q03 ${canaryFirst(1)}%.2f vs ${a.q03First}%.2f)"),
-          Option.when(total > 1.25 * a.total)(
-            f"total $total%.1f s >1.25x quiet anchor ${a.total}%.1f s")).flatten
-        case _ => Nil
-      }
-      // loadavg spike locator: the canary legs sample context at exactly
-      // three instants, and a contention burst strictly between legs is
-      // invisible to them (measured mid-round-12: genomics block 2-3×
-      // inflated, both canaries in-band). The per-query series is the
-      // evidence; this field names the peak so a judge starts there.
-      // Threshold (peak > 2×median + 2) is a heuristic calibrated on that
-      // incident: quiet series median ≈1-2, contended block read 3-6.
-      val loads: Seq[Double] = results.map(_._4.load).filter(_ >= 0)
-      val loadMedian: Double =
-        if (loads.isEmpty) 0.0 else loads.sorted.apply(loads.size / 2)
-      val loadPeakIdx: Int =
-        if (loads.isEmpty) -1 else results.indices.maxBy(results(_)._4.load)
-      val loadSpike: Boolean = loadPeakIdx >= 0 &&
-        results(loadPeakIdx)._4.load > 2 * loadMedian + 2
-      val spikeNote: String = if (!loadSpike) "" else {
-        val (n, _, _, a) = results(loadPeakIdx)
-        // the in-band clause is only claimable when no canary tripped
-        // (ADVICE r12: the old unconditional text contradicted a
-        // degraded/shifted-faster verdict it was appended to)
-        val canaryState =
-          if (slowTrips.isEmpty && fastTrips.isEmpty)
-            " even though the canary legs sat in-band"
-          else ""
-        f"; loadavg spike mid-run at $n (${a.load}%.1f vs median " +
-          f"$loadMedian%.1f) - queries near it may be inflated$canaryState" +
-          "; see queryAttr"
-      }
-      // auto-verdict (round-11 verdict #1): the artifact states whether its
-      // own measuring context held, so adjudicating a round-over-round
-      // delta never needs repo folklore. Thresholds are the calibrated
-      // bands from the canary block above.
-      val contextVerdict: String =
-        (if (slowTrips.nonEmpty)
-          "degraded (" + (slowTrips ++ fastTrips ++ anchorTrips).mkString("; ") +
-            "): back half ran slower - believe per-query deltas with " +
-            "suspicion; see contextAttr for contention vs GC"
-        else if (anchorTrips.nonEmpty)
-          "degraded-absolute (" + (anchorTrips ++ fastTrips).mkString("; ") +
-            "): ratios in-band but the run sits far above the committed " +
-            "quiet anchor - uniform contention; see contextAttr/queryAttr"
-        else if (fastTrips.nonEmpty)
-          "shifted-faster (" + fastTrips.mkString("; ") +
-            "): back half ran faster than mid-run - totals are honest or " +
-            "conservative, not inflated"
-        else "ok: both canaries in-band") + spikeNote
+      val verdict: Verdict = Bench.verdict(canaryFirst, canaryMid, canaryLast, total,
+        results.map { case (n, _, a) => n -> a.load },
+        anchor.toOption.filter(_ => anchorApplicable))
       // health order for the keep decision: ok < shifted-faster < degraded
       // (a crashed pass is worst of all); ties break on the lower total —
       // on equal context evidence the smaller sum is the less-contended one
       def healthRank: (Int, Int, Double) =
         (failed.size,
-          if (slowTrips.nonEmpty || anchorTrips.nonEmpty) 2
-          else if (fastTrips.nonEmpty) 1 else 0,
+          if (slowDegraded) 2 else if (verdict.fastTrips.nonEmpty) 1 else 0,
           total)
+      def slowDegraded: Boolean =
+        verdict.slowTrips.nonEmpty || verdict.anchorTrips.nonEmpty
     }
 
     def measureSurface(): Run = {
@@ -370,13 +360,6 @@ object Bench {
           canaryMid = ts
           attrMid = attr
         }
-        def once(): (Double, Option[String]) = {
-          val t0 = System.nanoTime()
-          val err = try { fn(spark, sfDir).count(); None } catch {
-            case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-          ((System.nanoTime() - t0) / 1e9, err)
-        }
         // per-query attribution (the canary legs alone have a blind spot,
         // measured mid-round-12: a contention spike strictly BETWEEN the
         // mid and last legs inflated one query block 3× — q24 13.7 s vs
@@ -386,42 +369,16 @@ object Bench {
         // across each query's timed window lets the artifact localize a
         // spike to the block it hit: a starved query shows wall up with
         // cpuPerWall DOWN vs its round-over-round self, which no honest
-        // code regression can produce.
-        val qw0 = System.nanoTime(); val qc0 = procCpuSec; val qg0 = gcSec
-        // best-of-2, the two runs BACK-TO-BACK with no hygiene between: the
-        // min is the code's warm cost — run 2 reuses run 1's internal
-        // caches, the still-resident codegen classes, and JIT-hot generated
-        // code. This is load-bearing and was re-measured in round 12: an
-        // interleaved two-pass variant (each query's samples a full pass
-        // apart, tried to decorrelate contention bursts) read 300 s vs this
-        // design's 165 s on the same tree — 244 intervening queries flush
-        // the codegen LRU (spark.sql.codegen.cache.maxEntries = 100) and
-        // every internal cache, so BOTH samples go cold and the min stops
-        // measuring the code. Burst-contention robustness comes from the
-        // queryAttr series instead, which localizes a spike after the fact.
-        // Failures are not retried — a crash must stay loud.
-        val (t1, e1) = once()
-        val (t, e) = if (e1.isDefined) (t1, e1) else {
-          val (t2, e2) = once(); (math.min(t1, t2), e2)
-        }
-        val qWall = (System.nanoTime() - qw0) / 1e9
-        val qAttr = LegAttr(qWall, procCpuSec - qc0, gcSec - qg0, loadAvg)
-        // Inter-query hygiene: queries cache/localCheckpoint frames internally
-        // and nothing drops them once the query's DataFrames go out of scope
-        // until a GC lets the ContextCleaner run. Across 89 queries the
-        // accumulated blocks crowd the storage pool and the LATER queries pay
-        // in GC/eviction — observed as q46 drifting 5.4 s → 11.6 s as the
-        // surface grew. Each query is measured against an empty cache
-        // (best-of-2 still captures its own internal reuse).
-        spark.catalog.clearCache()
-        System.gc()
-        (name, t, e, qAttr)
+        // code regression can produce. Burst-contention robustness of the
+        // best-of-2 comes from this series (see obs.bestOf2).
+        val (t, qAttr) = attributed(obs.bestOf2(fn(spark, sfDir).count()))
+        obs.hygiene(spark)
+        (name, t, qAttr)
       }
       // context canaries, last leg (first and mid were timed inline above)
       val (canaryLast, attrLast) = canaryLeg()
       // memo builds charged to THIS pass: cumulative snapshot delta
-      val memoSec1 = ops.Memo.buildSecSnapshot
-      val memoBuild = memoSec1.map { case (k, v) =>
+      val memoBuild = ops.Memo.buildSecSnapshot.map { case (k, v) =>
         k -> (v - memoSec0.getOrElse(k, 0.0))
       }.filter(_._2 > 1e-3)
       Run(results, canaryFirst, canaryMid, canaryLast,
@@ -443,36 +400,31 @@ object Bench {
     // crashed pass is never retried — failures must stay loud, not be
     // rerolled.
     val retried: Option[Run] =
-      if ((first.slowTrips.nonEmpty || first.anchorTrips.nonEmpty) &&
-          first.failed.isEmpty) {
-        println(s"[bench] first pass context verdict: ${first.contextVerdict}")
+      if (first.slowDegraded && first.failed.isEmpty) {
+        println(s"[bench] first pass context verdict: ${first.verdict.text}")
         println("[bench] degraded measuring context - rerunning the surface once")
-        spark.catalog.clearCache()
         // evict memos too (ADVICE r14): without this the rerun inherits the
         // first pass's temp-parquet memo builds, skips their cost entirely,
         // and its total is systematically below the first pass's
         // independent of contention — the two passes must measure the same
         // work for healthRank's smaller-total tiebreak to mean anything
         ops.Memo.evictAll()
-        System.gc()
+        obs.hygiene(spark)
         Some(measureSurface())
       } else None
-    val run = retried match {
-      case Some(second) =>
-        if (Ordering[(Int, Int, Double)].lt(second.healthRank, first.healthRank))
-          second
-        else first
-      case None => first
-    }
+    val run = retried
+      .filter(second => Ordering[(Int, Int, Double)].lt(second.healthRank, first.healthRank))
+      .getOrElse(first)
+    import obs.jstr
     val rerunJson = retried match {
       case None => "null"
       case Some(second) =>
         val keptName = if (run eq first) "first" else "rerun"
         f"""{"kept":${jstr(keptName)},""" +
         f""""firstTotal":${first.total}%.3f,""" +
-        s""""firstVerdict":${jstr(first.contextVerdict)},""" +
+        s""""firstVerdict":${jstr(first.verdict.text)},""" +
         f""""rerunTotal":${second.total}%.3f,""" +
-        s""""rerunVerdict":${jstr(second.contextVerdict)},""" +
+        s""""rerunVerdict":${jstr(second.verdict.text)},""" +
         s""""rerunErrors":${second.failed.size},""" +
         // names, not just a count (ADVICE r13): a clean-but-degraded first
         // pass followed by a crashing rerun exits 1 with errors:{} — the
@@ -482,20 +434,14 @@ object Bench {
         // r14 verdict #2: when the bounded rerun ALSO trips the anchor the
         // series should say the anchor was unmeetable in this window (a
         // persistently loud host), not just record two degraded verdicts
-        s""""anchorUnmeetable":${second.anchorTrips.nonEmpty}}"""
+        s""""anchorUnmeetable":${second.verdict.anchorTrips.nonEmpty}}"""
     }
 
-    val qs = run.ok.map { case (k, v, _, _) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val errs = run.failed.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    // per-family subtotals: a run-context drift that taxes one family
-    // (round 8: pinned memo blocks made the streaming family ~2× its
-    // isolated cost) should be legible in the JSON, not require a
-    // per-query diff against the previous round
-    val fams = SparkEntry.familyOf
-    val famTotals = run.ok.groupBy { case (n, _, _, _) => fams.getOrElse(n, "other") }
-      .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    val famJson = famTotals.map { case (f, t) => jstr(f) + ":" + t }
-      .mkString("{", ",", "}")
+    def jsonMap(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = jsonMap(run.ok.map { case (k, v) => k -> v.toString })
+    val errs = jsonMap(run.failed.map { case (k, m) => k -> jstr(m) })
+    val famJson = jsonMap(obs.familyTotals(run.ok).map { case (f, t) => f -> t.toString })
     // "canary" stays the streaming probe (cross-round comparability),
     // "canaryBatch" is the calibrated instrument — see the block above.
     // "ratioDef" is written into the artifact because the key's meaning
@@ -507,8 +453,6 @@ object Bench {
       s""""ratio":${run.canaryLast(i) / run.canaryMid(i)},""" +
       s""""ratioDef":"last/mid (since r11; rounds <=10 wrote last/first)",""" +
       s""""ratioVsFirst":${run.canaryLast(i) / run.canaryFirst(i)}}"""
-    val canaryJson = canaryJsonFor(0)
-    val canaryBatchJson = canaryJsonFor(1)
     val attrJson =
       s"""{"first":${run.attrFirst.json},"mid":${run.attrMid.json},""" +
       s""""last":${run.attrLast.json},"cpus":${jstr(cpus)}}"""
@@ -524,13 +468,11 @@ object Bench {
     // short queries — read it as a series, not per-row truth; the crisp
     // per-row signal is cpuPerWall (a starved query's wall grows while
     // its cpuPerWall drops, which no code regression can produce).
-    val queryAttrJson = run.results.map { case (n, _, _, a) =>
-      jstr(n) + ":" + f"[${if (a.wall > 0) a.cpu / a.wall else 0.0}%.2f," +
-        f"${a.gc}%.3f,${a.load}%.2f]"
-    }.mkString("{", ",", "}")
-    val loadPeakJson = if (run.loadPeakIdx < 0) "null" else {
-      val (n, _, _, a) = run.results(run.loadPeakIdx)
-      f"""{"query":${jstr(n)},"loadAvg":${a.load}%.2f,"median":${run.loadMedian}%.2f}"""
+    val queryAttrJson = jsonMap(run.results.map { case (n, _, a) =>
+      n -> f"[${a.cpuPerWall}%.2f,${a.gc}%.3f,${a.load}%.2f]"
+    })
+    val loadPeakJson = run.verdict.loadPeak.fold("null") { case (n, load) =>
+      f"""{"query":${jstr(n)},"loadAvg":$load%.2f,"median":${run.verdict.loadMedian}%.2f}"""
     }
     val onlyField =
       only.map(o => s""""only":${jstr(o.mkString(","))},""").getOrElse("")
@@ -539,22 +481,22 @@ object Bench {
     // every per-query best-of-2 min by construction, so the pass's true
     // wall work = value + memoBuildTotalSec, and any per-query claim for a
     // memo consumer must be read alongside its family's build charge.
-    val memoJson = run.memoBuild.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val memoJson = jsonMap(run.memoBuild.toSeq.sortBy(_._1)
+      .map { case (k, v) => k -> f"$v%.3f" })
     val memoTotal = run.memoBuild.values.sum
     val anchorJson = anchor match {
       case Right(a) =>
-        s"""{"applicable":${run.anchorApplicable},"file":${jstr(a.file)},""" +
+        s"""{"applicable":$anchorApplicable,"file":${jstr(a.file)},""" +
         f""""q70First":${a.q70First}%.3f,"q03First":${a.q03First}%.3f,""" +
-        f""""total":${a.total}%.1f,"tripped":${run.anchorTrips.nonEmpty}}"""
+        f""""total":${a.total}%.1f,"tripped":${run.verdict.anchorTrips.nonEmpty}}"""
       case Left(reason) =>
         s"""{"applicable":false,"reason":${jstr(reason)},"tripped":false}"""
     }
-    val line =
+    obs.emit(outPath,
       s"""{"metric":"total","value":${run.total},"unit":"sec",$onlyField""" +
       s""""queryAttr":$queryAttrJson,"queries":$qs,""" +
-      s""""families":$famJson,"canary":$canaryJson,""" +
-      s""""canaryBatch":$canaryBatchJson,"contextAttr":$attrJson,""" +
+      s""""families":$famJson,"canary":${canaryJsonFor(0)},""" +
+      s""""canaryBatch":${canaryJsonFor(1)},"contextAttr":$attrJson,""" +
       s""""loadPeak":$loadPeakJson,""" +
       f""""preflight":{"loadAtLaunch":$loadAtLaunch%.2f,""" +
       f""""loadAtStart":$loadAtStart%.2f,"waitedSec":$gateWaitedSec,""" +
@@ -562,11 +504,9 @@ object Bench {
       s""""anchor":$anchorJson,""" +
       s""""memoBuildSec":$memoJson,""" +
       f""""memoBuildTotalSec":$memoTotal%.3f,""" +
-      s""""contextVerdict":${jstr(run.contextVerdict)},""" +
-      s""""rerun":$rerunJson,"errors":$errs,"sf":"$sfDir"}"""
-    Files.writeString(Paths.get(outPath), line + "\n")
-    println(line)
-    println(s"[bench] context verdict: ${run.contextVerdict}")
+      s""""contextVerdict":${jstr(run.verdict.text)},""" +
+      s""""rerun":$rerunJson,"errors":$errs,"sf":"$sfDir"}""")
+    println(s"[bench] context verdict: ${run.verdict.text}")
     // exercise the memo eviction hook (long-lived-session hygiene): all
     // shared-stage temp-parquet memos are dropped before shutdown
     ops.Memo.evictAll()

@@ -77,7 +77,7 @@ object Plans {
   def audit(spark: SparkSession, sfDir: String,
             only: Option[Seq[String]] = None,
             collectText: Boolean = true): Audit = {
-    def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
+    val keep = obs.keeps(only) _
     val sb = new StringBuilder
     val perQuery = scala.collection.mutable.LinkedHashMap[String, PlanAudit.Counts]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -137,9 +137,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/plans.txt")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = obs.session()
     // same local-iteration filter as Verify: SPARK_GRAFT_ONLY=q194,q200
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+    val only = obs.only
     // SPARK_GRAFT_SKIP=q72_stream_join — prefix EXCLUSION for scale-SF
     // audits only. Streaming queries run their stream during plan
     // construction (the audit explains the batch tail); q72's memory-sink
@@ -153,7 +153,7 @@ object Plans {
     val skipOnly = skip.map(sk =>
       SparkEntry.allQueries.map(_.name)
         .filterNot(n => sk.exists(n.startsWith))
-        .filter(n => only.forall(_.exists(n.startsWith))))
+        .filter(obs.keeps(only)))
       .orElse(only)
     val a = audit(spark, sfDir, skipOnly)
     val sb = new StringBuilder(a.text)

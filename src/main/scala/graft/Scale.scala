@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+
+import graft.obs.jstr
 
 /** Scale probe: turns the 100 TB posture from an argued property into a
   * measured one (round-9 verdict, next-round item #1).
@@ -42,6 +45,11 @@ import org.apache.spark.sql.functions._
   * means the query's cost curve is super-linear in data — the exact
   * failure the 100 TB claims must exclude.
   *
+  * `cluster` and `shuffle` (below) share `time`'s per-dir loop; the
+  * harness pieces it is built from (query selection, warm-up, best-of-2,
+  * inter-query hygiene, family totals, the JSON line) live in
+  * [[graft.obs]], shared with Bench.
+  *
   * Plan-shape invariance at the synthesized SF is checked with the
   * existing tool (`runMain graft.Plans <dstDir> <out>`) — Scale does not
   * duplicate the audit. Findings land in SCALE.md.
@@ -50,20 +58,17 @@ object Scale {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "synth" :: src :: dst :: copies :: Nil =>
-      val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      val spark = obs.session()
       try synth(spark, src, dst, copies.toInt) finally spark.stop()
     case "time" :: dirA :: dirB :: names :: out :: Nil =>
       // `all` = the full declared surface (round-10 verdict #1: the
       // expensive-15 filter misses scale bugs hiding in cheap queries —
       // q133 was 1.3 s at sf0.1 and 132× super-linear)
-      val resolved =
-        if (names == "all") SparkEntry.queries.keys.toSeq.sorted
-        else names.split(',').toSeq
-      time(dirA, dirB, resolved, out)
+      time(dirA, dirB, obs.select(names), out)
     case "shuffle" :: rankDir :: runDir :: sel :: out :: Nil =>
       shuffleProbe(rankDir, runDir, sel, out)
     case "cluster" :: dir :: master :: sel :: out :: Nil =>
-      clusterProbe(dir, master, sel, out)
+      clusterProbe(dir, master, obs.select(sel), out)
     case _ =>
       System.err.println(
         "usage: graft.Scale synth <srcDir> <dstDir> <copies>\n" +
@@ -193,36 +198,6 @@ object Scale {
 
   // --- timing -------------------------------------------------------------
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Bench-methodology warm-up for one dir: pull table bytes through the
-    * page cache, run one cheap query for codegen/JIT. */
-  private def warm(spark: SparkSession, dir: String): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      val p = Paths.get(s"$dir/$t.parquet")
-      val files =
-        if (Files.isRegularFile(p)) Seq(p)
-        else if (Files.isDirectory(p)) {
-          val s = Files.list(p)
-          try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-          finally s.close()
-        } else Seq.empty
-      files.filter(Files.isRegularFile(_)).foreach { f =>
-        val in = Files.newInputStream(f)
-        try { val buf = new Array[Byte](1 << 20); while (in.read(buf) >= 0) () }
-        finally in.close()
-      }
-      Tables.load(spark, dir, t).count()
-    }
-    SparkEntry.queries("q06_forecast_revenue")(spark, dir).count()
-  }
-
   /** Probe-only substitutions, built per run because q178's needs the
     * probe's own baseline dir. Both swap a harness/geometry artifact for
     * what production data actually does, and both are recorded in the
@@ -316,59 +291,48 @@ object Scale {
     }
   }
 
-  /** best-of-2 seconds for one query at one dir (Bench methodology);
-    * Left(error) instead of dying so one scale-broken query (e.g. a
-    * driver-collected sink outgrowing maxResultSize) doesn't void the
-    * rest of the probe. */
-  private def bestOf2(spark: SparkSession, dir: String, name: String,
-      subs: Map[String, (SparkSession, String) => Unit]): Either[String, Double] = {
-    def once(): Either[String, Double] =
-      try {
-        val t0 = System.nanoTime()
-        subs.get(name) match {
-          case Some(run) => run(spark, dir)
-          case None => SparkEntry.queries(name)(spark, dir).count()
-        }
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-    val t = once() match {
-      case Right(t1) => once() match {
-        case Right(t2) => Right(math.min(t1, t2))
-        case l => l
-      }
-      case l => l
+  /** The per-dir loop every probe shares (Bench methodology): warm `dir`,
+    * run `measure` on each query with inter-query hygiene after it and a
+    * progress line per query (a full-surface run is an hour-plus of wall
+    * time — the log must show where it is and what each leg cost), then
+    * evict the memos, which are keyed per (session, dir), so the next dir
+    * builds its own at its own scale. A query's error is recorded, not
+    * fatal: one scale-broken query (e.g. a driver-collected sink
+    * outgrowing maxResultSize) must not void the rest of the probe. */
+  private def perDir[T](spark: SparkSession, dir: String, names: Seq[String],
+      tag: String)(measure: String => Either[String, T])(show: T => String)
+      : Seq[(String, Either[String, T])] = {
+    obs.warm(spark, dir)
+    val results = names.zipWithIndex.map { case (n, i) =>
+      val r = measure(n)
+      obs.hygiene(spark)
+      println(s"$tag ${i + 1}/${names.size} $n: ${r.fold(e => s"ERROR $e", show)}")
+      n -> r
     }
-    spark.catalog.clearCache()
-    System.gc()
-    t
+    ops.Memo.evictAll()
+    results
   }
 
-  def time(dirA: String, dirB: String, names: Seq[String], out: String): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val missing = names.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
-    val (subs, subNotes) = probeSubstitutions(spark, Seq(dirA, dirB), names)
+  /** [[perDir]] timing each query best-of-2, through its probe
+    * substitution when it has one. */
+  private def timeDir(spark: SparkSession, dir: String, names: Seq[String],
+      subs: Map[String, (SparkSession, String) => Unit], tag: String)
+      : Seq[(String, Either[String, Double])] =
+    perDir(spark, dir, names, tag) { n =>
+      obs.bestOf2(subs.getOrElse(n, (s: SparkSession, d: String) =>
+        SparkEntry.queries(n)(s, d).count(): Unit)(spark, dir))
+    }(t => f"$t%.3f s")
 
-    // per-query progress on stdout: a full-surface run is an hour-plus of
-    // wall-clock — the log must show where it is and what each leg cost
-    def runDir(dir: String): Map[String, Either[String, Double]] =
-      names.zipWithIndex.map { case (n, i) =>
-        val r = bestOf2(spark, dir, n, subs)
-        val shown = r.fold(e => s"ERROR $e", t => f"$t%.3f s")
-        println(s"[scale] ${i + 1}/${names.size} $dir $n: $shown")
-        n -> r
-      }.toMap
-    warm(spark, dirA)
-    val a = runDir(dirA)
-    // memos are keyed per (session, dir); evict so dirB's runs build their
-    // own at dirB's scale instead of inheriting dirA residue
-    ops.Memo.evictAll()
-    spark.catalog.clearCache()
-    warm(spark, dirB)
-    val b = runDir(dirB)
-    ops.Memo.evictAll()
+  /** JSON object of the substitution notes for the selected queries. */
+  private def substitutedJson(notes: Map[String, String], names: Seq[String]): String =
+    notes.filter { case (n, _) => names.contains(n) }.toSeq.sortBy(_._1)
+      .map { case (n, note) => s"${jstr(n)}:${jstr(note)}" }.mkString("{", ",", "}")
+
+  def time(dirA: String, dirB: String, names: Seq[String], out: String): Unit = {
+    val spark = obs.session()
+    val (subs, subNotes) = probeSubstitutions(spark, Seq(dirA, dirB), names)
+    val a = timeDir(spark, dirA, names, subs, s"[scale] $dirA").toMap
+    val b = timeDir(spark, dirB, names, subs, s"[scale] $dirB").toMap
 
     val rows = names.map { n =>
       (a(n), b(n)) match {
@@ -381,20 +345,14 @@ object Scale {
       }
     }
     val okBoth = names.filter(n => a(n).isRight && b(n).isRight)
-    val totalA = okBoth.map(n => a(n).toOption.get).sum
-    val totalB = okBoth.map(n => b(n).toOption.get).sum
-    val subJson = subNotes.filter { case (n, _) => names.contains(n) }
-      .toSeq.sortBy(_._1)
-      .map { case (n, note) => s"${jstr(n)}:${jstr(note)}" }
-      .mkString("{", ",", "}")
-    val line =
+    val totalA = okBoth.flatMap(a(_).toOption).sum
+    val totalB = okBoth.flatMap(b(_).toOption).sum
+    obs.emit(out,
       s"""{"dirA":${jstr(dirA)},"dirB":${jstr(dirB)},""" +
       f""""totalA":$totalA%.3f,"totalB":$totalB%.3f,""" +
       f""""totalRatio":${totalB / totalA}%.2f,""" +
-      s""""substituted":$subJson,""" +
-      s""""queries":{${rows.mkString(",")}}}"""
-    Files.writeString(Paths.get(out), line + "\n")
-    println(line)
+      s""""substituted":${substitutedJson(subNotes, names)},""" +
+      s""""queries":{${rows.mkString(",")}}}""")
     spark.stop()
   }
 
@@ -418,13 +376,8 @@ object Scale {
     *
     * Methodology is the bench's: byte-level page-cache warm-up, best-of-2
     * per query, clearCache+GC between queries, errors recorded not fatal. */
-  def clusterProbe(dir: String, master: String, sel: String,
+  def clusterProbe(dir: String, master: String, names: Seq[String],
       out: String): Unit = {
-    val names =
-      if (sel == "all") SparkEntry.queries.keys.toSeq.sorted
-      else sel.split(',').toSeq
-    val missing = names.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
     val spark = Sessions.forMaster(master, "32")
     // executor JVMs register asynchronously after session start; wait for
     // the advertised count so the first queries aren't timed on a
@@ -447,38 +400,22 @@ object Scale {
     // (The committed sf0.1 §10 run predates this and timed q72's memory
     // sink; the artifact's `substituted` field disambiguates.)
     val (subs, subNotes) = probeSubstitutions(spark, Seq(dir), names)
-    warm(spark, dir)
-    val results = names.zipWithIndex.map { case (n, i) =>
-      val r = bestOf2(spark, dir, n, subs)
-      println(s"[cluster] ${i + 1}/${names.size} $n: " +
-        r.fold(e => s"ERROR $e", t => f"$t%.3f s"))
-      n -> r
-    }
-    ops.Memo.evictAll()
-    val fams = SparkEntry.familyOf
-    val famTotals = results.collect { case (n, Right(t)) =>
-      fams.getOrElse(n, "other") -> t }
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+    val results = timeDir(spark, dir, names, subs, "[cluster]")
+    val ok = results.collect { case (n, Right(t)) => n -> t }
     val qJson = results.map {
       case (n, Right(t)) => f"${jstr(n)}:$t%.3f"
       case (n, Left(e)) => s"${jstr(n)}:${jstr("ERROR " + e)}"
     }
-    val total = results.collect { case (_, Right(t)) => t }.sum
-    val errs = results.count(_._2.isLeft)
-    val line =
+    val errs = results.size - ok.size
+    obs.emit(out,
       s"""{"dir":${jstr(dir)},"master":${jstr(master)},""" +
       s""""executorsInclDriver":$execs,""" +
       s""""defaultParallelism":${spark.sparkContext.defaultParallelism},""" +
-      f""""total":$total%.3f,"errors":$errs,""" +
-      s""""substituted":${subNotes.filter { case (n, _) => names.contains(n) }
-        .toSeq.sortBy(_._1)
-        .map { case (n, note) => s"${jstr(n)}:${jstr(note)}" }
-        .mkString("{", ",", "}")},""" +
-      s""""families":{${famTotals.map { case (f, t) =>
+      f""""total":${ok.map(_._2).sum}%.3f,"errors":$errs,""" +
+      s""""substituted":${substitutedJson(subNotes, names)},""" +
+      s""""families":{${obs.familyTotals(ok).map { case (f, t) =>
         f"${jstr(f)}:$t%.3f" }.mkString(",")}},""" +
-      s""""queries":{${qJson.mkString(",")}}}"""
-    Files.writeString(Paths.get(out), line + "\n")
-    println(line)
+      s""""queries":{${qJson.mkString(",")}}}""")
     spark.stop()
     if (errs > 0) sys.exit(1)
   }
@@ -493,11 +430,9 @@ object Scale {
     * subquery expressions (scalar-aggregate combines live there). Reuse
     * means one exchange instance can be reached twice — deduped by
     * identity, so bytes are counted once per physical shuffle. */
-  private def collectShuffles(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] = {
+  private def collectShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
     val self = p match { case s: ShuffleExchangeExec => Seq(s); case _ => Nil }
     val wrapped = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -531,8 +466,9 @@ object Scale {
     * driver-side (e.g. EM-loop localCheckpoints). */
   def shuffleProbe(rankDir: String, runDir: String, sel: String,
       out: String): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = obs.session()
     val fams = SparkEntry.familyOf
+    def batch(names: Seq[String]) = names.filterNot(n => fams.get(n).contains("streaming"))
     val chosen: Seq[String] =
       // `all` = every batch query: because the probe executes via toRdd,
       // it EVALUATES every output column — a materialization audit the
@@ -541,33 +477,23 @@ object Scale {
       // sum-of-squares long overflow until this probe ran at sf1).
       // Streaming queries stay out of scope: their returned frame is the
       // memory-sink tail, fully materialized by the fn itself.
-      if (sel == "all")
-        SparkEntry.queries.keys.toSeq.sorted
-          .filterNot(n => fams.get(n).contains("streaming"))
+      if (sel == "all") batch(obs.select(sel))
       else if (sel.startsWith("top")) {
         val nStr = sel.stripPrefix("top")
         require(nStr.nonEmpty && nStr.forall(_.isDigit),
           s"selection '$sel' — expected topN (e.g. top20), 'all', or a " +
             "comma-separated query list")
         val n = nStr.toInt
-        val ranked = audit0(spark, rankDir)
-          .filterNot { case (name, _) => fams.get(name).contains("streaming") }
+        val perQuery = Plans.audit(spark, rankDir, collectText = false).perQuery
+        val ranked = batch(perQuery.keys.toSeq).map(q => q -> perQuery(q))
         val bySp = ranked.sortBy { case (n0, c) =>
           (-c.singlePartitionExchanges, -c.exchanges, n0) }.map(_._1)
         val byEx = ranked.sortBy { case (n0, c) =>
           (-c.exchanges, n0) }.map(_._1)
         (bySp.take(n / 2) ++ byEx).distinct.take(n)
-      } else {
-        // fail fast on a typo, like time()/clusterProbe — otherwise it
-        // surfaces only as a per-query error row after the warm-up ran
-        val explicit = sel.split(',').toSeq
-        val missing = explicit.filterNot(SparkEntry.queries.contains)
-        require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
-        explicit
-      }
-    warm(spark, runDir)
-    val rows = chosen.zipWithIndex.map { case (name, i) =>
-      val r = try {
+      } else obs.select(sel)
+    val rows = perDir(spark, runDir, chosen, "[shuffle]") { name =>
+      obs.attempt {
         // q146 substitutes its distributed scatter frame: the registered
         // fn collects driver-side, so its returned frame is a local
         // relation that would read 0 shuffle bytes while the real work
@@ -578,34 +504,23 @@ object Scale {
         // execute the frame itself (df.count() would execute a DIFFERENT
         // plan — the count aggregate — leaving this plan's metrics empty)
         val nRows = df.queryExecution.toRdd.count()
-        val shuffles = collectShuffles(df.queryExecution.executedPlan)
         val seen = java.util.Collections.newSetFromMap(
           new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-        val uniq = shuffles.filter(seen.add(_))
+        val uniq = collectShuffles(df.queryExecution.executedPlan).filter(seen.add(_))
+        def single(s: ShuffleExchangeExec) = s.outputPartitioning == SinglePartition
+        def written(s: ShuffleExchangeExec) = s.metrics.get("shuffleBytesWritten").map(_.value)
         val exJson = uniq.map { s =>
-          val single = s.outputPartitioning ==
-            org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-          val bytes = s.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(-1L)
           val recs = s.metrics.get("shuffleRecordsWritten").map(_.value).getOrElse(-1L)
           s"""{"partitioning":${jstr(s.outputPartitioning.toString.take(120))},""" +
           s""""numPartitions":${s.outputPartitioning.numPartitions},""" +
-          s""""bytesWritten":$bytes,"recordsWritten":$recs,"single":$single}"""
+          s""""bytesWritten":${written(s).getOrElse(-1L)},"recordsWritten":$recs,""" +
+          s""""single":${single(s)}}"""
         }
-        val totB = uniq.flatMap(_.metrics.get("shuffleBytesWritten").map(_.value)).sum
-        val spB = uniq.filter(_.outputPartitioning ==
-            org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
-          .flatMap(_.metrics.get("shuffleBytesWritten").map(_.value))
-        Right((nRows, totB, spB, exJson))
-      } catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        (nRows, uniq.flatMap(written).sum, uniq.filter(single).flatMap(written), exJson)
       }
-      spark.catalog.clearCache()
-      System.gc()
-      val shown = r.fold(e => s"ERROR $e", { case (nr, tb, spb, ex) =>
-        s"rows=$nr shuffles=${ex.size} bytes=$tb " +
-          s"singlePartitionBytes=[${spb.mkString(",")}]" })
-      println(s"[shuffle] ${i + 1}/${chosen.size} $name: $shown")
-      name -> r
+    } { case (nr, tb, spb, ex) =>
+      s"rows=$nr shuffles=${ex.size} bytes=$tb " +
+        s"singlePartitionBytes=[${spb.mkString(",")}]"
     }
     val qJson = rows.map {
       case (n, Right((nr, tb, spb, ex))) =>
@@ -614,15 +529,8 @@ object Scale {
         s""""exchanges":[${ex.mkString(",")}]}"""
       case (n, Left(e)) => s"${jstr(n)}:{" + s""""error":${jstr(e)}}"""
     }
-    val line = s"""{"rankDir":${jstr(rankDir)},"runDir":${jstr(runDir)},""" +
-      s""""queries":{${qJson.mkString(",")}}}"""
-    Files.writeString(Paths.get(out), line + "\n")
-    println(line)
+    obs.emit(out, s"""{"rankDir":${jstr(rankDir)},"runDir":${jstr(runDir)},""" +
+      s""""queries":{${qJson.mkString(",")}}}""")
     spark.stop()
   }
-
-  /** Plan-audit counts per batch query at `dir` (selection helper). */
-  private def audit0(spark: SparkSession, dir: String)
-      : Seq[(String, PlanAudit.Counts)] =
-    Plans.audit(spark, dir, collectText = false).perQuery.toSeq
 }

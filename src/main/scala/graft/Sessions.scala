@@ -26,7 +26,15 @@ import org.apache.spark.sql.SparkSession
   *   returns an already-running session as it is.
   */
 object Sessions {
-  def local(cpus: String): SparkSession = build(localDefaults(new SparkConf(), cpus))
+  /** A session at `local[cpus]` with `cpus` shuffle partitions. A session
+    * that is already running is left as it is: `getOrCreate` would apply
+    * the builder's runtime confs to it, so the defaults are passed only
+    * when this call creates the session. */
+  def local(cpus: String): SparkSession = {
+    val running = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .exists(!_.sparkContext.isStopped)
+    build(if (running) Map.empty else localDefaults(new SparkConf(), cpus))
+  }
 
   /** The settings [[local]] adds to `conf`: master `local[cpus]` and `cpus`
     * shuffle partitions, each only when `conf` has no value of its own. */

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.functions._
-import graft.{Sessions, Tables}
 import graft.index.Indexer
 import graft.model.Read
 import graft.quantify.Quantify
@@ -68,7 +67,7 @@ object Main {
   private[graft] def runQuery(name: String, sfDir: String, n: Int): Unit =
     graft.SparkEntry.queries.get(name) match {
       case Some(fn) =>
-        val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+        val spark = graft.obs.session()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         df.show(n, truncate = false)
@@ -95,7 +94,7 @@ object Main {
   private def runIndex(genomePath: String, gtfPath: String, k: Int, out: String,
       avroCompat: Boolean = false): Unit = {
     import graft.util.Timers
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.obs.session()
     // driver-side genome load + broadcast, as the reference does
     // (cli/Index.scala:59-62 then Index.scala:76-78); .2bit or FASTA
     val genome = Timers.time("loadGenome") { graft.io.Genome.read(genomePath) }
@@ -118,7 +117,7 @@ object Main {
       k: Int, out: String, maxIterations: Int,
       calibrateKmers: Boolean, calibrateLength: Boolean,
       classesAsTx: Boolean = false): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.obs.session()
     import spark.implicits._
     // extension dispatch as the reference's loadAlignments (SURVEY S1):
     // parquet or FASTQ text

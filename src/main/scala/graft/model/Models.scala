@@ -33,7 +33,3 @@ final case class Transcript(
 /** Only `.sequence` of the reference's AlignmentRecord is ever consumed
   * (Quantify.scala:42,59; ReadGenerator.scala:44-46). */
 final case class Read(sequence: String)
-
-/** Final output row: (transcript id, relative abundance).
-  * Reference: RDD[(Transcript, Double)] at Quantify.scala:286-295. */
-final case class Abundance(id: String, abundance: Double)

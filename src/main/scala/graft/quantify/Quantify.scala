@@ -166,7 +166,11 @@ object Quantify {
     * DataFrame form's inner joins drop from the EM but not from its
     * constants: a counted class with no member still feeds k_j's
     * denominator, and a member with no length row still counts in its
-    * class's size. Transcripts are those with a length row and an edge. */
+    * class's size. Transcripts are those with a length row and an edge.
+    * The rows are sorted by (ec, tid) on the driver before any index is
+    * assigned, so [[emLoop]] and the length calibration sum in one order
+    * whatever the partition layout that delivered them: µ̂ is the same to
+    * the bit at any shuffle-partition count or executor layout. */
   private def collectEdges(ecCounts: DataFrame, ecToTx: DataFrame,
       tLen: DataFrame, k: Int): Edges = {
     val rows = ecCounts
@@ -175,6 +179,7 @@ object Quantify {
       .select(col("ec"), col("count").cast("double"), col("tid"), col("len"),
         effectiveLength(col("len"), k))
       .collect()
+      .sortBy(r => (r.get(0), r.get(2)))(Ordering.Tuple2(byValue, byValue))
     val classIdx = scala.collection.mutable.HashMap.empty[Any, Int]
     val txIdx = scala.collection.mutable.HashMap.empty[Any, Int]
     val tids = Vector.newBuilder[Any]
@@ -196,6 +201,15 @@ object Quantify {
     }
     Edges(tids.result(), len.result(), effLen.result(), classCount.result(),
       edgeClass.result(), edgeTx.result(), clamped)
+  }
+
+  /** Orders the key values of a collected row: null first, then by the
+    * value's own `compareTo` (the ids are strings or numbers). */
+  private val byValue: Ordering[Any] = (x, y) => (x, y) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (a: Comparable[Any @unchecked], b) => a.compareTo(b)
   }
 
   /** The EM over flat edge arrays: the equal split and one M step, then

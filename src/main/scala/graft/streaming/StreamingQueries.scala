@@ -296,7 +296,7 @@ object StreamingQueries {
     // pre-batch count) — so the append-mode output set is deterministic
     // and oracles as a per-user count + series expansion. This is the
     // gate coverage for the 0..n-rows-per-group state surface that
-    // StatefulSessionsSuite pins behaviorally.
+    // StreamingSuite pins behaviorally.
     Q("q73_stream_milestones",
       (s, d) => {
         import s.implicits._

@@ -237,6 +237,22 @@ class QuantifySuite extends SparkSuite {
     assert(fpEquals(ab("7"), 0.4, 0.05))
   }
 
+  test("calibrated abundances are the same to the bit at any shuffle-partition count") {
+    // the collected edge rows arrive in the partition layout's order; the
+    // EM and the length fit must not sum in that order
+    val tLen = Seq(1000, 600, 400, 550, 1275, 1400)
+    val (transcripts, names, kmerMap, classMap) =
+      TranscriptGenerator.generateIndependentTranscripts(20, tLen, Some(1234L))
+    val reads = ReadGenerator(transcripts, Seq(0.2, 0.1, 0.05, 0.2, 0.05, 0.4), 4000, 75,
+      Some(4321L))
+    val bits = Seq("1", "3", "17").map(n => withConf("spark.sql.shuffle.partitions", n) {
+      runQuantify(transcripts, names, kmerMap, classMap, reads, 20, 5, calibrate = true)
+        .map { case (t, v) => t -> java.lang.Double.doubleToRawLongBits(v) }
+    })
+    assert(bits.head.size === 6)
+    assert(bits.distinct.size === 1, bits)
+  }
+
   test("calibrated quantify: an all-N read and scattered Ns leave the estimate defined") {
     val tLen = Seq(1000, 600, 400, 550, 1275, 1400)
     val (transcripts, names, kmerMap, classMap) =

@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.SparkConf
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Session defaults versus a submitted configuration: `Sessions.local`
   * sets its local master and shuffle sizing only where the SparkConf
-  * (spark-submit's `--master` / `--conf`, or `-D` properties) names none. */
-class SessionsSuite extends AnyFunSuite {
+  * (spark-submit's `--master` / `--conf`, or `-D` properties) names none,
+  * and only on a session it creates. */
+class SessionsSuite extends SparkSuite {
   private def conf(kv: (String, String)*) = new SparkConf(false).setAll(kv)
 
   test("an empty conf gets local[N] and N shuffle partitions") {
@@ -21,5 +21,13 @@ class SessionsSuite extends AnyFunSuite {
       Map("spark.master" -> "local[3]"))
     assert(Sessions.localDefaults(conf("spark.master" -> "local[2]",
       "spark.sql.shuffle.partitions" -> "8"), "3").isEmpty)
+  }
+
+  test("a running session keeps its own shuffle sizing") {
+    withConf("spark.sql.shuffle.partitions", "3") {
+      val again = Sessions.local("4")
+      assert(again eq spark)
+      assert(again.conf.get("spark.sql.shuffle.partitions") === "3")
+    }
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (rice-core/src/test/scala/org/bdgenomics/rice/utils/RNAdamFunSuite.scala:22-29).
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+  lazy val spark: SparkSession = obs.session()
 
   /** fpEquals semantics from QuantifySuite.scala:41-47 (default 1e-6; wider
     * for e2e). Tolerances deliberately match the reference; do not tighten. */
