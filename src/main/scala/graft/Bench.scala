@@ -38,9 +38,17 @@ object Bench {
   // "ok" — still the r12 run: r14 and r15 each sampled only contended
   // windows (r15's best, bench_runs/r15_32c_157s_best_degraded.json,
   // reads "degraded" and loadAnchor would reject it). Re-point this
-  // when a genuinely quiet capture lands under bench_runs/.
-  private val DefaultAnchorFile =
-    "/root/repo/bench_runs/r12_builder_146s.json"
+  // when a genuinely quiet capture lands under bench_runs/. Resolved
+  // against the working directory, like the default output below, so a run
+  // reads and writes only the checkout it is started from.
+  private[graft] def defaultAnchorFile: String =
+    Paths.get("bench_runs", "r12_builder_146s.json").toAbsolutePath.toString
+
+  /** Where the artifact goes without SPARK_GRAFT_BENCH_OUT: BENCH.json in
+    * the working directory, or a scratch file for a filtered run. */
+  private[graft] def defaultOut(only: Option[Seq[String]]): String =
+    if (only.isEmpty) Paths.get("BENCH.json").toAbsolutePath.toString
+    else "/tmp/BENCH_only.json"
 
   final case class Anchor(file: String, q70First: Double, q03First: Double,
       total: Double)
@@ -197,15 +205,13 @@ object Bench {
     // a filtered run must never clobber the official artifact: its totals
     // are not comparable to a full-surface run, so it defaults to a
     // scratch path AND the JSON line records the filter either way
-    val defaultOut =
-      if (only.isEmpty) "/root/repo/BENCH.json" else "/tmp/BENCH_only.json"
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut(only))
     // anchor resolution: explicit env override, else the committed
     // default above. A Left records the anchor as
     // inapplicable-with-reason instead of inventing constants
     // (r14 verdict #2).
     val anchor: Either[String, Anchor] =
-      loadAnchor(sys.env.getOrElse("SPARK_GRAFT_ANCHOR_FILE", DefaultAnchorFile))
+      loadAnchor(sys.env.getOrElse("SPARK_GRAFT_ANCHOR_FILE", defaultAnchorFile))
     anchor match {
       case Right(a) => println(s"[bench] anchor from ${a.file}: " +
         f"total ${a.total}%.1f s, q70First ${a.q70First}%.2f, q03First ${a.q03First}%.2f")

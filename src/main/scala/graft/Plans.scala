@@ -43,13 +43,18 @@ object Plans {
     * The shuffle-bytes probe (Scale.shuffleProbe) substitutes the same
     * frame for the same reason. q25 is the same case: its fn collects the
     * µ̂/length union and calibrates on the driver, so the audit explains
-    * that union (Tare.lengthInputs) instead. */
+    * that union (Tare.lengthInputs) instead. So is q26: Tare.kmerBiasFit
+    * executes its k-mer count aggregate while the frame is built, and the
+    * returned frame scans that executed RDD, so the audit explains the lazy
+    * count frame (GenomicsQueries.kmerCalibrationCounts). */
   val auditSubstitutes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map("q146_scatter_axis" -> ((s, d) => ops.Similarity.scatterFrame(s, d)),
       "q25_length_calibration" -> { (s, d) =>
         val (mu, tLen) = relational.GenomicsQueries.lengthCalibrationInputs(s, d)
         calibrate.Tare.lengthInputs(mu, tLen)
-      })
+      },
+      "q26_kmer_calibration" -> ((s, d) =>
+        relational.GenomicsQueries.kmerCalibrationCounts(s, d)))
 
   /** Memo-BUILD frames audited in ADDITION to the registered queries
     * (ADVICE r14): a stage that moves inside a session memo leaves every

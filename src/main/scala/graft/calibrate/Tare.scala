@@ -55,6 +55,13 @@ object Tare {
     * asserts, Tare.scala:91) is left out of the fit and of the mean, keeps
     * its raw count, and is counted in a warning.
     *
+    * One execution of the input: `kmers` runs once, through
+    * `GraftColumnBridge.executed`, and both the Gram pass below and the
+    * returned projection are scans of that one executed RDD. When `kmers`
+    * is an aggregate (Quantify's read k-mer counts), its source scan and
+    * map-side aggregate run once, in this call; the partials job and every
+    * later action on the result read its shuffle output.
+    *
     * Solve: one `mapPartitions` pass emits a partial per partition (the
     * Gram XᵀX, Xᵀy with y = ln(count) floor-quantized per row to ×1e6
     * integers, Σ count, n); only these partials reach the driver, never the
@@ -78,12 +85,13 @@ object Tare {
     */
   def kmerBiasFit(kmers: DataFrame): DataFrame = {
     import kmers.sparkSession.implicits._
+    val counted = org.apache.spark.sql.GraftColumnBridge.executed(kmers)
     val d = 16
     val nGram = d * (d + 1) / 2
     // per partition: the upper triangle of XᵀX then Xᵀy, row by row in scan
     // order, with Σ count, n and skipped; the driver adds the partials in
     // partition order
-    val partials = kmers.select(col("kmer"), col("count").cast("long"))
+    val partials = counted.select(col("kmer"), col("count").cast("long"))
       .as[(String, Long)]
       .mapPartitions { rows =>
         val s = new Array[Double](nGram + d)
@@ -130,7 +138,7 @@ object Tare {
         StrictMath.exp(mean + StrictMath.log(count.toDouble) - pred)
       }
     }
-    kmers.select(col("kmer"), col("count"),
+    counted.select(col("kmer"), col("count"),
       calibrate(col("kmer"), col("count").cast("long")).as("calibrated"))
   }
 

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** GTF/GFF2 gene-annotation source — the rebuild of the reference's
@@ -18,22 +18,31 @@ object Gtf {
 
   /** Exon-level relation: (tid, gene_id, seqname, start, end, strand).
     * GTF coordinates are 1-based inclusive; normalized here to the
-    * half-open 0-based [start, end) the engine uses. */
+    * half-open 0-based [start, end) the engine uses. An exon line whose
+    * start or end is not an integer fails the scan with an error that names
+    * the file and quotes the line, whatever the session's ANSI setting. */
   def exons(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.text(path)
     raw
       .filter(!col("value").startsWith("#"))
-      .select(split(col("value"), "\t").as("f"))
+      .select(col("value"), split(col("value"), "\t").as("f"))
       .filter(size(col("f")) >= 9 && col("f").getItem(2) === "exon")
       .select(
         regexp_extract(col("f").getItem(8), """transcript_id "([^"]+)"""", 1).as("tid"),
         regexp_extract(col("f").getItem(8), """gene_id "([^"]+)"""", 1).as("gene_id"),
         col("f").getItem(0).as("seqname"),
-        (col("f").getItem(3).cast("long") - 1).as("start"),
-        col("f").getItem(4).cast("long").as("end"),
+        (coordinate(col("f").getItem(3), "start") - 1).as("start"),
+        coordinate(col("f").getItem(4), "end").as("end"),
         (col("f").getItem(6) === "+").as("strand"))
       .filter(col("tid") =!= "")
   }
+
+  /** A coordinate field as a long, or an error naming the file and the line
+    * (the row's `value`) when the field is not an integer. */
+  private def coordinate(field: Column, name: String): Column =
+    coalesce(field.try_cast("long"), raise_error(concat(
+      lit(s"malformed GTF: $name '"), field, lit("' is not an integer in "),
+      input_file_name(), lit(" at line: "), col("value"))))
 
   /** Transcript-level relation matching the engine's Transcript shape:
     * (id, names, geneId, strand, exons array<struct<...>>). */

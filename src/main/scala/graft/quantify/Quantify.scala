@@ -3,7 +3,7 @@ package graft.quantify
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import graft.kmer.Kmers
 import graft.model.{Read, Transcript}
 
@@ -29,10 +29,27 @@ import graft.model.{Read, Transcript}
   * depend on `maxIterations`. µ stays UNNORMALIZED across iterations (the
   * E step is scale-invariant), and Σ=1 is applied once at the end. The
   * length calibration ([[graft.calibrate.Tare.lengthBias]]) runs over the
-  * same arrays, so the whole tail after the collect is on the driver, and
-  * µ̂ becomes a frame once, for the final descriptor join. The
+  * same arrays, so the whole tail after the collect is on the driver. The
   * DataFrame steps [[initializeEM]], [[eStep]] and [[mStep]] remain the
   * query-surface and reference form of the same math.
+  *
+  * Each input is read once. The read k-mer counts are one aggregate: with
+  * k-mer calibration on, [[graft.calibrate.Tare.kmerBiasFit]] executes it
+  * once, and the class map reads its shuffle output. The annotation is
+  * collected once, in one job that runs beside the read counting, as
+  * descriptors plus lengths: the driver looks the edges' lengths up in it,
+  * and the result is a local relation of the collected descriptors of the
+  * transcripts that have a µ̂, plus their abundance. There is no final
+  * join, and no second scan of the annotation.
+  *
+  * The EM is a fixed point after its first round, as in the reference. The
+  * index keys each class by (transcript, multiplicity)
+  * ([[graft.index.Indexer]]), so every class has one transcript: the E step
+  * gives α = µ/µ = 1 and every later M step recomputes the same µ. Any
+  * `maxIterations` ≥ 1 therefore gives the same µ̂ to the bit on an index
+  * built by `Indexer`; QuantifySuite pins 1 against 50. The loop is kept
+  * for class tables that hold several transcripts per class (the
+  * reference's hand-built fixtures).
   */
 object Quantify {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -149,40 +166,69 @@ object Quantify {
     greatest(len - (k - 1), lit(1L)).cast("double")
 
   /** The counted classes' membership edges in flat form, for [[emLoop]].
-    * @param tids       transcript ids, in the type of `ecToTx.tid`
+    * @param tx         annotation row of each transcript
     * @param len        length of each transcript
     * @param effLen     effective length of each transcript
     * @param classCount read count of each counted class
     * @param edgeClass  class of each edge
-    * @param edgeTx     transcript of each edge, −1 when it has no length row
+    * @param edgeTx     transcript of each edge, −1 when its length is unknown
     * @param clamped    transcripts whose effective length was floored
     */
-  private final case class Edges(tids: IndexedSeq[Any], len: Array[Double],
+  private final case class Edges(tx: Array[Int], len: Array[Double],
       effLen: Array[Double], classCount: Array[Double], edgeClass: Array[Int],
       edgeTx: Array[Int], clamped: Int)
 
-  /** Collect every class of `ecCounts` with its `ecToTx` rows and their
-    * transcripts' lengths, in one job. The left joins keep what the
-    * DataFrame form's inner joins drop from the EM but not from its
-    * constants: a counted class with no member still feeds k_j's
-    * denominator, and a member with no length row still counts in its
-    * class's size. Transcripts are those with a length row and an edge.
-    * The rows are sorted by (ec, tid) on the driver before any index is
+  /** The collected annotation: one row per transcript, (tid, names,
+    * geneId, strand, exons, len, effLen), and each tid's row index. */
+  private final case class Annotation(rows: Array[Row], index: collection.Map[Any, Int]) {
+    /** (row index, len, effLen) of transcript `tid`; None when it is not
+      * annotated or its length is unknown. */
+    def lengthOf(tid: Any): Option[(Int, Long, Double)] =
+      index.get(tid).filterNot(rows(_).isNullAt(5))
+        .map(i => (i, rows(i).getLong(5), rows(i).getDouble(6)))
+  }
+
+  private object Annotation {
+    /** Index `rows` by tid; a tid that appears twice fails, naming it. */
+    def apply(rows: Array[Row]): Annotation = {
+      val index = scala.collection.mutable.HashMap.empty[Any, Int]
+      rows.indices.foreach { i =>
+        require(index.put(rows(i).get(0), i).isEmpty,
+          s"transcript id '${rows(i).get(0)}' appears more than once in the annotation")
+      }
+      Annotation(rows, index)
+    }
+  }
+
+  /** The value of a `GraftColumnBridge.async` job, or the exception it
+    * threw. */
+  private def await[T](job: java.util.concurrent.Future[T]): T =
+    try job.get()
+    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+  /** Collect every class of `ecCounts` with its `ecToTx` rows, in one job,
+    * then look each member up in the annotation on the driver, once the
+    * `annotation` job has delivered it. Members match by tid in the
+    * annotation's id type `tidType`, to which `ecToTx.tid` is cast. The
+    * left join keeps what the DataFrame form's inner joins drop from the EM
+    * but not from its constants: a counted class with no member still feeds
+    * k_j's denominator, and a member with no known length still counts in
+    * its class's size. Transcripts are the members with a known length. The
+    * rows are sorted by (ec, tid) on the driver before any index is
     * assigned, so [[emLoop]] and the length calibration sum in one order
     * whatever the partition layout that delivered them: µ̂ is the same to
     * the bit at any shuffle-partition count or executor layout. */
-  private def collectEdges(ecCounts: DataFrame, ecToTx: DataFrame,
-      tLen: DataFrame, k: Int): Edges = {
+  private def collectEdges(ecCounts: DataFrame, ecToTx: DataFrame, tidType: DataType,
+      annotation: java.util.concurrent.Future[Annotation], k: Int): Edges = {
     val rows = ecCounts
       .join(ecToTx, Seq("ec"), "left")
-      .join(tLen, Seq("tid"), "left")
-      .select(col("ec"), col("count").cast("double"), col("tid"), col("len"),
-        effectiveLength(col("len"), k))
+      .select(col("ec"), col("count").cast("double"), col("tid").cast(tidType))
       .collect()
       .sortBy(r => (r.get(0), r.get(2)))(Ordering.Tuple2(byValue, byValue))
+    val annotated = await(annotation)
     val classIdx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val txIdx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val tids = Vector.newBuilder[Any]
+    val txIdx = scala.collection.mutable.HashMap.empty[Int, Int]
+    val tx = Array.newBuilder[Int]
     val len, effLen, classCount = Array.newBuilder[Double]
     val edgeClass, edgeTx = Array.newBuilder[Int]
     var clamped = 0
@@ -192,14 +238,16 @@ object Quantify {
       })
       if (!r.isNullAt(2)) {
         edgeClass += c
-        edgeTx += (if (r.isNullAt(3)) -1 else txIdx.getOrElseUpdate(r.get(2), {
-          tids += r.get(2); len += r.getLong(3).toDouble; effLen += r.getDouble(4)
-          if (r.getDouble(4) > r.getLong(3) - k + 1) clamped += 1
-          txIdx.size
-        }))
+        edgeTx += annotated.lengthOf(r.get(2)).fold(-1) { case (row, l, eff) =>
+          txIdx.getOrElseUpdate(row, {
+            tx += row; len += l.toDouble; effLen += eff
+            if (eff > l - k + 1) clamped += 1
+            txIdx.size
+          })
+        }
       }
     }
-    Edges(tids.result(), len.result(), effLen.result(), classCount.result(),
+    Edges(tx.result(), len.result(), effLen.result(), classCount.result(),
       edgeClass.result(), edgeTx.result(), clamped)
   }
 
@@ -262,19 +310,25 @@ object Quantify {
     * @return DataFrame(tid, len)
     */
   def transcriptLengths(transcripts: Dataset[Transcript]): DataFrame =
-    transcripts.select(col("id").as("tid"),
-      expr("aggregate(exons, 0L, (acc, e) -> acc + (e.region.end - e.region.start - 1))").as("len"))
+    transcripts.select(col("id").as("tid"), transcriptLength.as("len"))
+
+  /** The one definition of a transcript's length, over its `exons` column. */
+  private def transcriptLength: Column =
+    expr("aggregate(exons, 0L, (acc, e) -> acc + (e.region.end - e.region.start - 1))")
 
   /** End-to-end quantification (reference Quantify.scala:42-127).
     *
     * @param reads    read set (only `.sequence` is consumed)
     * @param kmerToEc index half 1: DataFrame(kmer, ec)
     * @param ecToTx   class membership: DataFrame(ec, tid)
-    * @param transcripts transcript descriptors (for lengths + final join)
+    * @param transcripts transcript descriptors (lengths and the result's
+    *   descriptors), collected to the driver once; an id that appears twice
+    *   fails with an error that names it
     * @return DataFrame(tid, names, geneId, strand, exons, abundance) — the
     *   full transcript descriptor plus abundance (Σ abundance = 1), as the
-    *   reference's RDD[(Transcript, Double)]; no rows, with a warning, when
-    *   no read k-mer matches the index
+    *   reference's RDD[(Transcript, Double)], as a local relation; no row
+    *   for a transcript with no counted class, and no rows, with a warning,
+    *   when no read k-mer matches the index
     */
   def apply(
       reads: Dataset[Read],
@@ -288,6 +342,18 @@ object Quantify {
 
     import graft.util.Timers
     val spark = reads.sparkSession
+    // the annotation is collected once, in one job, while the reads are
+    // counted: the descriptors the result carries and the lengths the EM
+    // divides by
+    val descriptors = transcripts.select(col("id").as("tid"), col("names"),
+      col("geneId"), col("strand"), col("exons"))
+    val annotation = org.apache.spark.sql.GraftColumnBridge.async(spark) {
+      Timers.time("loadAnnotation") {
+        Annotation(descriptors.select(col("*"), transcriptLength.as("len"))
+          .select(col("*"), effectiveLength(col("len"), kmerLength).as("effLen"))
+          .collect())
+      }
+    }
     val readKmers = Timers.time("countKmers") { countKmers(reads.toDF(), kmerLength) }
     val calibrated =
       if (calibrateKmerBias) Timers.time("tareKmers") {
@@ -300,11 +366,11 @@ object Quantify {
     }
 
     // the edges are collected once and the EM and the length calibration
-    // run on the driver. The collect is the first action, so `em` also times
-    // the lazy stages above.
+    // run on the driver. The collect is this thread's first action after the
+    // k-mer calibration's, so `em` also times the lazy stages above.
     val (edges, mu) = Timers.time("em") {
-      val edges = collectEdges(ecCounts, ecToTx, transcriptLengths(transcripts),
-        kmerLength)
+      val edges = collectEdges(ecCounts, ecToTx, descriptors.schema("tid").dataType,
+        annotation, kmerLength)
       if (edges.classCount.isEmpty)
         log.warn(s"no read $kmerLength-mer matches the index: the read set is " +
           s"empty, every read is shorter than k = $kmerLength, or the index was " +
@@ -320,19 +386,17 @@ object Quantify {
         graft.calibrate.Tare.lengthBias(mu, edges.len)
       }
       else mu
-    // µ̂ as a one-row-per-transcript frame keyed by ecToTx's tid type
-    val muHat = spark.createDataFrame(
-      edges.tids.zip(calibratedMu).map { case (t, m) => Row(t, m) }.asJava,
-      StructType(Seq(ecToTx.schema("tid"), StructField("muHat", DoubleType))))
 
-    // final join against full transcript descriptors (Quantify.scala:286-295):
-    // the reference returns RDD[(Transcript, Double)] — the COMPLETE
-    // descriptor (names, geneId, strand, exons) rides along with the
-    // abundance so gene-level rollups need no second join
-    transcripts.select(col("id").as("tid"), col("names"), col("geneId"),
-        col("strand"), col("exons"))
-      .join(muHat, "tid")
-      .select(col("tid"), col("names"), col("geneId"), col("strand"),
-        col("exons"), col("muHat").as("abundance"))
+    // the full transcript descriptor rides along with the abundance, as the
+    // reference's RDD[(Transcript, Double)] (Quantify.scala:286-295), so
+    // gene-level rollups need no second join: a local relation of the
+    // transcripts that have a µ̂, in the EM's order
+    val described = await(annotation).rows
+    spark.createDataFrame(
+      edges.tx.indices.map { t =>
+        val d = described(edges.tx(t))
+        Row(d.get(0), d.get(1), d.get(2), d.get(3), d.get(4), calibratedMu(t))
+      }.asJava,
+      StructType(descriptors.schema.fields :+ StructField("abundance", DoubleType)))
   }
 }

@@ -122,6 +122,21 @@ object GenomicsQueries {
     (mu, tLen)
   }
 
+  /** q26's input, the 4-mer counts of a DNA slice of the corpus. The oracle
+    * mirrors the fit for DNA-alphabet k-mers (every context valid, an exact
+    * integer Gram), so the slice is mapped to a deterministic DNA sequence
+    * first: md5(text) hex → ACGT. k=4 over a 256-kmer space gives
+    * multiplicities big enough for the log-count regression to have signal.
+    * `kmerBiasFit` executes this aggregate while q26 is built, so q26's
+    * returned frame scans its output; `Plans.auditSubstitutes` audits this
+    * lazy frame instead. */
+  def kmerCalibrationCounts(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val dna = Tables.documents(s, d).filter($"doc_id" < 200)
+      .select(translate(md5($"text"), "0123456789abcdef", "ACGTACGTACGTACGT").as("sequence"))
+    Quantify.countKmers(dna, 4)
+  }
+
   private val kmSql =
     """km AS (
       |  SELECT doc_id, substr(text, i, 8) AS kmer
@@ -341,16 +356,7 @@ object GenomicsQueries {
     Q("q26_kmer_calibration",
       (s, d) => {
         import s.implicits._
-        // the oracle mirrors the fit for DNA-alphabet k-mers (every context
-        // valid, an exact integer Gram), so the corpus slice is mapped to a
-        // deterministic DNA sequence first: md5(text) hex → ACGT.
-        // k=4 over a 256-kmer space gives multiplicities big enough for the
-        // log-count regression to have signal.
-        val dna = Tables.documents(s, d).filter($"doc_id" < 200)
-          .select(translate(md5($"text"),
-            "0123456789abcdef", "ACGTACGTACGTACGT").as("sequence"))
-        val kmers = Quantify.countKmers(dna, 4)
-        graft.calibrate.Tare.kmerBiasFit(kmers)
+        graft.calibrate.Tare.kmerBiasFit(kmerCalibrationCounts(s, d))
           .select($"kmer", round($"calibrated", 6).as("cal_count"))
           .orderBy($"kmer")
       },

@@ -3,47 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stateful Structured Streaming: per-user running event counts via
-  * `mapGroupsWithState` (SURVEY §2.8's KeyValueGroupedDataset custom-state
-  * surface). The state is one Long per user — at 100 TB the state store
-  * shards by the group key like any keyed state.
+/** Stateful Structured Streaming: per-user event-count milestones via
+  * `flatMapGroupsWithState` (SURVEY §2.8's KeyValueGroupedDataset
+  * custom-state surface), q73's query. The state is one Long per user — at
+  * 100 TB the state store shards by the group key like any keyed state.
   */
 object StatefulSessions {
 
-  /** Streams the events table through a per-user counting state machine and
-    * drains it into a memory sink (update mode); returns the sink table.
-    * The latest state per user must equal the batch per-user count. */
-  def runningUserCounts(s: SparkSession, d: String, sinkName: String): DataFrame = {
-    import s.implicits._
-    val staticDf = s.read.parquet(s"$d/events.parquet")
-    val stream = s.readStream.schema(staticDf.schema)
-      .parquet(Staging.stageTable(d, "events"))
-    val counts = stream.selectExpr("user_id").as[Long]
-      .groupByKey(identity)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, events: Iterator[Long], state: GroupState[Long]) =>
-          val total = state.getOption.getOrElse(0L) + events.size
-          state.update(total)
-          (uid, total)
-      }
-      .toDF("user_id", "n")
-
-    val query = counts.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    s.table(sinkName)
-  }
-
-  /** `flatMapGroupsWithState` variant — the 0..n-rows-per-group state
-    * surface: per user, emits a milestone row each time the running event
-    * count crosses a multiple of `every`. Unlike mapGroupsWithState (exactly
-    * one row per group per batch), the iterator return lets a group stay
-    * silent or emit several rows — the shape session-close/alert emission
-    * takes.
+  /** The 0..n-rows-per-group state surface: per user, emits a milestone
+    * row each time the running event count crosses a multiple of `every`.
+    * Unlike mapGroupsWithState (exactly one row per group per batch), the
+    * iterator return lets a group stay silent or emit several rows — the
+    * shape session-close/alert emission takes.
     * @return DataFrame(user_id, milestone) via the named memory sink
     */
   def countMilestones(s: SparkSession, d: String, sinkName: String,

@@ -43,6 +43,38 @@ class IoSuite extends SparkSuite {
     assert(t("t2").length === 1)
   }
 
+  test("GTF: a non-integer coordinate fails index and quantify with the file and line") {
+    val fa = write("genome_bad", ">chr1\nCAATCCTTCGCCGCAGTGCA\n")
+    val annotation =
+      """chr1	t	exon	1	10	.	+	.	gene_id "g1"; transcript_id "transcript1";
+        |chr1	t	exon	12	20	.	+	.	gene_id "g1"; transcript_id "transcript2";
+        |""".stripMargin
+    val good = write("ann_good", annotation)
+    val bad = write("ann_bad", annotation.replace("\t12\t20\t", "\t12x\t20\t"))
+    val badLine = annotation.linesIterator.toSeq(1).replace("\t12\t", "\t12x\t")
+    val out = Files.createTempDirectory("graft_cli_badgtf").toString
+    // every message on the cause chain: Spark wraps the task's error
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    def assertNamed(e: Throwable): Unit = {
+      val m = messages(e)
+      assert(m.contains("malformed GTF: start '12x' is not an integer"), m)
+      assert(m.contains(java.nio.file.Paths.get(bad).getFileName.toString), m)
+      assert(m.contains(badLine), m)
+      assert(!m.contains("CAST_INVALID_INPUT"), m)
+    }
+    assertNamed(intercept[Exception] {
+      graft.cli.Main.main(Array("index", fa, bad, "5", s"$out/idx_bad"))
+    })
+    graft.cli.Main.main(Array("index", fa, good, "5", s"$out/idx"))
+    Seq("CAATCCTTCG", "CGCAGTGCA").toDF("sequence").write.mode("overwrite")
+      .parquet(s"$out/reads")
+    assertNamed(intercept[Exception] {
+      graft.cli.Main.main(Array("quantify", s"$out/reads", s"$out/idx", bad, "5",
+        s"$out/abundances", "-max_iterations", "5"))
+    })
+  }
+
   test("FASTA reader concatenates wrapped lines per record") {
     val path = write("ref", ">chr1 description\nCAATC\nCTTCG\n>chr2\nGCAGTGCA\n")
     val genome = Fasta.read(path)

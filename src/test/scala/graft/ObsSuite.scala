@@ -51,6 +51,14 @@ class ObsSuite extends AnyFunSuite {
     }
   }
 
+  test("Bench's default anchor and output resolve against the working directory") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    assert(Bench.defaultAnchorFile === cwd.resolve("bench_runs/r12_builder_146s.json").toString)
+    assert(new java.io.File(Bench.defaultAnchorFile).isFile)
+    assert(Bench.defaultOut(None) === cwd.resolve("BENCH.json").toString)
+    assert(Bench.defaultOut(Some(Seq("q01"))) === "/tmp/BENCH_only.json")
+  }
+
   test("Bench's context verdict: in-band canaries and a load spike") {
     val loads = Seq("q1" -> 1.0, "q2" -> 9.0, "q3" -> 1.5, "q4" -> -1.0)
     val v = Bench.verdict(Seq(1.0, 0.5), Seq(1.0, 0.5), Seq(1.2, 0.5), 100.0, loads, None)

@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.index.Indexer
@@ -427,31 +428,114 @@ class QuantifySuite extends SparkSuite {
     val (reads, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
     val jobs = Seq(1, 50).map { n =>
       spark.catalog.clearCache()
-      jobsSubmitted {
+      measured {
         Quantify(reads, kmerToEc, ecToTx, txDs, emK, n,
           calibrateKmerBias = false, calibrateLengthBias = false).collect()
-      }
+      }.jobs
     }
     assert(jobs.head > 0)
     assert(jobs.head === jobs.last)
   }
 
-  /** Spark jobs submitted while `body` runs, as a SparkListener sees them:
-    * the body runs in its own job group, and a marker job in a second group
-    * shows that the listener has been sent every earlier job's start. */
-  private def jobsSubmitted(body: => Unit): Int = {
+  /** Six independent transcripts, each on its own contig, with generated
+    * reads: (sequences, names, genome, annotation). */
+  private def genomeFixture = {
+    val (transcripts, names, _, _) = TranscriptGenerator.generateIndependentTranscripts(
+      20, Seq(1000, 600, 400, 550, 1275, 1400), Some(1234L))
+    val txDs = names.zip(transcripts).map { case (n, seq) =>
+      Transcript(n, Seq(n), "g" + n, true,
+        Seq(Exon(n + "exon", n, true, ReferenceRegion(n, 0L, seq.length.toLong))))
+    }
+    (transcripts, names, names.zip(transcripts).toMap, txDs)
+  }
+
+  test("on an Indexer index the EM is a fixed point: 1 and 50 iterations agree to the bit") {
+    // every class is one (transcript, multiplicity) key, so the E step gives
+    // α = 1 and each later M step recomputes the first round's µ
+    val (transcripts, _, genome, txs) = genomeFixture
+    val txDs = txs.toDS()
+    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 20, deterministicIds = true)
+    val reads = ReadGenerator(transcripts, Seq(0.2, 0.1, 0.3, 0.2, 0.1, 0.1), 4000, 75,
+      Some(4321L)).toDS()
+    val bits = Seq(1, 50).map { n =>
+      Quantify(reads, idx.kmerToEc, idx.ecToTx, txDs, 20, n,
+          calibrateKmerBias = false, calibrateLengthBias = false)
+        .select("tid", "abundance").collect()
+        .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    }
+    assert(bits.head.size === 6)
+    assert(bits.head === bits.last)
+  }
+
+  test("calibrated Quantify.apply reads the FASTQ, the GTF and the index once") {
+    import java.nio.file.{Files, Path}
+    val (transcripts, names, genome, _) = genomeFixture
+    val dir = Files.createTempDirectory("graft_quantify_input")
+    def write(name: String, lines: Iterable[String]): String =
+      Files.writeString(dir.resolve(name), lines.mkString("", "\n", "\n")).toString
+    val fa = write("genome.fa", genome.toSeq.flatMap { case (n, seq) => Seq(">" + n, seq) })
+    val gtf = write("annotation.gtf", names.map { n =>
+      s"$n\tt\texon\t1\t${genome(n).length}\t.\t+\t.\tgene_id \"g$n\"; transcript_id \"$n\";"
+    })
+    val fastq = write("reads.fastq", ReadGenerator(transcripts,
+        Seq(0.2, 0.1, 0.3, 0.2, 0.1, 0.1), 4000, 75, Some(4321L)).zipWithIndex
+      .flatMap { case (r, i) => Seq(s"@r$i", r.sequence, "+", "I" * r.sequence.length) })
+    val index = dir.resolve("idx").toString
+    graft.cli.Main.main(Array("index", fa, gtf, "20", index))
+    val indexFiles = Seq("_kmers", "_classes", "_tx").flatMap { t =>
+      Files.list(Path.of(index + t)).toArray(n => new Array[Path](n)).toSeq
+        .filter(_.getFileName.toString.startsWith("part-"))
+    }
+    val onDisk = (Seq(Path.of(fastq), Path.of(gtf)) ++ indexFiles).map(Files.size).sum
+
+    spark.catalog.clearCache()
+    val read = measured {
+      Quantify(graft.io.Fastq.loadReads(spark, fastq).as[Read],
+        graft.io.IndexSchema.readNormalized(spark, index + "_kmers"),
+        graft.io.IndexSchema.readEcToTx(spark, index, false),
+        graft.io.Gtf.transcripts(spark, gtf).as[Transcript], 20, 5).collect()
+    }.bytesRead
+    info(s"$read bytes read from $onDisk bytes of input")
+    assert(Files.size(Path.of(fastq)) > onDisk / 2)
+    assert(read > 0)
+    assert(read <= 1.05 * onDisk, s"$read bytes read from $onDisk bytes of input")
+  }
+
+  test("a transcript id that appears twice in the annotation fails with its name") {
+    val (reads, kmerToEc, ecToTx, txDs) = emInputs(emWidths)
+    val e = intercept[IllegalArgumentException] {
+      Quantify(reads, kmerToEc, ecToTx, txDs.union(txDs.filter($"id" === "c")), emK, 5,
+        calibrateKmerBias = false, calibrateLengthBias = false)
+    }
+    assert(e.getMessage.contains("transcript id 'c' appears more than once"))
+  }
+
+  /** Spark jobs submitted, and input bytes read by their tasks, while `body`
+    * runs, as a SparkListener sees them: the body runs in its own job group,
+    * and a marker job in a second group shows that the listener has been
+    * sent every earlier job's events. */
+  private final class Measured(val jobs: Int, val bytesRead: Long)
+  private def measured(body: => Unit): Measured = {
     val sc = spark.sparkContext
     val group = s"quantify-jobs-${System.nanoTime()}"
     val marker = group + "-end"
     val jobs = new AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val seen = new CountDownLatch(1)
+    def groupOf(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id"))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+        groupOf(e.properties) match {
           case Some(`group`) => jobs.incrementAndGet()
           case Some(`marker`) => seen.countDown()
           case _ =>
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties).contains(group)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
     }
     sc.addSparkListener(listener)
     try {
@@ -464,6 +548,6 @@ class QuantifySuite extends SparkSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    new Measured(jobs.get, bytes.get)
   }
 }

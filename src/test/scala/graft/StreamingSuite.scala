@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StatefulSessions
+import graft.streaming.{RunningUserCounts, StatefulSessions}
 
 /** Structured Streaming specs: the stateful per-user counter must converge
   * to the same totals as the batch aggregation over the same events table.
@@ -11,7 +11,7 @@ class StreamingSuite extends SparkSuite {
 
   test("mapGroupsWithState running counts match batch per-user counts") {
     val d = "/root/testdata/sf0.001"
-    val sink = StatefulSessions.runningUserCounts(spark, d, "stateful_counts_test")
+    val sink = RunningUserCounts.runningUserCounts(spark, d, "stateful_counts_test")
     // update-mode sink holds every intermediate state row; the final state
     // per user is the max
     val streamed = sink.groupBy($"user_id").agg(max($"n").as("n"))
