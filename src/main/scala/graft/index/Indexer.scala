@@ -12,11 +12,14 @@ import graft.kmer.Kmers
   * within ONE transcript; a k-mer appearing in N transcripts lands in N
   * classes, which is what lets the EM split shared k-mer mass.
   *
-  * Pipeline (all hash-aggregated with partial aggregation — the reference's
-  * groupByKey at Index.scala:96 is upgraded for free):
-  *   (tid, sequence) → explode k-mers → count per (tid, kmer)     [A1]
-  *   → class key = (tid, multiplicity) → class id                 [A2]
-  *   → invert to kmer→class and class→kmers                       [Index.scala:104-109]
+  * Because a class lives inside one transcript, all three tables are
+  * functions of one transcript row, and the index is built per row with no
+  * shuffle (the reference's groupByKey at Index.scala:96 groups what one
+  * row already holds):
+  *   (tid, sequence) → KmerClasses: count the row's k-mers locally,
+  *     one (mult, sorted kmers) row per distinct multiplicity     [A1]
+  *   → class id = hash of the class key (tid, mult)               [A2]
+  *   → project/explode to kmer→class, class→kmers, class→tid      [Index.scala:104-109]
   */
 object Indexer {
 
@@ -25,7 +28,12 @@ object Indexer {
     */
   final case class Result(kmerToEc: DataFrame, ecToKmers: DataFrame, ecToTx: DataFrame)
 
-  /** @param transcriptSeqs DataFrame(id string, sequence string)
+  /** @param transcriptSeqs DataFrame(id, sequence string) with ONE row per
+    *   id: a class key is (id, multiplicity) within one row, so a repeated
+    *   id would give that id's classes twice, with colliding class ids.
+    *   `io.Gtf.transcripts` groups exons by transcript id, `documents` is
+    *   keyed by `doc_id`, and `Quantify.apply` rejects a duplicate
+    *   transcript id in the annotation.
     * @param k k-mer length
     * @param deterministicIds class ids are a pure function of the class key
     *   (tid, multiplicity) in BOTH modes — no global sort, no id-assignment
@@ -40,10 +48,8 @@ object Indexer {
     *     scale path. Collision odds at 10⁸ classes: ~n²/2⁶⁵ ≈ 3·10⁻⁴.
     */
   def apply(transcriptSeqs: DataFrame, k: Int, deterministicIds: Boolean = false): Result = {
-    val kmerMult = transcriptSeqs
-      .select(col("id").as("tid"), Kmers.kmerExplode(col("sequence"), k).as("kmer"))
-      .groupBy("tid", "kmer")
-      .agg(count(lit(1)).as("mult"))
+    val classes = transcriptSeqs
+      .select(col("id").as("tid"), Kmers.kmerClasses(col("sequence"), k))
 
     val ecId =
       if (deterministicIds)
@@ -51,13 +57,12 @@ object Indexer {
       else
         xxhash64(concat(col("tid"), lit(":"), col("mult")))
 
-    val withEc = kmerMult.withColumn("ec", ecId)
-      .cache() // consumed by all three output relations
+    val withEc = classes.withColumn("ec", ecId)
 
     Result(
-      kmerToEc = withEc.select("kmer", "ec"),
-      ecToKmers = withEc.groupBy("ec").agg(sort_array(collect_list("kmer")).as("kmers")),
-      ecToTx = withEc.select("ec", "tid").distinct())
+      kmerToEc = withEc.select(explode(col("kmers")).as("kmer"), col("ec")),
+      ecToKmers = withEc.select("ec", "kmers"),
+      ecToTx = withEc.select("ec", "tid"))
   }
 
   /** Index transcripts laid out on a reference genome — `index`'s path

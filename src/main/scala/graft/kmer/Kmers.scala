@@ -1,6 +1,6 @@
 package graft.kmer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 
 /** k-merization as a native Catalyst generator — no Scala UDFs, so it
   * stays inside whole-stage codegen and the optimizer can prune/push
@@ -14,4 +14,9 @@ object Kmers {
     * the custom Catalyst expression (no intermediate array). */
   def kmerExplode(seq: Column, k: Int): Column =
     KmerGenerator.kmer_explode(seq, k)
+
+  /** One sequence row → `(mult long, kmers array<string>)` rows, one per
+    * distinct k-mer multiplicity in the row ([[KmerClasses]]). */
+  def kmerClasses(seq: Column, k: Int): Column =
+    GraftColumnBridge.column(KmerClasses(GraftColumnBridge.expression(seq), k))
 }

@@ -133,6 +133,34 @@ class IoSuite extends SparkSuite {
     assert(graft.io.Genome.read(fa) === genome)
   }
 
+  test("2bit: a truncated or corrupt file fails index with an error naming the file") {
+    val whole = Files.readAllBytes(twoBitGenome()) // 89 bytes: chr1 at 34, chr2 at 71
+    def variant(tag: String)(edit: java.nio.ByteBuffer => Array[Byte]): String = {
+      val b = java.nio.ByteBuffer.wrap(whole.clone()).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val f = Files.createTempFile(s"graft_$tag", ".2bit")
+      Files.write(f, edit(b))
+      f.toString
+    }
+    val broken = Seq(
+      "cut_index" -> variant("cut_index")(_.array().take(20)),
+      "cut_chr1_dna" -> variant("cut_chr1_dna")(_.array().take(69)),
+      "cut_chr2_dna" -> variant("cut_chr2_dna")(_.array().take(whole.length - 1)),
+      "bad_offset" -> variant("bad_offset")(_.putInt(30, 1000).array()),
+      "bad_n_block" -> variant("bad_n_block")(_.putInt(46, 100).array()))
+    for ((tag, path) <- broken) {
+      val e = intercept[java.io.IOException](graft.io.Genome.read(path))
+      assert(e.getMessage.contains(path) && e.getMessage.contains("2bit"), s"$tag: $e")
+    }
+    // through the CLI, as `index` meets it
+    val gtf = write("ann_2bit", gtfContent)
+    val out = Files.createTempDirectory("graft_cli_2bit").toString
+    val path = broken.head._2
+    val e = intercept[java.io.IOException] {
+      graft.cli.Main.main(Array("index", path, gtf, "5", s"$out/idx"))
+    }
+    assert(e.getMessage.contains(path), e.getMessage)
+  }
+
   test("genome readers open Hadoop URIs, not only local paths") {
     // the same genome via a file:// URI as via the plain path, for both
     // formats (cluster submission passes hdfs:// or s3a:// the same way)

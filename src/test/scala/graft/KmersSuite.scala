@@ -7,7 +7,8 @@ import graft.utils.KmerColumns
 /** The native KmerGenerator must agree with Scala's `String.sliding` —
   * the reference's own definition of k-merization (Index.scala:87-89) —
   * on BOTH of its code paths: the ASCII byte-slicing fast path and the
-  * char-indexed multibyte fallback. */
+  * char-indexed multibyte fallback. The index built on the same slicing
+  * (`KmerClasses`) runs without a shuffle. */
 class KmersSuite extends SparkSuite {
   import spark.implicits._
 
@@ -57,5 +58,28 @@ class KmersSuite extends SparkSuite {
       .select(Kmers.kmerExplode($"s", 3).as("km"))
       .collect().map(_.getString(0)).sorted.toSeq
     assert(viaArray === viaGen)
+  }
+
+  test("the index tables execute with no shuffle exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def shuffles(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec => 1 + shuffles(e.child)
+      case other => other.children.map(shuffles).sum
+    }
+    val seqs = Seq("t1" -> "CAATCCTTCGCAATCC", "t2" -> "GCAGTGCAGTGCA", "t3" -> "AC")
+      .toDF("id", "sequence")
+    val idx = graft.index.Indexer(seqs, 4)
+    for ((name, df) <- Seq("kmerToEc" -> idx.kmerToEc, "ecToKmers" -> idx.ecToKmers,
+        "ecToTx" -> idx.ecToTx)) {
+      assert(df.collect().nonEmpty, name)
+      assert(shuffles(df.queryExecution.executedPlan) === 0,
+        s"$name:\n${df.queryExecution.executedPlan}")
+    }
   }
 }

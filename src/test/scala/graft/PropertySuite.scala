@@ -7,8 +7,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * not just the corpus: Morton-interleave bit placement and invertibility,
   * the band-join bin-cover lemma RangeBinJoin's correctness rests on,
   * top-k merge associativity under arbitrary splits, the WAV header
-  * round trip over the full parameter space, and the FASTQ connector's
-  * byte-range splits. */
+  * round trip over the full parameter space, the FASTQ connector's
+  * byte-range splits, and the per-transcript equivalence-class index
+  * against the shuffle chain it replaced. */
 class PropertySuite extends SparkSuite {
 
   private def check(name: String, p: Prop, cases: Int = 500): Unit = {
@@ -131,5 +132,39 @@ class PropertySuite extends SparkSuite {
       java.nio.file.Files.delete(fq)
       one == 1 && whole == expected && splits.forall(identity)
     }, cases = 60)
+  }
+
+  test("Indexer equals the shuffle-chain model on random transcript sets") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    // tandem repeats (multiplicity > 1), N bases, sequences shorter than k,
+    // nulls and multibyte text (the generator's char-indexed fallback)
+    val dna = Gen.listOf(Gen.frequency(8 -> Gen.oneOf('A', 'C', 'G', 'T'), 1 -> Gen.const('N')))
+      .map(_.mkString)
+    val seq = Gen.frequency(
+      4 -> dna,
+      3 -> Gen.zip(Gen.choose(1, 4), Gen.choose(1, 8), dna).map { case (p, n, tail) =>
+        "ACGT".take(p) * n + tail },
+      1 -> Gen.listOfN(2, Gen.oneOf('A', 'C', 'G')).map(_.mkString),
+      1 -> Gen.listOf(Gen.oneOf('A', 'C', 'α', '日', 'é')).map(_.mkString),
+      1 -> Gen.const(null: String))
+    val sets = Gen.zip(Gen.choose(0, 8).flatMap(Gen.listOfN(_, seq)),
+      Gen.choose(1, 5), Gen.oneOf(true, false), Gen.oneOf(true, false))
+    def tables(r: graft.index.Indexer.Result): Seq[DataFrame] =
+      Seq(r.kmerToEc, r.ecToKmers, r.ecToTx)
+    // a table as a sorted multiset of rows, each `kmers` array as a list
+    def rows(df: DataFrame): Seq[String] = df.collect().toSeq
+      .map(_.toSeq.map { case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+        case v => String.valueOf(v) }.mkString("|")).sorted
+    check("index", Prop.forAllNoShrink(sets) { case (seqs, k, longIds, deterministic) =>
+      val idType = if (longIds) LongType else StringType
+      val input = spark.createDataFrame(
+        java.util.Arrays.asList(seqs.zipWithIndex.map { case (s, i) =>
+          Row(if (longIds) 1000L + i else s"tx$i", s) }: _*),
+        StructType(Seq(StructField("id", idType), StructField("sequence", StringType))))
+      val got = tables(graft.index.Indexer(input, k, deterministic))
+      val want = tables(utils.ShuffleIndexer(input, k, deterministic))
+      got.zip(want).forall { case (g, w) => g.schema == w.schema && rows(g) == rows(w) }
+    }, cases = 40)
   }
 }

@@ -7,8 +7,9 @@ Each input is the text file `runMain graft.Plans <sfDir> <out>` writes: one
 `========== <name> ==========` block per query, then a SUMMARY block. Before
 comparing, the ids that shift whenever any plan anywhere gains or loses an
 expression are masked: expression ids (`#123`), `plan_id=N`,
-`Subquery:N` numbering, RDD ids, lambda class names, object hash codes and
-random temp directory names. What is left is the plan shape,
+`Subquery:N` numbering, RDD ids, the line numbers of the `<File>.scala:<line>`
+call sites in RDD names, lambda class names, object hash codes and random
+temp directory names. What is left is the plan shape,
 its expressions and its arguments.
 
 Prints the changed names comma-separated on the last line (ready for
@@ -25,6 +26,7 @@ MASKS = [(re.compile(r"#\d+L?"), "#_"),
          (re.compile(r"Subquery:\d+"), "Subquery:_"),
          (re.compile(r"subquery#?\d+"), "subquery_"),
          (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+         (re.compile(r"(\w\.scala):\d+"), r"\1:_"),
          (re.compile(r"\$\$Lambda\S*?@[0-9a-f]+"), "$$Lambda_"),
          (re.compile(r"@[0-9a-f]{5,}\b"), "@_"),
          (re.compile(r"(/tmp/[\w-]*?)\d{8,}(?!\d)"), r"\1_")]
