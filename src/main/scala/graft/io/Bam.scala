@@ -1,6 +1,7 @@
 package graft.io
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, DataInputStream, EOFException, IOException, InputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, DataInputStream, EOFException,
+  FilterInputStream, IOException, InputStream}
 import java.util.zip.GZIPInputStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
@@ -46,6 +47,11 @@ private[io] case class BamChunk(path: String, start: Long, end: Long, nRef: Int)
   * whole-file byte array, no 2 GiB cap, parallelism = Σ fileSize/chunk.
   * Plain-gzip files (no BC field) are genuinely unsplittable and fall back
   * to one streaming task per file.
+  *
+  * A malformed file fails with an `IOException` that names it: a bad
+  * magic, a header cut short, and any record that ends early or whose
+  * sizes are negative or do not fit its block_size, with that record's
+  * offset. A stream may end only at a record boundary.
   */
 object Bam {
 
@@ -57,26 +63,59 @@ object Bam {
     (b(0) & 0xff) | (b(1) & 0xff) << 8 | (b(2) & 0xff) << 16 | (b(3) & 0xff) << 24
   }
 
-  /** In-memory convenience overload (tests, small files). */
-  def decode(bytes: Array[Byte]): Iterator[String] =
-    decode(new ByteArrayInputStream(bytes))
-
-  /** Lazily decode the read sequences of one BAM byte STREAM — the stream
-    * is consumed record by record, never materialized. */
-  def decode(raw: InputStream): Iterator[String] = {
-    val in = new DataInputStream(new GZIPInputStream(new BufferedInputStream(raw, 1 << 16)))
-    skipHeader(in)
-    records(in, () => false)
+  /** Lazily decode the read sequences of one plain-gzip BAM stream — the
+    * stream is consumed record by record, never materialized. */
+  private def decode(raw: InputStream, path: String): Iterator[String] = {
+    val counted = new Counted(new GZIPInputStream(new BufferedInputStream(raw, 1 << 16)))
+    val in = new DataInputStream(counted)
+    skipHeader(in, path)
+    records(in, path, counted, () => false)
   }
 
-  /** Consume the BAM magic, plain-text header, and reference dictionary. */
-  private def skipHeader(in: DataInputStream): Unit = {
-    val magic = new Array[Byte](4); in.readFully(magic)
-    if (!magic.sameElements("BAM\u0001".getBytes("ISO-8859-1")))
-      throw new IOException("not a BAM file (bad magic)")
-    in.skipNBytes(i32(in).toLong) // plain-text header
-    (0 until i32(in)).foreach { _ => // reference dictionary: name + l_ref each
-      in.skipNBytes(i32(in).toLong); i32(in)
+  /** Where a decoder stands in its stream, for errors: [[now]] at a record
+    * boundary, and how [[describe]] names such an offset. */
+  private trait Position {
+    def now: Long
+    def describe(offset: Long): String
+  }
+
+  /** Counts the bytes read and skipped through it. */
+  private final class Counted(in: InputStream) extends FilterInputStream(in) with Position {
+    private var pos = 0L
+    def now: Long = pos
+    def describe(offset: Long): String = s"uncompressed byte $offset"
+    override def read(): Int = { val b = super.read(); if (b >= 0) pos += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val r = super.read(b, off, len); if (r > 0) pos += r; r
+    }
+    override def skip(n: Long): Long = { val r = super.skip(n); pos += r; r }
+  }
+
+  private def malformed(path: String, what: String): IOException =
+    new IOException(s"$path: malformed BAM file: $what")
+
+  /** Consume the BAM magic, plain-text header, and reference dictionary;
+    * returns the number of reference sequences. A bad magic, a negative
+    * size or a header cut short fails, naming the file. */
+  private def skipHeader(in: DataInputStream, path: String): Int = {
+    val magic = new Array[Byte](4)
+    try {
+      in.readFully(magic)
+      if (!magic.sameElements("BAM\u0001".getBytes("ISO-8859-1")))
+        throw new IOException(s"$path: not a BAM file (bad magic)")
+      def size(what: String): Int = {
+        val v = i32(in)
+        if (v < 0) throw malformed(path, s"negative $what $v in the header")
+        v
+      }
+      in.skipNBytes(size("l_text").toLong) // plain-text header
+      val nRef = size("n_ref")
+      for (_ <- 0 until nRef) { // reference dictionary: name + l_ref each
+        in.skipNBytes(size("l_name").toLong); i32(in)
+      }
+      nRef
+    } catch {
+      case e: EOFException => throw new IOException(s"$path: truncated BAM header", e)
     }
   }
 
@@ -86,26 +125,45 @@ object Bam {
     * can hand off to its successor. Records for which `keep` is false are
     * skipped wholesale without decoding (the degraded head-scan path uses
     * this to emit only the records a chunk owns). Zero-length sequences
-    * (SEQ = '*') are skipped. */
-  private def records(in: DataInputStream, stop: () => Boolean,
-      keep: () => Boolean = () => true): Iterator[String] = {
+    * (SEQ = '*') are skipped.
+    *
+    * The stream may end only at a record boundary. A record cut short fails
+    * with an `IOException` naming the file and the record's offset in `pos`;
+    * so does a record whose sizes are negative or do not fit its
+    * block_size, before anything is allocated for it. */
+  private def records(in: DataInputStream, path: String, pos: Position,
+      stop: () => Boolean, keep: () => Boolean = () => true): Iterator[String] = {
     val it = new Iterator[String] {
       private var nextSeq: String = advance()
-      private def advance(): String =
-        try {
-          while (true) {
-            if (stop()) return null
-            val owned = keep()
-            val blockSize = i32(in)
+      private def advance(): String = {
+        while (true) {
+          if (stop()) return null
+          val owned = keep()
+          val start = pos.now
+          def where = pos.describe(start)
+          def bad(what: String) = malformed(path, s"the record at $where has $what")
+          try {
+            val first = in.read()
+            if (first < 0) return null // the stream ends at a record boundary
+            val b = new Array[Byte](32)
+            in.readFully(b, 0, 3)
+            val blockSize = first | (b(0) & 0xff) << 8 | (b(1) & 0xff) << 16 | (b(2) & 0xff) << 24
+            if (blockSize < 32) throw bad(s"block_size $blockSize, below the 32 fixed bytes")
             if (!owned) in.skipNBytes(blockSize.toLong)
             else {
               // fixed 32-byte record prefix (spec §4.2): refID pos l_read_name
               // mapq bin n_cigar_op flag l_seq next_refID next_pos tlen
-              val b = new Array[Byte](32); in.readFully(b)
+              in.readFully(b)
               val lReadName = b(8) & 0xff
               val nCigar = (b(12) & 0xff) | (b(13) & 0xff) << 8
               val lSeq = (b(16) & 0xff) | (b(17) & 0xff) << 8 |
                 (b(18) & 0xff) << 16 | (b(19) & 0xff) << 24
+              if (lSeq < 0) throw bad(s"negative l_seq $lSeq")
+              // read name, CIGAR, packed SEQ and QUAL (l_seq bytes)
+              val fixed = 32L + lReadName + 4L * nCigar
+              if (fixed + (lSeq + 1L) / 2 + lSeq > blockSize)
+                throw bad(s"l_read_name $lReadName, n_cigar_op $nCigar and l_seq $lSeq, " +
+                  s"which do not fit its block_size $blockSize")
               in.skipNBytes(lReadName + 4L * nCigar)
               val packed = new Array[Byte]((lSeq + 1) / 2); in.readFully(packed)
               val sb = new java.lang.StringBuilder(lSeq)
@@ -116,12 +174,16 @@ object Bam {
                 sb.append(Bases.charAt(nib)); i += 1
               }
               // qual + aux fields fill the rest of the block
-              in.skipNBytes(blockSize - 32L - lReadName - 4L * nCigar - (lSeq + 1) / 2)
+              in.skipNBytes(blockSize - fixed - (lSeq + 1) / 2)
               return sb.toString
             }
+          } catch {
+            case e: EOFException =>
+              throw new IOException(s"$path: truncated BAM file: the record at $where ends early", e)
           }
-          null
-        } catch { case _: EOFException => null }
+        }
+        null
+      }
       def hasNext: Boolean = nextSeq != null
       def next(): String = { val s = nextSeq; nextSeq = advance(); s }
     }
@@ -201,18 +263,23 @@ object Bam {
   /** InputStream over the uncompressed bytes of consecutive BGZF blocks from
     * `firstBlock`, holding ONE block in memory and tracking which compressed
     * block offset the next unread byte belongs to (the split-ownership key).
-    * All file access is positioned reads — no shared seek state. */
-  private final class BgzfCursor(in: FSDataInputStream, fileLen: Long,
-      firstBlock: Long) extends InputStream {
+    * All file access is positioned reads — no shared seek state. Its
+    * [[Position]] is the BAM virtual offset: block start << 16 | byte in
+    * the block. */
+  private final class BgzfCursor(in: FSDataInputStream, path: String, fileLen: Long,
+      firstBlock: Long) extends InputStream with Position {
     private var blockStart = firstBlock
     private var nextBlock = firstBlock
     private var buf: Array[Byte] = Array.emptyByteArray
     private var bufPos = 0
     def blockOfNextByte: Long = if (bufPos < buf.length) blockStart else nextBlock
+    def now: Long = blockOfNextByte << 16 | (if (bufPos < buf.length) bufPos else 0)
+    def describe(v: Long): String =
+      s"virtual offset $v (byte ${v & 0xffff} of the BGZF block at ${v >>> 16})"
     private def loadNext(): Boolean = {
       while (nextBlock < fileLen) {
         val len = blockLen(in, nextBlock, fileLen)
-        if (len <= 0) throw new IOException(s"bad BGZF block at offset $nextBlock")
+        if (len <= 0) throw badBlock(path, nextBlock)
         val payload = inflateBlock(in, nextBlock, len)
         blockStart = nextBlock
         nextBlock += len
@@ -243,15 +310,18 @@ object Bam {
     }
   }
 
+  private def badBlock(path: String, pos: Long): IOException =
+    new IOException(s"$path: truncated or corrupt BAM file: no BGZF block at byte $pos")
+
   /** Inflate blocks from `b0` until at least `minBytes` of uncompressed data
     * (or file end) — the guesser's search window. */
-  private def windowFrom(in: FSDataInputStream, b0: Long, fileLen: Long,
+  private def windowFrom(in: FSDataInputStream, path: String, b0: Long, fileLen: Long,
       minBytes: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     var pos = b0
     while (pos < fileLen && out.size < minBytes) {
       val len = blockLen(in, pos, fileLen)
-      if (len <= 0) throw new IOException(s"bad BGZF block at offset $pos")
+      if (len <= 0) throw badBlock(path, pos)
       out.write(inflateBlock(in, pos, len))
       pos += len
     }
@@ -302,12 +372,12 @@ object Bam {
     * rule, enforced by `keep` instead of the boundary guesser. O(prefix)
     * decompression, used as the degraded path when the guesser cannot
     * validate a boundary. */
-  private[graft] def headScan(in: FSDataInputStream, fileLen: Long,
+  private[graft] def headScan(in: FSDataInputStream, path: String, fileLen: Long,
       start: Long, end: Long): Iterator[String] = {
-    val cur = new BgzfCursor(in, fileLen, 0L)
+    val cur = new BgzfCursor(in, path, fileLen, 0L)
     val din = new DataInputStream(cur)
-    skipHeader(din)
-    records(din, () => cur.blockOfNextByte >= end,
+    skipHeader(din, path)
+    records(din, path, cur, () => cur.blockOfNextByte >= end,
       () => cur.blockOfNextByte >= start)
   }
 
@@ -321,14 +391,14 @@ object Bam {
     def closeQuietly(): Unit = try in.close() catch { case _: IOException => () }
     Option(TaskContext.get())
       .foreach(_.addTaskCompletionListener[Unit](_ => closeQuietly()))
-    if (c.nRef < 0) return decode(in: InputStream) // unsplittable plain gzip
+    if (c.nRef < 0) return decode(in, c.path) // unsplittable plain gzip
     val fileLen = fs.getFileStatus(p).getLen
     if (c.start == 0L) {
-      val cur = new BgzfCursor(in, fileLen, 0L)
+      val cur = new BgzfCursor(in, c.path, fileLen, 0L)
       val din = new DataInputStream(cur)
-      skipHeader(din)
-      records(din, () => cur.blockOfNextByte >= c.end)
-    } else {
+      skipHeader(din, c.path)
+      records(din, c.path, cur, () => cur.blockOfNextByte >= c.end)
+    } else try {
       val b0 = findBlock(in, c.start, fileLen)
       if (b0 < 0 || b0 >= c.end) return Iterator.empty
       // grow the guess window until a boundary validates or the window hits
@@ -338,7 +408,7 @@ object Bam {
       var off = -1
       var atEof = false
       while (off < 0 && !atEof) {
-        val window = windowFrom(in, b0, fileLen, minBytes)
+        val window = windowFrom(in, c.path, b0, fileLen, minBytes)
         atEof = window.length < minBytes
         off = guessRecordStart(window, c.nRef)
         if (off < 0 && !atEof) {
@@ -347,26 +417,23 @@ object Bam {
             // bound), so window exhaustion is not proof of corruption —
             // degrade to the ownership-filtered head scan instead of
             // failing the job
-            return headScan(in, fileLen, c.start, c.end)
+            return headScan(in, c.path, fileLen, c.start, c.end)
           minBytes <<= 2
         }
       }
       if (off < 0) return Iterator.empty
-      val cur = new BgzfCursor(in, fileLen, b0)
+      val cur = new BgzfCursor(in, c.path, fileLen, b0)
       cur.skipUncompressed(off.toLong)
-      records(new DataInputStream(cur), () => cur.blockOfNextByte >= c.end)
+      records(new DataInputStream(cur), c.path, cur, () => cur.blockOfNextByte >= c.end)
+    } catch {
+      case e: EOFException => throw new IOException(
+        s"${c.path}: truncated BAM file: a BGZF block after byte ${c.start} ends early", e)
     }
   }
 
   /** Reference-sequence count from the header — the guesser's refID bound. */
-  private[io] def readNRef(in: FSDataInputStream, fileLen: Long): Int = {
-    val din = new DataInputStream(new BgzfCursor(in, fileLen, 0L))
-    val magic = new Array[Byte](4); din.readFully(magic)
-    if (!magic.sameElements("BAM\u0001".getBytes("ISO-8859-1")))
-      throw new IOException("not a BAM file (bad magic)")
-    din.skipNBytes(i32(din).toLong)
-    i32(din)
-  }
+  private[io] def readNRef(in: FSDataInputStream, path: String, fileLen: Long): Int =
+    skipHeader(new DataInputStream(new BgzfCursor(in, path, fileLen, 0L)), path)
 
   /** DataFrame(sequence string) — one row per read with a stored sequence.
     * Delegates to the `graft.bam` DataSource V2 connector (BamSource):

@@ -83,7 +83,7 @@ private[io] class BamScan(roots: Seq[String], chunkBytes: Long, required: Struct
         val in = fs.open(st.getPath)
         try {
           if (Bam.blockLen(in, 0L, len) > 0) {
-            val nRef = Bam.readNRef(in, len)
+            val nRef = Bam.readNRef(in, st.getPath.toString, len)
             (0L until len by chunkBytes).map(s =>
               BamChunk(st.getPath.toString, s, math.min(s + chunkBytes, len), nRef))
           } else Seq(BamChunk(st.getPath.toString, 0L, len, -1))

@@ -7,6 +7,10 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
   * around it.
   *
   * Reference semantics: `sequence.sliding(k)` (Index.scala:87-89, SURVEY F1).
+  * The package has one slicing definition, [[KmerSlices]] (the generators
+  * and the counts all cut k-mers there), and one counting kernel,
+  * [[KmerTable]]: the per-transcript index rows ([[KmerClasses]]) and the
+  * read k-mer counts (`Quantify.countKmers`) both count in it.
   */
 object Kmers {
 

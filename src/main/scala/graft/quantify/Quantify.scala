@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
-import graft.kmer.Kmers
+import graft.kmer.KmerTable
 import graft.model.{Read, Transcript}
 
 /** Sailfish-style EM abundance quantification — the Spark-SQL re-expression
@@ -55,15 +55,34 @@ object Quantify {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Count k-mers across a read set — ADAM's adamCountKmers re-expressed
-    * (reference Quantify.scala:57-60, SURVEY A3).
-    * @param reads DataFrame with a `sequence` string column
-    * @return DataFrame(kmer string, count long)
+    * (reference Quantify.scala:57-60, SURVEY A3): its flatMap plus
+    * `reduceByKey`, which combines counts map-side, as Sailfish's Jellyfish
+    * counter does.
+    *
+    * One typed `mapPartitions` pass counts each partition's k-mers in one
+    * [[graft.kmer.KmerTable]] (slicing by [[graft.kmer.KmerSlices]], the
+    * definition `kmer_explode` uses) and emits one `(kmer, count)` row per
+    * distinct k-mer; a `groupBy(kmer)` sum merges the partitions, in one
+    * shuffle. No row is made per k-mer position. The table's capacity is
+    * fixed: a partition with more distinct k-mers emits and clears it as it
+    * fills, and the sum merges those batches too, so a task's memory stays
+    * bounded whatever its partition holds. The pass reads and writes the
+    * UTF-8 bytes (`binary`): no string is decoded or encoded per row, and the
+    * counted k-mers are byte for byte the ones `kmer_explode` slices.
+    *
+    * @param reads DataFrame with a `sequence` string column; a null
+    *   sequence, or one shorter than k, has no k-mers
+    * @return DataFrame(kmer string, count long), one row per distinct k-mer
     */
-  def countKmers(reads: DataFrame, k: Int): DataFrame =
-    reads
-      .select(Kmers.kmerExplode(col("sequence"), k).as("kmer"))
+  def countKmers(reads: DataFrame, k: Int): DataFrame = {
+    import reads.sparkSession.implicits._
+    require(k > 0, s"k-mer length must be positive, got $k")
+    reads.select(col("sequence").cast("binary")).as[Array[Byte]]
+      .mapPartitions(KmerTable.counts(_, k))
+      .select(col("_1").cast("string").as("kmer"), col("_2").as("count"))
       .groupBy("kmer")
-      .agg(count(lit(1)).as("count"))
+      .agg(sum("count").as("count"))
+  }
 
   /** Total count of read k-mers per equivalence class (reference
     * Quantify.scala:153-158, SURVEY J1+A4). The kmer→class relation is

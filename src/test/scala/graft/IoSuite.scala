@@ -295,34 +295,58 @@ class IoSuite extends SparkSuite {
     assert(seqs.toSeq === Seq("CAATCCTTCG", "GCAGTGCA"))
   }
 
-  test("BAM reader decodes 4-bit packed sequences, loader dispatches .bam") {
-    // hand-built BAM (spec v1.6 §4.2): BGZF is concatenated gzip members,
-    // so a plain GZIPOutputStream stream is a valid input to the decoder
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  private def le32(v: Int): Array[Byte] =
+    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+
+  /** One unmapped BAM alignment record (spec v1.6 §4.2) holding `seq`. */
+  private def record(name: String, seq: String): Array[Byte] = {
     val bases = "=ACMGRSVTWYHKDNB"
-    def record(name: String, seq: String): Array[Byte] = {
-      val packed = seq.grouped(2).map { pair =>
-        val hi = bases.indexOf(pair(0))
-        val lo = if (pair.length > 1) bases.indexOf(pair(1)) else 0
-        ((hi << 4) | lo).toByte
-      }.toArray
-      val nameZ = (name + "\u0000").getBytes("ISO-8859-1")
-      val qual = Array.fill[Byte](seq.length)(0xff.toByte)
-      val body = le32(-1) ++ le32(-1) ++ // refID, pos
-        Array(nameZ.length.toByte, 0.toByte) ++ // l_read_name, mapq
-        Array(0.toByte, 0.toByte) ++ // bin
-        Array(0.toByte, 0.toByte) ++ // n_cigar_op
-        le32(4).take(2) ++ // flag = 4 (unmapped), 2 bytes
-        le32(seq.length) ++ le32(-1) ++ le32(-1) ++ le32(0) ++ // l_seq, next*, tlen
-        nameZ ++ packed ++ qual
-      le32(body.length) ++ body
-    }
-    val payload = "BAM\u0001".getBytes("ISO-8859-1") ++
-      le32(0) ++ // empty header text
-      le32(1) ++ le32(5) ++ "chr1\u0000".getBytes("ISO-8859-1") ++ le32(20) ++
-      record("r1", "CAATCCTTCG") ++ record("r2", "GCAGTGCA")
+    val packed = seq.grouped(2).map { pair =>
+      val hi = bases.indexOf(pair(0))
+      val lo = if (pair.length > 1) bases.indexOf(pair(1)) else 0
+      ((hi << 4) | lo).toByte
+    }.toArray
+    val nameZ = (name + "\u0000").getBytes("ISO-8859-1")
+    val qual = Array.fill[Byte](seq.length)(0xff.toByte)
+    val body = le32(-1) ++ le32(-1) ++ // refID, pos
+      Array(nameZ.length.toByte, 0.toByte) ++ // l_read_name, mapq
+      Array(0.toByte, 0.toByte) ++ // bin
+      Array(0.toByte, 0.toByte) ++ // n_cigar_op
+      le32(4).take(2) ++ // flag = 4 (unmapped), 2 bytes
+      le32(seq.length) ++ le32(-1) ++ le32(-1) ++ le32(0) ++ // l_seq, next*, tlen
+      nameZ ++ packed ++ qual
+    le32(body.length) ++ body
+  }
+
+  /** The uncompressed BAM stream: magic, an empty header text, one
+    * reference (chr1, 20 bp), then `records`. */
+  private def bamPayload(records: Array[Byte]): Array[Byte] =
+    "BAM\u0001".getBytes("ISO-8859-1") ++ le32(0) ++
+      le32(1) ++ le32(5) ++ "chr1\u0000".getBytes("ISO-8859-1") ++ le32(20) ++ records
+
+  /** One real BGZF block (its BC extra subfield carries BSIZE) holding
+    * `payload(from until from + len)`. */
+  private def bgzfBlock(payload: Array[Byte], from: Int, len: Int): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    d.setInput(payload, from, len); d.finish()
+    val comp = new Array[Byte](len + 128)
+    var n = 0
+    while (!d.finished()) n += d.deflate(comp, n, comp.length - n)
+    d.end()
+    val crc = new java.util.zip.CRC32(); crc.update(payload, from, len)
+    val bsize = 12 + 6 + n + 8 - 1
+    Array[Byte](0x1f, 0x8b.toByte, 0x08, 0x04,
+      0, 0, 0, 0, 0, 0xff.toByte, // mtime, xfl, os
+      6, 0, // xlen
+      66, 67, 2, 0, (bsize & 0xff).toByte, ((bsize >> 8) & 0xff).toByte) ++
+      comp.take(n) ++ le32(crc.getValue.toInt) ++ le32(len)
+  }
+
+  test("BAM reader decodes 4-bit packed sequences, loader dispatches .bam") {
+    // BGZF is concatenated gzip members, so a plain GZIPOutputStream stream
+    // is a valid input to the decoder
+    val payload = bamPayload(record("r1", "CAATCCTTCG") ++ record("r2", "GCAGTGCA"))
     val bam = Files.createTempFile("graft_reads", ".bam")
     val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(bam))
     gz.write(payload); gz.close()
@@ -336,32 +360,8 @@ class IoSuite extends SparkSuite {
     // NOT align with record boundaries — the decoder must read across member
     // joins transparently, through the streaming (binaryFiles +
     // PortableDataStream) path, never materializing the file.
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val bases = "=ACMGRSVTWYHKDNB"
-    def record(name: String, seq: String): Array[Byte] = {
-      val packed = seq.grouped(2).map { pair =>
-        val hi = bases.indexOf(pair(0))
-        val lo = if (pair.length > 1) bases.indexOf(pair(1)) else 0
-        ((hi << 4) | lo).toByte
-      }.toArray
-      val nameZ = (name + "\u0000").getBytes("ISO-8859-1")
-      val qual = Array.fill[Byte](seq.length)(0xff.toByte)
-      val body = le32(-1) ++ le32(-1) ++
-        Array(nameZ.length.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        le32(4).take(2) ++
-        le32(seq.length) ++ le32(-1) ++ le32(-1) ++ le32(0) ++
-        nameZ ++ packed ++ qual
-      le32(body.length) ++ body
-    }
-    val payload = "BAM\u0001".getBytes("ISO-8859-1") ++
-      le32(0) ++
-      le32(1) ++ le32(5) ++ "chr1\u0000".getBytes("ISO-8859-1") ++ le32(20) ++
-      record("r1", "CAATCCTTCG") ++ record("r2", "GCAGTGCA") ++
-      record("r3", "TTTTGGGGCCCCAAAA")
+    val payload = bamPayload(record("r1", "CAATCCTTCG") ++ record("r2", "GCAGTGCA") ++
+      record("r3", "TTTTGGGGCCCCAAAA"))
     val bam = Files.createTempFile("graft_reads_multi", ".bam")
     val out = Files.newOutputStream(bam)
     // three members with cut points chosen inside record bodies
@@ -385,47 +385,8 @@ class IoSuite extends SparkSuite {
     // chunk size (700 B compressed) force many mid-file splits whose starts
     // land inside blocks and whose blocks cut records, exercising block-
     // boundary discovery, the record-boundary guesser, and split ownership.
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val bases = "=ACMGRSVTWYHKDNB"
-    def record(name: String, seq: String): Array[Byte] = {
-      val packed = seq.grouped(2).map { pair =>
-        val hi = bases.indexOf(pair(0))
-        val lo = if (pair.length > 1) bases.indexOf(pair(1)) else 0
-        ((hi << 4) | lo).toByte
-      }.toArray
-      val nameZ = (name + "\u0000").getBytes("ISO-8859-1")
-      val qual = Array.fill[Byte](seq.length)(0xff.toByte)
-      val body = le32(-1) ++ le32(-1) ++
-        Array(nameZ.length.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        le32(4).take(2) ++
-        le32(seq.length) ++ le32(-1) ++ le32(-1) ++ le32(0) ++
-        nameZ ++ packed ++ qual
-      le32(body.length) ++ body
-    }
-    def bgzfBlock(payload: Array[Byte], from: Int, len: Int): Array[Byte] = {
-      val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-      d.setInput(payload, from, len); d.finish()
-      val comp = new Array[Byte](len + 128)
-      var n = 0
-      while (!d.finished()) n += d.deflate(comp, n, comp.length - n)
-      d.end()
-      val crc = new java.util.zip.CRC32(); crc.update(payload, from, len)
-      val bsize = 12 + 6 + n + 8 - 1
-      Array[Byte](0x1f, 0x8b.toByte, 0x08, 0x04,
-        0, 0, 0, 0, 0, 0xff.toByte, // mtime, xfl, os
-        6, 0, // xlen
-        66, 67, 2, 0, (bsize & 0xff).toByte, ((bsize >> 8) & 0xff).toByte) ++
-        comp.take(n) ++ le32(crc.getValue.toInt) ++ le32(len)
-    }
     val expected = (0 until 300).map(i => ("ACGTTGCA" * 5).substring(0, 8 + i % 25))
-    val payload = "BAM\u0001".getBytes("ISO-8859-1") ++
-      le32(0) ++
-      le32(1) ++ le32(5) ++ "chr1\u0000".getBytes("ISO-8859-1") ++ le32(20) ++
-      expected.zipWithIndex.flatMap { case (s, i) => record(s"r$i", s) }
+    val payload = bamPayload(expected.zipWithIndex.flatMap { case (s, i) => record(s"r$i", s) }.toArray)
     // three geometries: many tiny blocks with chunks cutting them mid-block;
     // blocks bigger than chunks (several chunks land inside one block and
     // must yield nothing); and tiny chunks whose boundaries land inside the
@@ -453,47 +414,8 @@ class IoSuite extends SparkSuite {
     // ownership filter must (a) over the full range reproduce every record
     // and (b) over any split of the range partition them with no dup/loss —
     // the same contract the guesser path satisfies
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val bases = "=ACMGRSVTWYHKDNB"
-    def record(name: String, seq: String): Array[Byte] = {
-      val packed = seq.grouped(2).map { pair =>
-        val hi = bases.indexOf(pair(0))
-        val lo = if (pair.length > 1) bases.indexOf(pair(1)) else 0
-        ((hi << 4) | lo).toByte
-      }.toArray
-      val nameZ = (name + "\u0000").getBytes("ISO-8859-1")
-      val qual = Array.fill[Byte](seq.length)(0xff.toByte)
-      val body = le32(-1) ++ le32(-1) ++
-        Array(nameZ.length.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        Array(0.toByte, 0.toByte) ++
-        le32(4).take(2) ++
-        le32(seq.length) ++ le32(-1) ++ le32(-1) ++ le32(0) ++
-        nameZ ++ packed ++ qual
-      le32(body.length) ++ body
-    }
-    def bgzfBlock(payload: Array[Byte], from: Int, len: Int): Array[Byte] = {
-      val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-      d.setInput(payload, from, len); d.finish()
-      val comp = new Array[Byte](len + 128)
-      var n = 0
-      while (!d.finished()) n += d.deflate(comp, n, comp.length - n)
-      d.end()
-      val crc = new java.util.zip.CRC32(); crc.update(payload, from, len)
-      val bsize = 12 + 6 + n + 8 - 1
-      Array[Byte](0x1f, 0x8b.toByte, 0x08, 0x04,
-        0, 0, 0, 0, 0, 0xff.toByte,
-        6, 0,
-        66, 67, 2, 0, (bsize & 0xff).toByte, ((bsize >> 8) & 0xff).toByte) ++
-        comp.take(n) ++ le32(crc.getValue.toInt) ++ le32(len)
-    }
     val expected = (0 until 120).map(i => ("ACGTTGCA" * 4).substring(0, 8 + i % 17))
-    val payload = "BAM\u0001".getBytes("ISO-8859-1") ++
-      le32(0) ++
-      le32(1) ++ le32(5) ++ "chr1\u0000".getBytes("ISO-8859-1") ++ le32(20) ++
-      expected.zipWithIndex.flatMap { case (s, i) => record(s"r$i", s) }
+    val payload = bamPayload(expected.zipWithIndex.flatMap { case (s, i) => record(s"r$i", s) }.toArray)
     val bam = Files.createTempFile("graft_reads_headscan", ".bam")
     val out = Files.newOutputStream(bam)
     payload.indices.by(300).foreach { from =>
@@ -506,13 +428,78 @@ class IoSuite extends SparkSuite {
     val len = Files.size(bam)
     def scan(s: Long, e: Long): Seq[String] = {
       val in = fs.open(p)
-      try graft.io.Bam.headScan(in, len, s, e).toList finally in.close()
+      try graft.io.Bam.headScan(in, bam.toString, len, s, e).toList finally in.close()
     }
     assert(scan(0, len).sorted === expected.sorted)
     for (mid <- Seq(len / 4, len / 2, 3 * len / 4)) {
       val parts = scan(0, mid) ++ scan(mid, len)
       assert(parts.sorted === expected.sorted, s"split at $mid lost or duplicated records")
     }
+  }
+
+  test("BAM: a truncated or corrupt file fails with an error naming the file and the record") {
+    val seqs = (0 until 40).map(i => ("ACGTTGCA" * 4).substring(0, 8 + i % 17))
+    val recs = seqs.zipWithIndex.map { case (s, i) => record(s"r$i", s) }
+    val header = bamPayload(Array.emptyByteArray).length
+    val payload = bamPayload(recs.flatten.toArray)
+    val r7 = header + recs.take(7).map(_.length).sum // record 7's first byte
+    def bgzf(p: Array[Byte]): Array[Byte] =
+      p.indices.by(256).flatMap(f => bgzfBlock(p, f, math.min(256, p.length - f))).toArray ++
+        bgzfBlock(Array.emptyByteArray, 0, 0)
+    def gzip(p: Array[Byte]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(out); gz.write(p); gz.close()
+      out.toByteArray
+    }
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val p = payload.clone(); le32(v).copyToArray(p, at); p
+    }
+    /** The IOException that reading `file` fails with, through the loader
+      * with `chunkBytes`-sized splits; it must name the file. */
+    def failure(tag: String, file: Array[Byte], chunkBytes: Long): String = {
+      val bam = Files.createTempFile(s"graft_bad_$tag", ".bam")
+      Files.write(bam, file)
+      val e = intercept[Exception] {
+        graft.io.Bam.reads(spark, bam.toString, chunkBytes).collect()
+      }
+      val io = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: java.io.IOException => x }
+      assert(io.isDefined, s"$tag: no IOException in the cause chain of $e")
+      assert(io.get.getMessage.contains(bam.toString), s"$tag: ${io.get.getMessage}")
+      io.get.getMessage
+    }
+    // (tag, payload, the error's text after the record's offset, or all of
+    // it when no record is at fault)
+    val broken = Seq(
+      // EOF inside a record: the payload ends mid-record 7
+      ("cut_record", payload.take(r7 + 20), Some("ends early")),
+      // a negative l_seq; one too long for block_size; a block_size below 32
+      ("neg_l_seq", patched(r7 + 20, -6), Some("has negative l_seq -6")),
+      ("long_l_seq", patched(r7 + 20, Int.MaxValue / 2), Some("which do not fit its block_size")),
+      ("short_block", patched(r7, 12), Some("has block_size 12")),
+      ("bad_magic", patched(0, 0x4d41422f), None),
+      ("cut_header", payload.take(header - 3), None))
+    val noRecord = Map("bad_magic" -> "not a BAM file (bad magic)",
+      "cut_header" -> "truncated BAM header")
+    for ((tag, p, what) <- broken) {
+      def check(m: String, at: String): Unit = what match {
+        case Some(w) => assert(m.contains(s"the record at $at") && m.contains(w), s"$tag: $m")
+        case None => assert(m.contains(noRecord(tag)), s"$tag: $m")
+      }
+      // plain gzip: one streaming partition, offsets in uncompressed bytes
+      check(failure(tag, gzip(p), 1L << 20), s"uncompressed byte $r7 ")
+      // BGZF, whole and in 300-byte splits: offsets are virtual offsets
+      for (chunk <- Seq(1L << 20, 300L)) check(failure(tag, bgzf(p), chunk), "virtual offset")
+    }
+    // the BGZF file itself cut short, inside its last data block
+    val whole = bgzf(payload)
+    val cut = whole.take(whole.length - 28 - 40)
+    for (chunk <- Seq(1L << 20, 300L))
+      assert(failure("cut_bgzf", cut, chunk).contains("truncated"), chunk)
+    // the offset names the record: virtual offset = block start << 16 | byte in it
+    val v = failure("cut_record_bgzf", bgzf(payload.take(r7 + 20)), 1L << 20)
+    val blockStart = bgzf(payload.take(256 * (r7 / 256))).length - 28
+    assert(v.contains(s"virtual offset ${blockStart.toLong << 16 | r7 % 256} "), v)
   }
 
   test("events loader normalizes ts across fixture vintages (nanos-Long, NTZ, LTZ)") {

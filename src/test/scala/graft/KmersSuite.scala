@@ -8,7 +8,7 @@ import graft.utils.KmerColumns
   * the reference's own definition of k-merization (Index.scala:87-89) —
   * on BOTH of its code paths: the ASCII byte-slicing fast path and the
   * char-indexed multibyte fallback. The index built on the same slicing
-  * (`KmerClasses`) runs without a shuffle. */
+  * (`KmerClasses`) runs without a shuffle, and the read k-mer counts in one. */
 class KmersSuite extends SparkSuite {
   import spark.implicits._
 
@@ -60,26 +60,43 @@ class KmersSuite extends SparkSuite {
     assert(viaArray === viaGen)
   }
 
-  test("the index tables execute with no shuffle exchange") {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node of an executed plan, inside AQE query stages and cached
+    * relations too. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => other.children.flatMap(nodes)
+    })
+  }
+
+  test("the index tables execute with no shuffle exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
-      case e: ShuffleExchangeExec => 1 + shuffles(e.child)
-      case other => other.children.map(shuffles).sum
-    }
     val seqs = Seq("t1" -> "CAATCCTTCGCAATCC", "t2" -> "GCAGTGCAGTGCA", "t3" -> "AC")
       .toDF("id", "sequence")
     val idx = graft.index.Indexer(seqs, 4)
     for ((name, df) <- Seq("kmerToEc" -> idx.kmerToEc, "ecToKmers" -> idx.ecToKmers,
         "ecToTx" -> idx.ecToTx)) {
       assert(df.collect().nonEmpty, name)
-      assert(shuffles(df.queryExecution.executedPlan) === 0,
-        s"$name:\n${df.queryExecution.executedPlan}")
+      val plan = df.queryExecution.executedPlan
+      assert(nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]) === 0, s"$name:\n$plan")
     }
+  }
+
+  test("countKmers executes in one shuffle exchange and no generator") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val reads = Seq("CAATCCTTCGCAATCC", "GCAGTGCAGTGCA", "AC", null).toDF("sequence")
+    val counts = graft.quantify.Quantify.countKmers(reads, 4)
+    assert(counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Seq("CAATCCTTCGCAATCC", "GCAGTGCAGTGCA").flatMap(_.sliding(4))
+        .groupMapReduce(identity)(_ => 1L)(_ + _))
+    val plan = counts.queryExecution.executedPlan
+    assert(nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]) === 1, plan)
+    assert(!nodes(plan).exists(_.isInstanceOf[GenerateExec]), plan)
   }
 }

@@ -8,8 +8,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * the band-join bin-cover lemma RangeBinJoin's correctness rests on,
   * top-k merge associativity under arbitrary splits, the WAV header
   * round trip over the full parameter space, the FASTQ connector's
-  * byte-range splits, and the per-transcript equivalence-class index
-  * against the shuffle chain it replaced. */
+  * byte-range splits, the per-transcript equivalence-class index against
+  * the shuffle chain it replaced, and the table-counted read k-mers against
+  * the per-position count they replaced. */
 class PropertySuite extends SparkSuite {
 
   private def check(name: String, p: Prop, cases: Int = 500): Unit = {
@@ -166,5 +167,55 @@ class PropertySuite extends SparkSuite {
       val want = tables(utils.ShuffleIndexer(input, k, deterministic))
       got.zip(want).forall { case (g, w) => g.schema == w.schema && rows(g) == rows(w) }
     }, cases = 40)
+  }
+
+  test("countKmers equals the kmer_explode count on random read sets") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import graft.kmer.KmerTable
+    // N bases, lower case, multibyte text (the char-indexed slicing), nulls
+    // and reads shorter than k; repeats so that counts exceed 1
+    val base = Gen.frequency(12 -> Gen.oneOf('A', 'C', 'G', 'T'), 1 -> Gen.const('N'),
+      1 -> Gen.oneOf('a', 'c', 'g', 't', 'n'), 1 -> Gen.oneOf('α', '日', 'é'))
+    val seq = Gen.frequency(
+      6 -> Gen.choose(0, 90).flatMap(Gen.listOfN(_, base)).map(_.mkString),
+      2 -> Gen.zip(Gen.choose(1, 6), Gen.choose(2, 30)).map { case (p, n) => "ACGTAC".take(p) * n },
+      1 -> Gen.listOfN(3, base).map(_.mkString),
+      1 -> Gen.const(null: String))
+    val cases = Gen.zip(Gen.choose(0, 40).flatMap(Gen.listOfN(_, seq)),
+      Gen.oneOf(1, 4, 20, 31, 32, 33, 40), Gen.oneOf(1, 3, 7),
+      Gen.choose(1, 8), Gen.choose(0, 400))
+    def rows(df: DataFrame): Seq[(String, Long)] =
+      df.collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
+    check("counts", Prop.forAllNoShrink(cases) { case (seqs, k, parts, entries, extraBytes) =>
+      val input = spark.createDataFrame(
+        spark.sparkContext.parallelize(seqs.map(Row(_)), parts),
+        StructType(Seq(StructField("sequence", StringType))))
+      val got = graft.quantify.Quantify.countKmers(input, k)
+      val want = utils.ExplodeKmerCounts(input, k)
+      val model = rows(want)
+      // the kernel alone, with a table of a few keys and bytes (a k-mer of
+      // k chars is at most 3k bytes here), flushes over and over: the sums
+      // of its batches are the counts
+      val batches = KmerTable.counts(seqs.iterator.map(s => if (s == null) null
+        else s.getBytes("UTF-8")), k, entries, 3 * k + extraBytes).toSeq
+      val merged = batches.groupMapReduce(b => new String(b._1, "UTF-8"))(_._2)(_ + _)
+      got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)) &&
+        rows(got) == model && merged.toSeq.sorted == model
+    }, cases = 30)
+  }
+
+  test("countKmers flushes a partition with more distinct k-mers than its table holds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(16)
+    // one partition of random DNA: ~1.1 M distinct 20-mers, past the table's
+    // capacity, so it is emitted in two batches that the sum merges
+    val reads = Seq.fill(110)(Seq.fill(10019)("ACGT"(rnd.nextInt(4))).mkString)
+    val input = spark.sparkContext.parallelize(reads, 1).toDF("sequence")
+    val got = graft.quantify.Quantify.countKmers(input, 20)
+    val want = utils.ExplodeKmerCounts(input, 20)
+    assert(want.count() > graft.kmer.KmerTable.MaxEntries)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 }
