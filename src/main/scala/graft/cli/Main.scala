@@ -41,24 +41,47 @@ object Main {
       runIndex(genome, gtf, k.toInt, out,
         avroCompat = rest.contains("-avro_compat"))
     case "quantify" :: reads :: index :: gtf :: k :: out :: rest =>
-      val maxIter = rest.sliding(2).collectFirst {
-        case "-max_iterations" :: n :: Nil => n.toInt
-      }.getOrElse(50) // reference default, cli/Quantify.scala:57-58
-      runQuantify(reads, index, gtf, k.toInt, out, maxIter,
-        calibrateKmers = !rest.contains("-disable_kmer_calibration"),
-        calibrateLength = !rest.contains("-disable_length_calibration"),
-        classesAsTx = rest.contains("-classes_as_tx"))
+      quantifyFlags(rest) match {
+        case Right(f) => runQuantify(reads, index, gtf, k.toInt, out, f)
+        case Left(problem) => usage(problem)
+      }
     case "query" :: name :: sfDir :: rest =>
       runQuery(name, sfDir, rest.headOption.map(_.toInt).getOrElse(20))
-    case _ =>
-      System.err.println(
-        """usage:
-          |  index GENOME.fa ANNOTATION.gtf KMER_LENGTH OUTPUT [-avro_compat]
-          |  quantify READS.parquet INDEX ANNOTATION.gtf KMER_LENGTH OUTPUT
-          |           [-max_iterations N] [-disable_kmer_calibration]
-          |           [-disable_length_calibration] [-classes_as_tx]
-          |  query QUERY_NAME SF_DIR [N_ROWS]""".stripMargin)
-      sys.exit(1)
+    case _ => usage("")
+  }
+
+  private def usage(problem: String): Nothing = {
+    if (problem.nonEmpty) System.err.println(problem)
+    System.err.println(
+      """usage:
+        |  index GENOME.fa ANNOTATION.gtf KMER_LENGTH OUTPUT [-avro_compat]
+        |  quantify READS.parquet INDEX ANNOTATION.gtf KMER_LENGTH OUTPUT
+        |           [-max_iterations N] [-disable_kmer_calibration]
+        |           [-disable_length_calibration] [-classes_as_tx]
+        |  query QUERY_NAME SF_DIR [N_ROWS]""".stripMargin)
+    sys.exit(1)
+  }
+
+  /** `quantify`'s trailing flags. */
+  private[graft] final case class QuantifyFlags(
+      maxIterations: Int = 50, // reference default, cli/Quantify.scala:57-58
+      calibrateKmers: Boolean = true,
+      calibrateLength: Boolean = true,
+      classesAsTx: Boolean = false)
+
+  /** Parses `quantify`'s trailing flags; an unknown flag, or a missing,
+    * non-integer or negative `-max_iterations` value, is a `Left` naming it. */
+  private[graft] def quantifyFlags(args: List[String],
+      f: QuantifyFlags = QuantifyFlags()): Either[String, QuantifyFlags] = args match {
+    case Nil => Right(f)
+    case "-max_iterations" :: n :: rest if n.toIntOption.exists(_ >= 0) =>
+      quantifyFlags(rest, f.copy(maxIterations = n.toInt))
+    case "-max_iterations" :: rest =>
+      Left(s"-max_iterations needs a non-negative integer, got ${rest.headOption.getOrElse("nothing")}")
+    case "-disable_kmer_calibration" :: rest => quantifyFlags(rest, f.copy(calibrateKmers = false))
+    case "-disable_length_calibration" :: rest => quantifyFlags(rest, f.copy(calibrateLength = false))
+    case "-classes_as_tx" :: rest => quantifyFlags(rest, f.copy(classesAsTx = true))
+    case flag :: _ => Left(s"quantify: unknown flag $flag")
   }
 
   /** Run one registered query against a corpus dir and print the first
@@ -114,9 +137,7 @@ object Main {
   }
 
   private def runQuantify(readsPath: String, indexPath: String, gtfPath: String,
-      k: Int, out: String, maxIterations: Int,
-      calibrateKmers: Boolean, calibrateLength: Boolean,
-      classesAsTx: Boolean = false): Unit = {
+      k: Int, out: String, flags: QuantifyFlags): Unit = {
     val spark = graft.obs.session()
     import spark.implicits._
     // extension dispatch as the reference's loadAlignments (SURVEY S1):
@@ -126,11 +147,11 @@ object Main {
     val kmerToEc = graft.io.IndexSchema.readNormalized(spark, indexPath + "_kmers")
     // graft _tx if present; a reference-layout index gets a clear error
     // (or, with -classes_as_tx, the reference CLI's own wiring)
-    val ecToTx = graft.io.IndexSchema.readEcToTx(spark, indexPath, classesAsTx)
+    val ecToTx = graft.io.IndexSchema.readEcToTx(spark, indexPath, flags.classesAsTx)
     val transcripts = graft.io.Gtf.transcripts(spark, gtfPath)
       .as[graft.model.Transcript]
     val abundances = Quantify(reads, kmerToEc, ecToTx, transcripts, k,
-      maxIterations, calibrateKmers, calibrateLength)
+      flags.maxIterations, flags.calibrateKmers, flags.calibrateLength)
     // "<id>, <abundance>" text lines, as cli/Quantify.scala:107-108
     graft.util.Timers.time("writeAbundances") {
       abundances

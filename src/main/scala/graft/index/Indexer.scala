@@ -28,36 +28,26 @@ object Indexer {
     */
   final case class Result(kmerToEc: DataFrame, ecToKmers: DataFrame, ecToTx: DataFrame)
 
-  /** @param transcriptSeqs DataFrame(id, sequence string) with ONE row per
+  /** Class ids are xxhash64 of "tid:mult": a pure function of the class
+    * key, so there is no global sort, no id-assignment join and nothing to
+    * shuffle for numbering. This satisfies the reference's zipWithUniqueId
+    * contract (Index.scala:98; only distinctness is contractually tested,
+    * QuantifySuite.scala:467-471). Collision odds at 10⁸ classes:
+    * ~n²/2⁶⁵ ≈ 3·10⁻⁴.
+    *
+    * @param transcriptSeqs DataFrame(id, sequence string) with ONE row per
     *   id: a class key is (id, multiplicity) within one row, so a repeated
     *   id would give that id's classes twice, with colliding class ids.
     *   `io.Gtf.transcripts` groups exons by transcript id, `documents` is
     *   keyed by `doc_id`, and `Quantify.apply` rejects a duplicate
     *   transcript id in the annotation.
     * @param k k-mer length
-    * @param deterministicIds class ids are a pure function of the class key
-    *   (tid, multiplicity) in BOTH modes — no global sort, no id-assignment
-    *   join, nothing to shuffle for numbering. This satisfies the reference's
-    *   zipWithUniqueId contract (Index.scala:98; only distinctness is
-    *   contractually tested, QuantifySuite.scala:467-471) while being
-    *   narrow-computable on every row.
-    *   - true  → 56-bit md5 hash of "tid:mult" — bit-identical in Spark and
-    *     DuckDB (`conv(substring(md5(..),1,14),16,10)` ↔
-    *     `('0x'||substr(md5(..),1,14))::BIGINT`), the oracle path.
-    *   - false → xxhash64 of the same key — faster (no hex round-trip), the
-    *     scale path. Collision odds at 10⁸ classes: ~n²/2⁶⁵ ≈ 3·10⁻⁴.
     */
-  def apply(transcriptSeqs: DataFrame, k: Int, deterministicIds: Boolean = false): Result = {
+  def apply(transcriptSeqs: DataFrame, k: Int): Result = {
     val classes = transcriptSeqs
       .select(col("id").as("tid"), Kmers.kmerClasses(col("sequence"), k))
 
-    val ecId =
-      if (deterministicIds)
-        expr("cast(conv(substring(md5(concat(tid, ':', mult)), 1, 14), 16, 10) as bigint)")
-      else
-        xxhash64(concat(col("tid"), lit(":"), col("mult")))
-
-    val withEc = classes.withColumn("ec", ecId)
+    val withEc = classes.withColumn("ec", xxhash64(concat(col("tid"), lit(":"), col("mult"))))
 
     Result(
       kmerToEc = withEc.select(explode(col("kmers")).as("kmer"), col("ec")),
@@ -78,7 +68,7 @@ object Indexer {
     * @param genome      reference sequence name → sequence (`io.Genome.read`)
     */
   def fromGenome(spark: SparkSession, transcripts: DataFrame,
-      genome: Map[String, String], k: Int, deterministicIds: Boolean = false): Result = {
+      genome: Map[String, String], k: Int): Result = {
     val bc = spark.sparkContext.broadcast(genome)
     // the reference extracts the transcript's full region — the hull of its
     // exons on their reference sequence (Index.scala:85 uses t.region) — not
@@ -88,6 +78,6 @@ object Indexer {
       bc.value(regions.head.getString(0)).substring(
         regions.map(_.getLong(1)).min.toInt, regions.map(_.getLong(2)).max.toInt)
     }
-    apply(transcripts.select(col("id"), extract(col("exons")).as("sequence")), k, deterministicIds)
+    apply(transcripts.select(col("id"), extract(col("exons")).as("sequence")), k)
   }
 }

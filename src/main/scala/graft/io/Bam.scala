@@ -437,11 +437,9 @@ object Bam {
 
   /** DataFrame(sequence string) — one row per read with a stored sequence.
     * Delegates to the `graft.bam` DataSource V2 connector (BamSource):
-    * the planner slices each BGZF file into `chunkBytes` compressed-range
-    * InputPartitions and every chunk decodes in parallel; plain-gzip files
-    * get one streaming partition each. */
-  def reads(spark: SparkSession, path: String, chunkBytes: Long = 64L << 20): DataFrame =
-    spark.read.format("graft.bam")
-      .option("chunkBytes", chunkBytes.toString)
-      .load(path)
+    * the planner slices each BGZF file into compressed-range
+    * InputPartitions of Spark's file-source split size and every chunk
+    * decodes in parallel; plain-gzip files get one streaming partition each. */
+  def reads(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("graft.bam").load(path)
 }

@@ -2,7 +2,7 @@ package graft.io
 
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * offset, finds the first BGZF block it owns, and decodes only records
   * starting in its range (the same split protocol `Bam.reads` has always
   * used — the connector re-plates that chunking as connector-API
-  * partitions). `chunkBytes` is the split size option (default 64 MB);
-  * plain-gzip files degrade to one streaming partition. At 100 TB this is
+  * partitions). Splits are sized as FASTQ's are, by Spark's file-source
+  * split size ([[FastqSource.byteRanges]]); plain-gzip files degrade to
+  * one streaming partition. At 100 TB this is
   * the difference between per-file and per-block parallelism on the
   * dominant input format.
   */
@@ -35,8 +36,7 @@ class BamSource extends TableProvider with DataSourceRegister {
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new BamTable(FastqSource.paths(properties),
-      Option(properties.get("chunkBytes")).map(_.toLong).getOrElse(64L << 20))
+    new BamTable(FastqSource.paths(properties))
 }
 
 object BamSource {
@@ -44,51 +44,54 @@ object BamSource {
     StructType(Seq(StructField("sequence", StringType, nullable = true)))
 }
 
-private[io] class BamTable(roots: Seq[String], chunkBytes: Long)
+private[io] class BamTable(roots: Seq[String])
     extends Table with SupportsRead {
   override def name(): String = s"graft.bam(${roots.mkString(",")})"
   override def schema(): StructType = BamSource.fullSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new BamScanBuilder(roots, chunkBytes)
+    new BamScanBuilder(roots)
 }
 
-private[io] class BamScanBuilder(roots: Seq[String], chunkBytes: Long)
+private[io] class BamScanBuilder(roots: Seq[String])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = BamSource.fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new BamScan(roots, chunkBytes, required)
+  override def build(): Scan = new BamScan(roots, required)
 }
 
-private[io] class BamScan(roots: Seq[String], chunkBytes: Long, required: StructType)
+private[io] class BamScan(roots: Seq[String], required: StructType)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** Driver-side split planning: BGZF files slice into `chunkBytes`
-    * compressed ranges (each chunk re-validates its own block boundary at
-    * read time); non-BGZF gzip falls back to one whole-file partition. */
+  /** Driver-side split planning: BGZF files slice into the compressed
+    * byte ranges of [[FastqSource.byteRanges]] (each chunk re-validates its
+    * own block boundary at read time); non-BGZF gzip falls back to one
+    * whole-file partition. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    roots.flatMap { root =>
+    val spark = SparkSession.active
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files: Seq[FileStatus] = roots.flatMap { root =>
       val p = new Path(root)
       val fs = p.getFileSystem(conf)
-      val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
-        .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-                       else Array(st))
-      statuses.toSeq.flatMap { st =>
-        val len = st.getLen
-        val in = fs.open(st.getPath)
-        try {
-          if (Bam.blockLen(in, 0L, len) > 0) {
-            val nRef = Bam.readNRef(in, st.getPath.toString, len)
-            (0L until len by chunkBytes).map(s =>
-              BamChunk(st.getPath.toString, s, math.min(s + chunkBytes, len), nRef))
-          } else Seq(BamChunk(st.getPath.toString, 0L, len, -1))
-        } finally in.close()
-      }
+      Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus]).toSeq
+        .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
+                       else Seq(st))
+    }
+    val ranges = FastqSource.byteRanges(spark, files)
+    files.flatMap { st =>
+      val path = st.getPath
+      val len = st.getLen
+      val in = path.getFileSystem(conf).open(path)
+      try {
+        if (Bam.blockLen(in, 0L, len) > 0) {
+          val nRef = Bam.readNRef(in, path.toString, len)
+          ranges(len).map { case (from, to) => BamChunk(path.toString, from, to, nRef) }
+        } else Seq(BamChunk(path.toString, 0L, len, -1))
+      } finally in.close()
     }.map(c => BamPartition(c): InputPartition).toArray
   }
 

@@ -76,6 +76,25 @@ object FastqSource {
 
   /** A gzip file cannot be entered mid-stream: it is read whole. */
   private[io] def compressed(path: String): Boolean = path.endsWith(".gz")
+
+  /** The byte ranges of a splittable file among `files` (FASTQ text, BGZF).
+    * Spark's file-source rule over all of `files` bounds the range size
+    * (`FilePartition.maxSplitBytes`: `spark.sql.files.maxPartitionBytes`,
+    * `.openCostInBytes`, `.minPartitionNum`); a file of `len` bytes takes as
+    * many ranges as that bound needs, of equal size, so that no task is left
+    * with a short tail (25.4 MB under a 7.35 MB bound gives four ranges of
+    * 6.35 MB, not three of 7.35 and one of 3.35). */
+  private[io] def byteRanges(spark: SparkSession, files: Seq[FileStatus])
+      : Long => Seq[(Long, Long)] = {
+    val split = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
+    len => {
+      val n = (len + split - 1) / split
+      // range i holds len / n bytes, plus one for each i < len % n
+      def bound(i: Long) = i * (len / n) + math.min(i, len % n)
+      (0L until n).map(i => (bound(i), bound(i + 1)))
+    }
+  }
 }
 
 private[io] class FastqTable(roots: Seq[String]) extends Table with SupportsRead {
@@ -100,14 +119,10 @@ private[io] class FastqScan(roots: Seq[String], required: StructType)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** Byte-range partitions, planned on the driver with the session conf
-    * (directories recurse one level; bare files pass through; empty files
-    * give none). Spark's file-source rule over all the files bounds the
-    * range size; a file takes as many ranges as that bound needs, of equal
-    * size, so that no task is left with a short tail (25.4 MB under a
-    * 7.35 MB bound gives four ranges of 6.35 MB, not three of 7.35 and one
-    * of 3.35).
-    * A compressed file is one range read to its end. */
+  /** Byte-range partitions ([[FastqSource.byteRanges]]), planned on the
+    * driver with the session conf (directories recurse one level; bare
+    * files pass through; empty files give none). A compressed file is one
+    * range read to its end. */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
@@ -117,18 +132,11 @@ private[io] class FastqScan(roots: Seq[String], required: StructType)
       val st = fs.getFileStatus(p)
       if (st.isDirectory) fs.listStatus(p).toSeq.filter(_.isFile) else Seq(st)
     }.filter(_.getLen > 0).sortBy(_.getPath.toString)
-    val split = FilePartition.maxSplitBytes(spark,
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
+    val ranges = FastqSource.byteRanges(spark, files)
     files.flatMap { st =>
       val path = st.getPath.toString
       if (FastqSource.compressed(path)) Seq(FastqPartition(path, 0L, Long.MaxValue))
-      else {
-        val len = st.getLen
-        val n = (len + split - 1) / split
-        // range i holds len / n bytes, plus one for each i < len % n
-        def bound(i: Long) = i * (len / n) + math.min(i, len % n)
-        (0L until n).map(i => FastqPartition(path, bound(i), bound(i + 1)))
-      }
+      else ranges(st.getLen).map { case (from, to) => FastqPartition(path, from, to) }
     }.map(p => p: InputPartition).toArray
   }
 

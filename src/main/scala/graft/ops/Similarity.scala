@@ -1320,9 +1320,10 @@ object Similarity {
   )
 
   /** Trained-cell Spark-side pipeline shared by q51 and Dedup's q135: seeds
-    * → 2 Lloyd updates → final cell assignment. The trained-centroid frame
-    * is `cells` rows but its lineage is two passes over the corpus and
-    * it is referenced at least twice by every caller, so it is cached here.
+    * → 2 Lloyd updates → final cell assignment. `keep` is applied to the
+    * trained centroids before the assignment reads them, and to the
+    * assignment: the memo passes [[Memo.materialize]], the plan audit the
+    * identity, so both read this one definition.
     *
     * `cells` defaults to the oracle-locked CoarseCells constant (the
     * DuckDB oracle unrolls the same training with the same seed count);
@@ -1331,61 +1332,33 @@ object Similarity {
     * cell-local pair volume per vector) constant as the corpus grows.
     * @return (trained centroids (cid, ce), assignment (vec_id, embedding, cid))
     */
-  private[ops] def trainedCells(e: DataFrame,
-      cells: Int = CoarseCells): (DataFrame, DataFrame) = {
-    val cent0 = seedCentroids(e, cells)
-    val cent = lloydUpdate(assignCells(e, lloydUpdate(assignCells(e, cent0))))
-      .cache()
-    (cent, assignCells(e, cent))
+  private def trainedCells(s: SparkSession, d: String, cells: Int,
+      keep: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+    val e = graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val cent = keep(lloydUpdate(assignCells(e,
+      lloydUpdate(assignCells(e, seedCentroids(e, cells))))))
+    (cent, keep(assignCells(e, cent)))
   }
 
-  /** Session-memoized [[trainedCells]] over the standard `embeddings`
-    * table (r14, guide §2.4): five registered queries (q51/q135/q141/
-    * q142/q177) consume the IDENTICAL (corpus, cells) k-means training —
-    * each was re-running the 2-round Lloyd loop plus the final assignment
-    * (three n·C scoring passes over the corpus) from scratch. Keyed on
-    * (session, dir, cells) and materialized through [[Memo]] (temp
-    * parquet: stats-bearing scans, nothing pinned in the block manager,
-    * evicted with every other memo) — the same run-retrieval-once,
-    * fan-consumers-out discipline as the dedup pairs/components memos,
-    * and what an ANN deployment does anyway: the quantizer is TRAINED
-    * once and persisted, then every index/query path loads it. Oracle SQL
-    * unaffected — each query's WITH-chain still unrolls the training, so
-    * the memo is provably output-invisible. The scale probe's k ∝ N
-    * variants pass different `cells` and memoize separately. */
-  private val cellsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]()
-  Memo.registerClearHook { () => cellsMemo.clear() }
-
-  /** The k-means training frames PRE-materialization, for the plan audit
-    * (ADVICE r14): the trainedCellsShared memo moved the training
-    * subtree's scalar combines off every registered query's plan —
-    * q51/q135/q141/q142 dropped out of the single-partition allowlist and
-    * q177 shrank, so a partitioning regression in the training subtree
-    * would no longer trip any audit. These frames put the subtree back
-    * under the budget check. Construction is lazy (no cache, no memo
-    * side effects — the memo map is untouched). */
+  /** The k-means training frames before materialization, for the plan
+    * audit ([[graft.Plans.memoBuildFrames]]): the memo moved the training
+    * subtree's scalar combines off every registered query's plan, so these
+    * rows keep a partitioning regression in it visible. */
   private[graft] def trainedCellsAuditFrames(s: SparkSession, d: String)
       : Seq[(String, DataFrame)] = {
-    val e = graft.Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-    val cent = lloydUpdate(assignCells(e,
-      lloydUpdate(assignCells(e, seedCentroids(e, CoarseCells)))))
-    Seq("memo:cells.centroids" -> cent,
-      "memo:cells.assign" -> assignCells(e, cent))
+    val (cent, assign) = trainedCells(s, d, CoarseCells)
+    Seq("memo:cells.centroids" -> cent, "memo:cells.assign" -> assign)
   }
 
+  /** Memoized [[trainedCells]] over the standard `embeddings` table: five
+    * registered queries (q51/q135/q141/q142/q177) consume the same (corpus,
+    * cells) k-means training, three n·C scoring passes over the corpus — the
+    * quantizer an ANN deployment trains once and persists. The scale
+    * probe's k ∝ N variants pass other `cells` and memoize separately. */
   private[ops] def trainedCellsShared(s: SparkSession, d: String,
       cells: Int = CoarseCells): (DataFrame, DataFrame) =
-    cellsMemo.computeIfAbsent((s, d, cells), _ =>
-      Memo.timedBuild("similarity.trainedCells") {
-        val e = graft.Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-        val (cent, assign) = trainedCells(e, cells)
-        val out = (Memo.materialize(cent), Memo.materialize(assign))
-        cent.unpersist()
-        out
-      })
+    Memo.shared("similarity.trainedCells", s, d, cells)(
+      trainedCells(s, d, cells, Memo.materialize))
 
   /** Unrolled deterministic-k-means WITH-prefix shared by the q51 and
     * Dedup-q135 oracles: CTEs `e` (exploded vectors), `nrm` (norms), seeds →

@@ -2431,32 +2431,21 @@ object TextAnalysis {
     * and hash-matches). At 100 TB the distinct-word table is
     * Heaps-law-bounded — orders of magnitude smaller than the corpus —
     * so each round's two window passes and pair aggregate touch a frame
-    * that no longer grows with corpus size.
+    * that no longer grows with corpus size. Memoized: q90 (train), q91
+    * (apply) and q243 (fertility) share one training loop.
     *
     * @return (merge table, word-instance frame (doc_id, word_id, w),
     *         final per-distinct-word BPE token frame (w, n_w, pos, tok)) */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame, DataFrame)]()
-
-  Memo.registerClearHook(() => bpeMemo.clear())
-
-  /** Memoized: q90 (train), q91 (apply), and q243 (fertility) all need
-    * the same trained merge table — one training loop per (session, dir)
-    * instead of one per query. */
   private def bpeLoop(s: SparkSession, d: String)
       : (Seq[(Int, String, String, Long)], DataFrame, DataFrame) =
-    bpeMemo.computeIfAbsent((s, d), _ =>
-      Memo.timedBuild("text.bpeLoop")(bpeLoopImpl(s, d)))
+    Memo.shared("text.bpeLoop", s, d)(bpeLoopImpl(s, d))
 
   private def bpeLoopImpl(s: SparkSession, d: String)
       : (Seq[(Int, String, String, Long)], DataFrame, DataFrame) = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // read twice (frequency table here, the q91/q243 join-back) and held
-    // for the sessions-long memo lifetime: temp-parquet materialization
-    // (Memo), so nothing stays pinned in the block manager and no
-    // CacheManager entry can be substituted into other queries' plans
-    // (the q157 history-dependence lesson)
+    // read twice (frequency table here, the q91/q243 join-back), so it is
+    // materialized with the memo's outputs
     val words = Memo.materialize(Tables.documents(s, d)
       .select($"doc_id", posexplode(split($"text", " ")).as(Seq("word_id", "w")))
       .filter($"word_id" < 20 && length($"w") > 0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.index.Indexer
+import graft.ops.Memo
 import graft.quantify.Quantify
 
 /** The genomics operators (SURVEY §2: F1 k-merization, A1-A5 aggregation
@@ -12,68 +13,46 @@ import graft.quantify.Quantify
   * Indexer/Quantify code paths: documents play transcripts, 8-char shingles
   * play k-mers.
   *
-  * Equivalence-class ids use Indexer's deterministic mode: 56-bit md5 of
-  * the class key "tid:mult", computable narrowly on every row and
-  * bit-identical in Spark and DuckDB — no global sort anywhere in the plan.
+  * Equivalence-class ids are Indexer's xxhash64 of the class key
+  * "tid:mult", computed narrowly on every row, so no global sort appears
+  * anywhere in the plan. No query outputs a class id: the oracles key their
+  * classes by md5 of the same string and use it only to group.
   */
 object GenomicsQueries {
 
   private val K = 8
 
-  /** documents as (id, sequence) transcript input. */
-  private def docSeqs(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id").as("id"), col("text").as("sequence"))
+  /** The EC index over the documents as (id, sequence) transcripts. The
+    * `genomics.index` memo stores `kmerToEc` and `ecToTx` and leaves
+    * `ecToKmers` lazy (no registered query reads it). q21 and q22 consume
+    * the same (corpus, K) index, the one Sailfish builds once and every
+    * quantification reads (`cli index` writes it once too). q24 does not
+    * share it: its Quantify.apply contract takes string transcript ids, and
+    * coercing the memo's long tids would change join semantics mid-library. */
+  private def kmerIndex(s: SparkSession, d: String): Indexer.Result =
+    Indexer(Tables.documents(s, d).select(col("doc_id").as("id"), col("text").as("sequence")), K)
 
-  /** Session-memoized deterministic EC index over [[docSeqs]] (r14, guide
-    * §2.4 "don't recompute what a prior stage already built"): q21 and q22
-    * consume the IDENTICAL (corpus, K, deterministic-id) index, and each
-    * was re-deriving it from raw text — the family's dominant cost. Same
-    * discipline as the dedup family's pairs/trigram memos, and literally
-    * what the production pipeline does at 100 TB: `cli runIndex` writes
-    * the index parquet ONCE and every quantify run reads it. Materialized
-    * through [[graft.ops.Memo]] (temp parquet, stats-bearing scans,
-    * nothing pinned in the block manager, evicted with every other memo);
-    * oracle SQL is untouched — each query's WITH-chain still derives the
-    * index from scratch, so the memo is provably output-invisible.
-    * q24 deliberately does NOT share it: its Quantify.apply contract
-    * takes string transcript ids, and coercing the memo's long tids would
-    * change join semantics mid-library. ecToKmers is left lazy (no
-    * registered consumer). */
-  private val idxMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Indexer.Result]()
-  /** Session-memoized corpus k-mer counts (q20's histogram source and
-    * q22's read-side counts — the same `countKmers(documents, K)` pass). */
-  private val kcMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.ops.Memo.registerClearHook { () => idxMemo.clear(); kcMemo.clear() }
+  /** Corpus k-mer counts: q20's histogram source and q22's read-side
+    * counts, the same `countKmers(documents, K)` pass. */
+  private def kmerCounts(s: SparkSession, d: String): DataFrame =
+    Quantify.countKmers(Tables.documents(s, d).select(col("text").as("sequence")), K)
 
   private def sharedIndex(s: SparkSession, d: String): Indexer.Result =
-    idxMemo.computeIfAbsent((s, d), _ =>
-      graft.ops.Memo.timedBuild("genomics.index") {
-        val idx = Indexer(docSeqs(s, d), K, deterministicIds = true)
-        Indexer.Result(
-          kmerToEc = graft.ops.Memo.materialize(idx.kmerToEc),
-          ecToKmers = idx.ecToKmers,
-          ecToTx = graft.ops.Memo.materialize(idx.ecToTx))
-      })
+    Memo.shared("genomics.index", s, d) {
+      val idx = kmerIndex(s, d)
+      idx.copy(kmerToEc = Memo.materialize(idx.kmerToEc), ecToTx = Memo.materialize(idx.ecToTx))
+    }
 
   private def sharedKmerCounts(s: SparkSession, d: String): DataFrame =
-    kcMemo.computeIfAbsent((s, d), _ =>
-      graft.ops.Memo.timedBuild("genomics.kmerCounts")(graft.ops.Memo.materialize(
-        Quantify.countKmers(
-          Tables.documents(s, d).select(col("text").as("sequence")), K))))
+    Memo.shared("genomics.kmerCounts", s, d)(Memo.materialize(kmerCounts(s, d)))
 
-  /** The index/k-mer-count build frames PRE-materialization, for the plan
-    * audit (ADVICE r14, same rationale as
-    * [[graft.ops.Similarity.trainedCellsAuditFrames]]): the r14 memo moved
-    * these subtrees off q20–q22's audited plans. Lazy construction; the
-    * memo maps are untouched. */
+  /** The genomics memo builds before materialization, for the plan audit
+    * ([[graft.Plans.memoBuildFrames]]). */
   def memoAuditFrames(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
-    val idx = Indexer(docSeqs(s, d), K, deterministicIds = true)
+    val idx = kmerIndex(s, d)
     Seq("memo:genomics.kmerToEc" -> idx.kmerToEc,
       "memo:genomics.ecToTx" -> idx.ecToTx,
-      "memo:genomics.kmerCounts" -> Quantify.countKmers(
-        Tables.documents(s, d).select(col("text").as("sequence")), K))
+      "memo:genomics.kmerCounts" -> kmerCounts(s, d))
   }
 
   /** q178's interval-overlap join with the GENOME SIZE as a parameter: the
@@ -297,7 +276,7 @@ object GenomicsQueries {
         import s.implicits._
         val docs = Tables.documents(s, d)
         val seqs = docs.select($"doc_id".cast("string").as("id"), $"text".as("sequence"))
-        val idx = Indexer(seqs, K, deterministicIds = true)
+        val idx = Indexer(seqs, K)
         val reads = docs.select($"text".as("sequence")).as[graft.model.Read]
         val tx = docs.select($"doc_id".cast("string").as("id"), $"n_chars").map { r =>
           val id = r.getString(0)

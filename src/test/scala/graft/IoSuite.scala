@@ -402,8 +402,11 @@ class IoSuite extends SparkSuite {
 
       val fileLen = Files.size(bam)
       assert(fileLen / chunkBytes > 5, "fixture must span several chunks")
-      val seqs = graft.io.Bam.reads(spark, bam.toString, chunkBytes = chunkBytes)
-        .collect().map(_.getString(0)).sorted
+      val (parts, seqs) = withSplitBytes(chunkBytes) {
+        val df = graft.io.Bam.reads(spark, bam.toString)
+        (df.rdd.getNumPartitions, df.collect().map(_.getString(0)).sorted)
+      }
+      assert(parts === (fileLen + chunkBytes - 1) / chunkBytes, "one split per chunk")
       assert(seqs.toSeq === expected.sorted,
         s"block=$blockBytes chunk=$chunkBytes mismatched")
     }
@@ -460,7 +463,7 @@ class IoSuite extends SparkSuite {
       val bam = Files.createTempFile(s"graft_bad_$tag", ".bam")
       Files.write(bam, file)
       val e = intercept[Exception] {
-        graft.io.Bam.reads(spark, bam.toString, chunkBytes).collect()
+        withSplitBytes(chunkBytes)(graft.io.Bam.reads(spark, bam.toString).collect())
       }
       val io = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .collectFirst { case x: java.io.IOException => x }

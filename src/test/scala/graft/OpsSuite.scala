@@ -871,20 +871,64 @@ class OpsSuite extends SparkSuite {
   test("Memo.evictAll drops every shared-stage memo and rebuilds cleanly") {
     // the long-lived-session hygiene hook (ADVICE r8): (session, dir)
     // memo entries and their temp-parquet dirs must be evictable, and a
-    // post-evict call must rebuild from scratch with identical results
-    val before = ops.Dedup.documentPairs(spark, sf)
-    val beforeFiles = before.inputFiles.toSet
-    val nBefore = before.count()
-    val triBefore = ops.Dedup.wordTrigrams(spark, sf).count()
+    // post-evict call must rebuild from scratch with identical results.
+    // Each memo is read through a public function or a query that reads it.
+    def query(q: String) = () => SparkEntry.queries(q)(spark, sf)
+    val readers = Seq(
+      "dedup.trigrams" -> (() => ops.Dedup.wordTrigrams(spark, sf)),
+      "dedup.pairs" -> (() => ops.Dedup.documentPairs(spark, sf)),
+      "dedup.components" -> (() => ops.Dedup.documentComponents(spark, sf)),
+      "genomics.kmerCounts" -> query("q20_kmer_histogram"),
+      "genomics.index" -> query("q21_ec_summary"),
+      "similarity.trainedCells" -> query("q51_knn_ivf"),
+      "text.bpeLoop" -> query("q91_bpe_apply"))
+    /** Per memo: the memo files its reader scans and its sorted rows; and
+      * the labels whose builds were charged meanwhile. */
+    def pass() = {
+      val before = ops.Memo.buildSecSnapshot
+      val read = readers.map { case (label, mk) =>
+        val df = mk()
+        label -> (df.inputFiles.filter(_.contains("graft-memo-")).toSet,
+          df.collect().map(_.toString).sorted.toSeq)
+      }.toMap
+      val built = ops.Memo.buildSecSnapshot.collect {
+        case (k, v) if v > before.getOrElse(k, 0.0) => k
+      }.toSet
+      (read, built)
+    }
     ops.Memo.evictAll()
-    val after = ops.Dedup.documentPairs(spark, sf)
-    assert(after.count() === nBefore)
-    assert(ops.Dedup.wordTrigrams(spark, sf).count() === triBefore)
-    // the rebuilt memo is a NEW materialization (fresh temp dir), not
-    // the evicted frame handed back
-    assert(beforeFiles.nonEmpty &&
-      after.inputFiles.toSet.intersect(beforeFiles).isEmpty,
-      "evictAll must invalidate the memo entry, not return the old frame")
+    val (first, built1) = pass()
+    assert(built1 === readers.map(_._1).toSet)
+    assert(first.values.forall(_._1.nonEmpty), "every reader scans its memo's files")
+    val (hit, builtHit) = pass()
+    assert(builtHit.isEmpty, "a warm memo builds nothing")
+    assert(hit === first)
+    ops.Memo.evictAll()
+    val (second, built2) = pass()
+    assert(built2 === built1)
+    for ((label, (files, rows)) <- first) {
+      assert(second(label)._2 === rows, s"$label rebuilt to other rows")
+      // the rebuilt memo is a NEW materialization (fresh temp dir), not
+      // the evicted frame handed back
+      assert(second(label)._1.intersect(files).isEmpty,
+        s"evictAll must invalidate $label, not return the old frame")
+    }
+    ops.Memo.evictAll()
+  }
+
+  test("a memo build that reads another memo charges each label its own time") {
+    // documentComponents builds documentPairs inside its own build on a
+    // cold memo: both labels are charged, exclusive of each other
+    ops.Memo.evictAll()
+    val before = ops.Memo.buildSecSnapshot
+    val t0 = System.nanoTime()
+    ops.Dedup.documentComponents(spark, sf)
+    val wall = (System.nanoTime() - t0) / 1e9
+    val charged = ops.Memo.buildSecSnapshot.collect {
+      case (k, v) if v > before.getOrElse(k, 0.0) => k -> (v - before.getOrElse(k, 0.0))
+    }
+    assert(charged.keySet === Set("dedup.pairs", "dedup.components"))
+    assert(charged.values.sum <= wall, s"$charged over $wall s")
     ops.Memo.evictAll()
   }
 }

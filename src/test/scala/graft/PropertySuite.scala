@@ -150,21 +150,21 @@ class PropertySuite extends SparkSuite {
       1 -> Gen.listOf(Gen.oneOf('A', 'C', 'α', '日', 'é')).map(_.mkString),
       1 -> Gen.const(null: String))
     val sets = Gen.zip(Gen.choose(0, 8).flatMap(Gen.listOfN(_, seq)),
-      Gen.choose(1, 5), Gen.oneOf(true, false), Gen.oneOf(true, false))
+      Gen.choose(1, 5), Gen.oneOf(true, false))
     def tables(r: graft.index.Indexer.Result): Seq[DataFrame] =
       Seq(r.kmerToEc, r.ecToKmers, r.ecToTx)
     // a table as a sorted multiset of rows, each `kmers` array as a list
     def rows(df: DataFrame): Seq[String] = df.collect().toSeq
       .map(_.toSeq.map { case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
         case v => String.valueOf(v) }.mkString("|")).sorted
-    check("index", Prop.forAllNoShrink(sets) { case (seqs, k, longIds, deterministic) =>
+    check("index", Prop.forAllNoShrink(sets) { case (seqs, k, longIds) =>
       val idType = if (longIds) LongType else StringType
       val input = spark.createDataFrame(
         java.util.Arrays.asList(seqs.zipWithIndex.map { case (s, i) =>
           Row(if (longIds) 1000L + i else s"tx$i", s) }: _*),
         StructType(Seq(StructField("id", idType), StructField("sequence", StringType))))
-      val got = tables(graft.index.Indexer(input, k, deterministic))
-      val want = tables(utils.ShuffleIndexer(input, k, deterministic))
+      val got = tables(graft.index.Indexer(input, k))
+      val want = tables(utils.ShuffleIndexer(input, k))
       got.zip(want).forall { case (g, w) => g.schema == w.schema && rows(g) == rows(w) }
     }, cases = 40)
   }

@@ -103,7 +103,7 @@ class QuantifySuite extends SparkSuite {
       ("transcript2", Seq(Exon("exon2", "transcript2", true, ReferenceRegion("region2", 11L, 20L)))))
       .toDF("id", "exons")
     val idx = Indexer.fromGenome(spark, transcripts,
-      Map("region1" -> testSeq, "region2" -> testSeq), 5, deterministicIds = true)
+      Map("region1" -> testSeq, "region2" -> testSeq), 5)
 
     val kToEq = idx.kmerToEc.collect().map(r => r.getString(0) -> r.getLong(1))
     assert(kToEq.count(_._1 == "CAATC") === 1)
@@ -398,7 +398,7 @@ class QuantifySuite extends SparkSuite {
       Transcript(t, Seq(t), "g1", true,
         Seq(Exon(t + "e1", t, true, ReferenceRegion(chr, 0L, 20L))))
     }.toDS()
-    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 5, deterministicIds = true)
+    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 5)
     val reads = Seq(testSeq.take(12), testSeq.drop(6)).map(Read(_)).toDS()
     val ab = abundances(Quantify(reads, idx.kmerToEc, idx.ecToTx, txDs, 5, 5,
       calibrateKmerBias = false, calibrateLengthBias = true), "abundance")
@@ -454,7 +454,7 @@ class QuantifySuite extends SparkSuite {
     // α = 1 and each later M step recomputes the first round's µ
     val (transcripts, _, genome, txs) = genomeFixture
     val txDs = txs.toDS()
-    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 20, deterministicIds = true)
+    val idx = Indexer.fromGenome(spark, txDs.toDF(), genome, 20)
     val reads = ReadGenerator(transcripts, Seq(0.2, 0.1, 0.3, 0.2, 0.1, 0.1), 4000, 75,
       Some(4321L)).toDS()
     val bits = Seq(1, 50).map { n =>
@@ -549,5 +549,25 @@ class QuantifySuite extends SparkSuite {
       sc.removeSparkListener(listener)
     }
     new Measured(jobs.get, bytes.get)
+  }
+
+  test("quantify's flag parser rejects an unknown flag and a bad -max_iterations") {
+    import graft.cli.Main.{QuantifyFlags, quantifyFlags}
+    assert(quantifyFlags(Nil) === Right(QuantifyFlags()))
+    assert(quantifyFlags(List("-max_iterations", "7", "-disable_kmer_calibration",
+        "-disable_length_calibration", "-classes_as_tx")) ===
+      Right(QuantifyFlags(7, calibrateKmers = false, calibrateLength = false, classesAsTx = true)))
+    assert(quantifyFlags(List("-max_iterations", "0")) === Right(QuantifyFlags(maxIterations = 0)))
+    // a misspelt flag used to run with calibration on, silently
+    for ((args, named) <- Seq(
+        List("-disable_kmer_calibraton") -> "-disable_kmer_calibraton",
+        List("-max_iterations", "5", "extra") -> "extra",
+        List("-max_iterations", "x") -> "x",
+        List("-max_iterations", "-3") -> "-3",
+        List("-max_iterations", "2.5") -> "2.5",
+        List("-max_iterations") -> "-max_iterations")) {
+      val problem = quantifyFlags(args)
+      assert(problem.swap.exists(_.contains(named)), s"$args: $problem")
+    }
   }
 }

@@ -10,24 +10,18 @@ import graft.kmer.Kmers
   * per pair, then group by class for the k-mer lists and take the distinct
   * (class, tid) pairs — three shuffles. `graft.index.Indexer` builds the same
   * three tables per transcript row with none; PropertySuite checks the two
-  * against each other. The class-id expressions are written out again
-  * here, so the model pins them too.
+  * against each other. The class-id expression is written out again
+  * here, so the model pins it too.
   */
 object ShuffleIndexer {
 
-  def apply(transcriptSeqs: DataFrame, k: Int, deterministicIds: Boolean = false): Indexer.Result = {
+  def apply(transcriptSeqs: DataFrame, k: Int): Indexer.Result = {
     val kmerMult = transcriptSeqs
       .select(col("id").as("tid"), Kmers.kmerExplode(col("sequence"), k).as("kmer"))
       .groupBy("tid", "kmer")
       .agg(count(lit(1)).as("mult"))
 
-    val ecId =
-      if (deterministicIds)
-        expr("cast(conv(substring(md5(concat(tid, ':', mult)), 1, 14), 16, 10) as bigint)")
-      else
-        xxhash64(concat(col("tid"), lit(":"), col("mult")))
-
-    val withEc = kmerMult.withColumn("ec", ecId)
+    val withEc = kmerMult.withColumn("ec", xxhash64(concat(col("tid"), lit(":"), col("mult"))))
 
     Indexer.Result(
       kmerToEc = withEc.select("kmer", "ec"),
