@@ -70,6 +70,7 @@ object Plans {
   def memoBuildFrames(s: SparkSession, d: String)
       : Seq[(String, org.apache.spark.sql.DataFrame)] =
     relational.GenomicsQueries.memoAuditFrames(s, d) ++
+      ops.Dedup.trigramsAuditFrames(s, d) ++
       ops.Similarity.trainedCellsAuditFrames(s, d)
 
   /** Build every declared query's DataFrame against `sfDir`, scan its

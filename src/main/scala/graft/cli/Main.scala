@@ -32,22 +32,46 @@ object Main {
   def main(args: Array[String]): Unit = {
     // stage timings are per command, not per JVM
     graft.util.Timers.reset()
-    dispatch(args.toList)
+    parse(args.toList).fold(usage, run)
   }
 
-  private def dispatch(args: List[String]): Unit = args match {
-    case "index" :: genome :: gtf :: k :: out :: rest
-        if rest.forall(_ == "-avro_compat") =>
-      runIndex(genome, gtf, k.toInt, out,
-        avroCompat = rest.contains("-avro_compat"))
+  /** One parsed command line. */
+  private[graft] sealed trait Command
+  private[graft] final case class IndexCommand(genome: String, gtf: String, k: Int,
+      out: String, avroCompat: Boolean) extends Command
+  private[graft] final case class QuantifyCommand(reads: String, index: String, gtf: String,
+      k: Int, out: String, flags: QuantifyFlags) extends Command
+  private[graft] final case class QueryCommand(name: String, sfDir: String, nRows: Int)
+      extends Command
+
+  /** Parses a command line; a bad KMER_LENGTH or N_ROWS, an unknown flag or a
+    * wrong argument count is a `Left` naming the problem ("" when there is no
+    * command to name one for). */
+  private[graft] def parse(args: List[String]): Either[String, Command] = args match {
+    case "index" :: genome :: gtf :: k :: out :: rest =>
+      for {
+        kmer <- intAtLeast("KMER_LENGTH", k, least = 1)
+        _ <- rest.find(_ != "-avro_compat").map(f => s"index: unknown flag $f").toLeft(())
+      } yield IndexCommand(genome, gtf, kmer, out, avroCompat = rest.contains("-avro_compat"))
     case "quantify" :: reads :: index :: gtf :: k :: out :: rest =>
-      quantifyFlags(rest) match {
-        case Right(f) => runQuantify(reads, index, gtf, k.toInt, out, f)
-        case Left(problem) => usage(problem)
-      }
-    case "query" :: name :: sfDir :: rest =>
-      runQuery(name, sfDir, rest.headOption.map(_.toInt).getOrElse(20))
-    case _ => usage("")
+      for (kmer <- intAtLeast("KMER_LENGTH", k, least = 1); f <- quantifyFlags(rest))
+        yield QuantifyCommand(reads, index, gtf, kmer, out, f)
+    case "query" :: name :: sfDir :: Nil => Right(QueryCommand(name, sfDir, 20))
+    case "query" :: name :: sfDir :: n :: Nil =>
+      intAtLeast("N_ROWS", n, least = 0).map(QueryCommand(name, sfDir, _))
+    case _ => Left("")
+  }
+
+  /** `value` as an integer of at least `least` (0 or 1), or a `Left` naming
+    * `what` and the value. */
+  private def intAtLeast(what: String, value: String, least: Int): Either[String, Int] =
+    value.toIntOption.filter(_ >= least).toRight(
+      s"$what needs a ${if (least > 0) "positive" else "non-negative"} integer, got $value")
+
+  private def run(c: Command): Unit = c match {
+    case IndexCommand(genome, gtf, k, out, avroCompat) => runIndex(genome, gtf, k, out, avroCompat)
+    case QuantifyCommand(reads, index, gtf, k, out, f) => runQuantify(reads, index, gtf, k, out, f)
+    case QueryCommand(name, sfDir, n) => runQuery(name, sfDir, n)
   }
 
   private def usage(problem: String): Nothing = {
@@ -74,10 +98,10 @@ object Main {
   private[graft] def quantifyFlags(args: List[String],
       f: QuantifyFlags = QuantifyFlags()): Either[String, QuantifyFlags] = args match {
     case Nil => Right(f)
-    case "-max_iterations" :: n :: rest if n.toIntOption.exists(_ >= 0) =>
-      quantifyFlags(rest, f.copy(maxIterations = n.toInt))
-    case "-max_iterations" :: rest =>
-      Left(s"-max_iterations needs a non-negative integer, got ${rest.headOption.getOrElse("nothing")}")
+    case "-max_iterations" :: n :: rest =>
+      intAtLeast("-max_iterations", n, least = 0)
+        .flatMap(m => quantifyFlags(rest, f.copy(maxIterations = m)))
+    case "-max_iterations" :: Nil => Left("-max_iterations needs a non-negative integer, got nothing")
     case "-disable_kmer_calibration" :: rest => quantifyFlags(rest, f.copy(calibrateKmers = false))
     case "-disable_length_calibration" :: rest => quantifyFlags(rest, f.copy(calibrateLength = false))
     case "-classes_as_tx" :: rest => quantifyFlags(rest, f.copy(classesAsTx = true))
@@ -115,7 +139,7 @@ object Main {
   }
 
   private def runIndex(genomePath: String, gtfPath: String, k: Int, out: String,
-      avroCompat: Boolean = false): Unit = {
+      avroCompat: Boolean): Unit = {
     import graft.util.Timers
     val spark = graft.obs.session()
     // driver-side genome load + broadcast, as the reference does

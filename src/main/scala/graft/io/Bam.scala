@@ -7,26 +7,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** Java-serializable carrier for the driver's Hadoop configuration, so
-  * executor-side chunk decodes see `spark.hadoop.*` settings (object-store
-  * credentials, endpoints) instead of a default `new Configuration()`.
-  * (Spark's own SerializableConfiguration is `private[spark]`.) */
-private[io] final class HadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
+import org.apache.spark.sql.connector.read.InputPartition
 
 /** One split of a BAM file: the task owns every alignment record whose first
   * byte lies in a BGZF block starting in [start, end) of the compressed
   * stream. nRef < 0 marks a non-BGZF (plain-gzip) file that cannot be split
   * and is decoded whole by a single task. */
 private[io] case class BamChunk(path: String, start: Long, end: Long, nRef: Int)
+    extends InputPartition
 
 /** BAM read source (public SAM/BAM spec v1.6 — samtools.github.io/hts-specs).
   *

@@ -8,156 +8,64 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** FASTQ as a first-class DataSource V2 connector —
-  * `spark.read.format("graft.fastq").load(path)` — the deepest form of the
-  * SURVEY S1 "source" tier: the format plugs into Catalyst's connector API
-  * instead of hand-rolling an RDD, so it composes with everything the
-  * planner does for real sources. Column pruning is PUSHED INTO THE READER
-  * (`SupportsPushDownRequiredColumns`): `select("sequence")` makes the
-  * per-record parse skip materializing name/quality — visible in the scan's
-  * ReadSchema, exactly like a parquet scan.
+/** FASTQ as a [[SplitFileSource]] connector —
+  * `spark.read.format("graft.fastq").load(paths: _*)` — the deepest form of
+  * the SURVEY S1 "source" tier: the format plugs into Catalyst's connector
+  * API instead of hand-rolling an RDD, so it composes with everything the
+  * planner does for real sources. Column pruning is PUSHED INTO THE READER:
+  * `select("sequence")` makes the per-record parse skip materializing
+  * name/quality — visible in the scan's ReadSchema, exactly like a parquet
+  * scan.
+  *
+  * A load reads the files of the one listing rule
+  * ([[SplitFileSource.listFiles]]): each root is globbed and must match; a
+  * directory gives its files one level down; 0-byte files give no rows;
+  * files are read in path order.
   *
   * Record layout (public FASTQ format): 4 lines per record — `@name` /
   * sequence / `+[name]` / qualities. An uncompressed file is SPLITTABLE:
-  * the planner cuts it into equal byte ranges no larger than Spark's own
-  * file-source split size (`FilePartition.maxSplitBytes`:
-  * `spark.sql.files.maxPartitionBytes`, `.openCostInBytes`,
-  * `.minPartitionNum`), and each range is one `InputPartition`. A record
+  * each of its equal byte ranges ([[SplitFileSource.byteRanges]], sized by
+  * Spark's file-source split size) is one `InputPartition`. A record
   * belongs to the range holding the first byte of its `@` line; a range
   * that starts mid-file finds its first record with the ADAM / Hadoop-BAM
   * rule (see [[FastqReader]]), which a quality line starting with '@' or
   * '+' cannot fool. So the parallelism of a read scan follows the bytes,
   * not how the sequencer split its output into files. A `.gz` file decodes
-  * through a stream gunzip and stays one partition. The driver's Hadoop
-  * conf ships to executors via the same serializable carrier the BAM
-  * reader uses, so `spark.hadoop.*` (object-store credentials/endpoints)
-  * apply on the executor open path.
+  * through a stream gunzip and stays one partition.
   */
-class FastqSource extends TableProvider with DataSourceRegister {
+class FastqSource extends SplitFileSource[FastqPartition] {
   override def shortName(): String = "graft.fastq"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FastqSource.fullSchema
-  override def supportsExternalMetadata(): Boolean = true
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new FastqTable(FastqSource.paths(properties))
-}
-
-object FastqSource {
-  val fullSchema: StructType = StructType(Seq(
+  override val schema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = true),
     StructField("sequence", StringType, nullable = true),
     StructField("quality", StringType, nullable = true)))
 
-  /** `load(p)` arrives as "path"; `load(ps: _*)` as a JSON array under
-    * "paths" (flat strings — a minimal parse avoids a JSON dependency). */
-  def paths(properties: util.Map[String, String]): Seq[String] = {
-    val single = Option(properties.get("path")).toSeq
-    val multi = Option(properties.get("paths")).toSeq.flatMap { js =>
-      js.stripPrefix("[").stripSuffix("]").split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    }
-    single ++ multi
+  override def partitions(file: FileStatus, ranges: Seq[(Long, Long)],
+      conf: Configuration): Seq[FastqPartition] = {
+    val path = file.getPath.toString
+    if (FastqSource.compressed(path)) Seq(FastqPartition(path, 0L, Long.MaxValue))
+    else ranges.map { case (from, to) => FastqPartition(path, from, to) }
   }
 
+  override def reader(p: FastqPartition, required: StructType,
+      conf: Configuration): PartitionReader[InternalRow] =
+    new FastqReader(p.path, p.start, p.end, required, conf)
+}
+
+object FastqSource {
   /** A gzip file cannot be entered mid-stream: it is read whole. */
   private[io] def compressed(path: String): Boolean = path.endsWith(".gz")
-
-  /** The byte ranges of a splittable file among `files` (FASTQ text, BGZF).
-    * Spark's file-source rule over all of `files` bounds the range size
-    * (`FilePartition.maxSplitBytes`: `spark.sql.files.maxPartitionBytes`,
-    * `.openCostInBytes`, `.minPartitionNum`); a file of `len` bytes takes as
-    * many ranges as that bound needs, of equal size, so that no task is left
-    * with a short tail (25.4 MB under a 7.35 MB bound gives four ranges of
-    * 6.35 MB, not three of 7.35 and one of 3.35). */
-  private[io] def byteRanges(spark: SparkSession, files: Seq[FileStatus])
-      : Long => Seq[(Long, Long)] = {
-    val split = FilePartition.maxSplitBytes(spark,
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
-    len => {
-      val n = (len + split - 1) / split
-      // range i holds len / n bytes, plus one for each i < len % n
-      def bound(i: Long) = i * (len / n) + math.min(i, len % n)
-      (0L until n).map(i => (bound(i), bound(i + 1)))
-    }
-  }
-}
-
-private[io] class FastqTable(roots: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"graft.fastq(${roots.mkString(",")})"
-  override def schema(): StructType = FastqSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FastqScanBuilder(roots)
-}
-
-private[io] class FastqScanBuilder(roots: Seq[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = FastqSource.fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new FastqScan(roots, required)
-}
-
-private[io] class FastqScan(roots: Seq[String], required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Byte-range partitions ([[FastqSource.byteRanges]]), planned on the
-    * driver with the session conf (directories recurse one level; bare
-    * files pass through; empty files give none). A compressed file is one
-    * range read to its end. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files: Seq[FileStatus] = roots.flatMap { root =>
-      val p = new Path(root)
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) fs.listStatus(p).toSeq.filter(_.isFile) else Seq(st)
-    }.filter(_.getLen > 0).sortBy(_.getPath.toString)
-    val ranges = FastqSource.byteRanges(spark, files)
-    files.flatMap { st =>
-      val path = st.getPath.toString
-      if (FastqSource.compressed(path)) Seq(FastqPartition(path, 0L, Long.MaxValue))
-      else ranges(st.getLen).map { case (from, to) => FastqPartition(path, from, to) }
-    }.map(p => p: InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new HadoopConf(
-      new Configuration(SparkSession.active.sparkContext.hadoopConfiguration))
-    new FastqReaderFactory(required, conf)
-  }
 }
 
 /** The records of `path` whose `@` line starts in [start, end). */
 private[io] case class FastqPartition(path: String, start: Long, end: Long)
     extends InputPartition
-
-private[io] class FastqReaderFactory(required: StructType, conf: HadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FastqPartition]
-    new FastqReader(p.path, p.start, p.end, required, conf.value)
-  }
-}
 
 /** One line: the byte offset of its first byte, and its bytes without the
   * terminator. */

@@ -1,6 +1,5 @@
 package graft.kmer
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -37,12 +36,6 @@ case class KmerGenerator(child: Expression, k: Int)
 }
 
 object KmerGenerator {
-  import org.apache.spark.sql.GraftColumnBridge
-
-  /** Column form: `df.select(col("id"), kmer_explode(col("seq"), k))`. */
-  def kmer_explode(seq: Column, k: Int): Column =
-    GraftColumnBridge.column(KmerGenerator(GraftColumnBridge.expression(seq), k))
-
   /** The k-mers of `s` in order, `s.sliding(k)` over characters; none when
     * `s` is shorter than k. Each is a view of the byte range
     * [[KmerSlices]] gives it, so no k-mer copies its bytes. */

@@ -17,7 +17,7 @@ object Kmers {
   /** Generator form — one sequence row → (len−k+1) kmer rows, streamed by
     * the custom Catalyst expression (no intermediate array). */
   def kmerExplode(seq: Column, k: Int): Column =
-    KmerGenerator.kmer_explode(seq, k)
+    GraftColumnBridge.column(KmerGenerator(GraftColumnBridge.expression(seq), k))
 
   /** One sequence row → `(mult long, kmers array<string>)` rows, one per
     * distinct k-mer multiplicity in the row ([[KmerClasses]]). */

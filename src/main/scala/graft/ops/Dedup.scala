@@ -50,14 +50,21 @@ object Dedup {
     * unguarded `sequence(1, n)` would count DOWN and emit null shingles
     * there). */
   def wordTrigrams(s: SparkSession, d: String): DataFrame =
-    Memo.shared("dedup.trigrams", s, d)(Memo.materialize(
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .select(col("doc_id"), explode(expr(
-          """case when size(w) < 3 then cast(array() as array<string>)
-            |else transform(sequence(1, size(w) - 2),
-            |  i -> concat_ws(' ', slice(w, i, 3))) end""".stripMargin)).as("s"))
-        .distinct()))
+    Memo.shared("dedup.trigrams", s, d)(Memo.materialize(trigramSets(s, d)))
+
+  private def trigramSets(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), explode(expr(
+        """case when size(w) < 3 then cast(array() as array<string>)
+          |else transform(sequence(1, size(w) - 2),
+          |  i -> concat_ws(' ', slice(w, i, 3))) end""".stripMargin)).as("s"))
+      .distinct()
+
+  /** The trigram memo's build before materialization, for the plan audit
+    * ([[graft.Plans.memoBuildFrames]]). */
+  private[graft] def trigramsAuditFrames(s: SparkSession, d: String): Seq[(String, DataFrame)] =
+    Seq("memo:dedup.trigrams" -> trigramSets(s, d))
 
   /** Memoized [[minhashPairs]] over the standard `documents` table —
     * DataFrame(a, b, est_j). Eleven queries (q41/q46/q87/q98/q100/q115/

@@ -14,6 +14,10 @@ class IoSuite extends SparkSuite {
     f.toString
   }
 
+  /** Every message on the cause chain of `e`: Spark wraps a task's error. */
+  private def causeMessages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
   val gtfContent =
     """# comment line
       |chr1	test	exon	1	10	.	+	.	gene_id "g1"; transcript_id "t1";
@@ -53,11 +57,8 @@ class IoSuite extends SparkSuite {
     val bad = write("ann_bad", annotation.replace("\t12\t20\t", "\t12x\t20\t"))
     val badLine = annotation.linesIterator.toSeq(1).replace("\t12\t", "\t12x\t")
     val out = Files.createTempDirectory("graft_cli_badgtf").toString
-    // every message on the cause chain: Spark wraps the task's error
-    def messages(e: Throwable): String =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
     def assertNamed(e: Throwable): Unit = {
-      val m = messages(e)
+      val m = causeMessages(e)
       assert(m.contains("malformed GTF: start '12x' is not an integer"), m)
       assert(m.contains(java.nio.file.Paths.get(bad).getFileName.toString), m)
       assert(m.contains(badLine), m)
@@ -503,6 +504,55 @@ class IoSuite extends SparkSuite {
     val v = failure("cut_record_bgzf", bgzf(payload.take(r7 + 20)), 1L << 20)
     val blockStart = bgzf(payload.take(256 * (r7 / 256))).length - 28
     assert(v.contains(s"virtual offset ${blockStart.toLong << 16 | r7 % 256} "), v)
+  }
+
+  test("FASTQ and BAM list paths alike: glob, directory, comma, missing and 0-byte files") {
+    def bgzf(p: Array[Byte]): Array[Byte] =
+      bgzfBlock(p, 0, p.length) ++ bgzfBlock(Array.emptyByteArray, 0, 0)
+    val reads = Seq("r1" -> "CAATCCTTCG", "r2" -> "GCAGTGCA")
+    def fastq(rs: Seq[(String, String)]): Array[Byte] = rs.map { case (n, s) =>
+      s"@$n\n$s\n+\n${"I" * s.length}\n" }.mkString.getBytes("US-ASCII")
+    def bam(rs: Seq[(String, String)]): Array[Byte] =
+      bgzf(bamPayload(rs.flatMap { case (n, s) => record(n, s) }.toArray))
+    // (format, extension, the file of a read list)
+    val formats = Seq[(String, String, Seq[(String, String)] => Array[Byte])](
+      ("graft.fastq", ".fastq", fastq), ("graft.bam", ".bam", bam))
+    val want = reads.map(_._2).sorted
+    for ((format, ext, file) <- formats) {
+      val root = Files.createTempDirectory("graft_listing")
+      val one = root.resolve("both" + ext)
+      Files.write(one, file(reads))
+      val dir = Files.createDirectory(root.resolve("parts"))
+      Files.write(dir.resolve("a" + ext), file(reads.take(1)))
+      Files.write(dir.resolve("b,c" + ext), file(reads.drop(1)))
+      Files.write(dir.resolve("empty" + ext), Array.emptyByteArray)
+      def sequences(paths: String*): Seq[String] =
+        spark.read.format(format).load(paths: _*).select("sequence").collect()
+          .map(_.getString(0)).sorted.toSeq
+      for (paths <- Seq(Seq(one.toString), Seq(s"$dir/*$ext"), Seq(dir.toString),
+          Seq(s"$dir/a$ext", s"$dir/b,c$ext")))
+        assert(sequences(paths: _*) === want, s"$format $paths")
+      // a 0-byte file next to a good one adds no rows and no failure
+      assert(sequences(s"$dir/a$ext", s"$dir/empty$ext") === want.take(1), format)
+      // a path that matches nothing fails, naming it; so does a glob
+      for (missing <- Seq(s"$root/missing$ext", s"$root/*.none")) {
+        val m = causeMessages(intercept[Exception](sequences(one.toString, missing)))
+        assert(m.contains(missing), s"$format: $m")
+      }
+    }
+
+    // through the CLI: a missing .bam read path fails quantify, not an
+    // empty abundance file
+    val fa = write("genome_nobam", ">chr1\nCAATCCTTCGCCGCAGTGCA\n")
+    val gtf = write("ann_nobam", gtfContent)
+    val out = Files.createTempDirectory("graft_cli_nobam").toString
+    graft.cli.Main.main(Array("index", fa, gtf, "5", s"$out/idx"))
+    val missing = s"$out/reads.bam"
+    val m = causeMessages(intercept[Exception] {
+      graft.cli.Main.main(Array("quantify", missing, s"$out/idx", gtf, "5", s"$out/ab",
+        "-max_iterations", "5", "-disable_kmer_calibration", "-disable_length_calibration"))
+    })
+    assert(m.contains(missing), m)
   }
 
   test("events loader normalizes ts across fixture vintages (nanos-Long, NTZ, LTZ)") {

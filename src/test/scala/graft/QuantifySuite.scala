@@ -570,4 +570,30 @@ class QuantifySuite extends SparkSuite {
       assert(problem.swap.exists(_.contains(named)), s"$args: $problem")
     }
   }
+
+  test("cli: a bad KMER_LENGTH or N_ROWS, or an unknown index flag, is named") {
+    import graft.cli.Main.{IndexCommand, QuantifyCommand, QuantifyFlags, QueryCommand, parse}
+    assert(parse(List("index", "g.fa", "a.gtf", "20", "out")) ===
+      Right(IndexCommand("g.fa", "a.gtf", 20, "out", avroCompat = false)))
+    assert(parse(List("index", "g.fa", "a.gtf", "20", "out", "-avro_compat")) ===
+      Right(IndexCommand("g.fa", "a.gtf", 20, "out", avroCompat = true)))
+    assert(parse(List("quantify", "r.bam", "idx", "a.gtf", "20", "out", "-max_iterations", "7")) ===
+      Right(QuantifyCommand("r.bam", "idx", "a.gtf", 20, "out", QuantifyFlags(maxIterations = 7))))
+    assert(parse(List("query", "q01", "sf")) === Right(QueryCommand("q01", "sf", 20)))
+    assert(parse(List("query", "q01", "sf", "0")) === Right(QueryCommand("q01", "sf", 0)))
+    // each used to die with a NumberFormatException, or print the bare usage
+    for ((args, named) <- Seq(
+        List("index", "g.fa", "a.gtf", "x", "out") -> "KMER_LENGTH needs a positive integer, got x",
+        List("index", "g.fa", "a.gtf", "0", "out") -> "got 0",
+        List("index", "g.fa", "a.gtf", "20", "out", "-bogus") -> "-bogus",
+        List("index", "g.fa", "a.gtf", "20", "out", "-avro_compat", "-bogus") -> "-bogus",
+        List("quantify", "r.fastq", "idx", "a.gtf", "2.5", "out") -> "got 2.5",
+        List("quantify", "r.fastq", "idx", "a.gtf", "20", "out", "-bogus") -> "-bogus",
+        List("query", "q01", "sf", "ten") -> "N_ROWS needs a non-negative integer, got ten",
+        List("query", "q01", "sf", "-1") -> "got -1")) {
+      val problem = parse(args)
+      assert(problem.swap.exists(_.contains(named)), s"$args: $problem")
+    }
+    assert(parse(List("index", "g.fa")) === Left(""))
+  }
 }
