@@ -228,7 +228,7 @@ object Scale {
       : (Map[String, (SparkSession, String) => Unit], Map[String, String]) = {
     val q72 = Map[String, (SparkSession, String) => Unit](
       "q72_stream_join" -> ((s, d) =>
-        streaming.StreamTuning.withStatePartitions(s)(
+        streaming.Drive.withStatePartitions(s)(
           streaming.StreamingQueries.q72CountRows(s, d): Unit)))
     val q72Note = Map(
       "q72_stream_join" -> ("counting foreachBatch sink - the memory sink " +

@@ -26,10 +26,10 @@ object SparkEntry {
     "learn" -> ops.Learn.queries,
     // the streaming family runs inside withStatePartitions: state
     // partition count is a deployment knob pinned at stream start, sized
-    // here to the harness corpus (see StreamTuning's scaladoc + A/B)
+    // here to the harness corpus (see Drive.withStatePartitions)
     "streaming" -> streaming.StreamingQueries.queries.map(q => q.copy(
       fn = (s, d) =>
-        streaming.StreamTuning.withStatePartitions(s)(q.fn(s, d)))))
+        streaming.Drive.withStatePartitions(s)(q.fn(s, d)))))
 
   /** All declared queries, in registration order. */
   def allQueries: Seq[Q] = sources.flatMap(_._2)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -115,13 +114,6 @@ object Memo {
     entries.clear()
     val snapshot = new java.util.ArrayList[Path]()
     dirs.forEach { d => if (dirs.remove(d)) snapshot.add(d) }
-    snapshot.forEach { d =>
-      if (Files.exists(d)) {
-        val walk = Files.walk(d)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
+    snapshot.forEach(d => graft.util.TempDirs.delete(d))
   }
 }

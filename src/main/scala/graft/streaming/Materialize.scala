@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+
+import graft.util.TempDirs
 
 /** foreachBatch materialized view with an IDEMPOTENT sink — the pattern a
   * production pipeline uses when the target store has no transactional
@@ -39,38 +43,28 @@ object Materialize {
     * yields four micro-batches — the multi-batch shape the idempotence
     * story is about (a single-batch run would never exercise the
     * partial-sum fold). */
-  def stageMultiFile(spark: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mview_src")
+  def stageMultiFile(spark: org.apache.spark.sql.SparkSession, d: String): Path = {
+    val dir = Files.createTempDirectory("graft_mview_src")
     spark.read.parquet(s"$d/events.parquet")
       .repartition(4).write.mode("overwrite").parquet(dir.toString)
-    dir.toFile.deleteOnExit()
-    dir.toString
+    dir
   }
 
   /** The q206 drive: stream the staged files batch-by-batch through
     * writePartial, then fold the partials. */
   def run(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import spark.implicits._
+    val viewDir = Files.createTempDirectory("graft_mview_out")
+    // the returned frame reads the view lazily
+    TempDirs.deleteAtExit(viewDir)
     val srcDir = stageMultiFile(spark, d)
-    val viewDir = java.nio.file.Files.createTempDirectory("graft_mview_out")
-    viewDir.toFile.deleteOnExit()
-    val schema = spark.read.parquet(s"$d/events.parquet").schema
-    val stream = graft.Tables.normalizeTs(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir))
-    val prevMode =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val query = stream.writeStream
+    try Drive.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      Drive.run(Drive.source(spark, d, "events", Some(srcDir.toString), Some(1)).writeStream
         .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           writePartial(batch.toDF(), batchId, viewDir.toString)
-        }
-        .start()
-      try query.processAllAvailable()
-      finally query.stop()
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+        })
+    } finally TempDirs.delete(srcDir)
     readView(spark, viewDir.toString).orderBy($"hour", $"event_type")
   }
 }

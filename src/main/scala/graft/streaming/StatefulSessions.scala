@@ -20,10 +20,7 @@ object StatefulSessions {
   def countMilestones(s: SparkSession, d: String, sinkName: String,
       every: Long): DataFrame = {
     import s.implicits._
-    val staticDf = s.read.parquet(s"$d/events.parquet")
-    val stream = s.readStream.schema(staticDf.schema)
-      .parquet(Staging.stageTable(d, "events"))
-    val milestones = stream.selectExpr("user_id").as[Long]
+    val milestones = Drive.source(s, d, "events").selectExpr("user_id").as[Long]
       .groupByKey(identity)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, events: Iterator[Long], state: GroupState[Long]) =>
@@ -34,14 +31,6 @@ object StatefulSessions {
           ((before / every + 1) to (after / every)).map(m => (uid, m * every)).iterator
       }
       .toDF("user_id", "milestone")
-
-    val query = milestones.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    s.table(sinkName)
+    Drive.drain(milestones, sinkName, "append").table
   }
 }

@@ -1,15 +1,15 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
+import graft.util.TempDirs
 
 /** Structured Streaming surface. The reference has no streaming
   * (SURVEY §2.8) — this is the scale extension: the same events aggregation
-  * as a `readStream` → agg → `writeStream(memory)` pipeline, driven to
-  * completion synchronously so the correctness gate can oracle-check the
-  * final table. On a real cluster the memory sink becomes a kafka/delta
-  * sink and the batch-complete drive becomes a continuous trigger.
+  * as a stream → agg → memory-sink pipeline, each step through [[Drive]].
   */
 object StreamingQueries {
 
@@ -23,17 +23,13 @@ object StreamingQueries {
     import s.implicits._
     val winUs = 300L * 1000000L
     val binUs = 2L * winUs
-    val staticDf = s.read.parquet(s"$d/events.parquet")
-    val dir = Staging.stageTable(d, "events")
-    def src() = graft.Tables.normalizeTs(
-      s.readStream.schema(staticDf.schema).parquet(dir))
-    val errs = src().filter($"event_type" === "error")
+    val errs = Drive.source(s, d, "events").filter($"event_type" === "error")
       .select($"event_id".as("err_id"), $"ts".as("err_ts"))
       .withColumn("bin", explode(array_distinct(array(
         floor((unix_micros($"err_ts") - winUs) / binUs).cast("long"),
         floor((unix_micros($"err_ts") + winUs) / binUs).cast("long")))))
       .withWatermark("err_ts", "10 minutes")
-    val purch = src().filter($"event_type" === "purchase")
+    val purch = Drive.source(s, d, "events").filter($"event_type" === "purchase")
       .select($"event_id".as("p_id"), $"ts".as("p_ts"),
         floor(unix_micros($"ts") / binUs).cast("long").as("p_bin"))
       .withWatermark("p_ts", "10 minutes")
@@ -62,14 +58,11 @@ object StreamingQueries {
     // invocations are serialized by the stream execution thread, so
     // contains-then-add does not race.)
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-    val query = q72Joined(s, d).writeStream
+    Drive.run(q72Joined(s, d).writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!seen.contains(batchId)) { acc.add(batch.count()); seen.add(batchId); () }
-      }
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
+      })
     acc.value
   }
 
@@ -77,27 +70,10 @@ object StreamingQueries {
     Q("q70_stream_hourly",
       (s, d) => {
         import s.implicits._
-        // file-source schema comes from the static footer; ts lands as
-        // whatever the fixture vintage stores (nanos-Long or NTZ) and the
-        // shared loader normalization makes it LTZ, same as Tables.events
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events"))
-        val withTs = graft.Tables.normalizeTs(stream)
-        val agg = withTs
+        val agg = Drive.source(s, d, "events")
           .groupBy(date_trunc("hour", $"ts").as("hour"), $"event_type")
           .agg(count(lit(1)).as("n"), sum($"value").as("sv"))
-
-        val name = "q70_stream_hourly_sink"
-        val query = agg.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name)
+        Drive.drain(agg, "q70_stream_hourly_sink", "complete").table
           .select($"hour", $"event_type", $"n", round($"sv", 4).as("total_value"))
           .orderBy($"hour", $"event_type")
       },
@@ -118,23 +94,11 @@ object StreamingQueries {
     Q("q71_stream_dedup",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events"))
-        val deduped = stream
+        val deduped = Drive.source(s, d, "events")
           .select($"user_id", $"event_type")
           .dropDuplicates("user_id", "event_type")
-
-        val name = "q71_stream_dedup_sink"
-        val query = deduped.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name).orderBy($"user_id", $"event_type")
+        Drive.drain(deduped, "q71_stream_dedup_sink", "append").table
+          .orderBy($"user_id", $"event_type")
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
              |ORDER BY 1, 2""".stripMargin)),
@@ -160,18 +124,8 @@ object StreamingQueries {
     Q("q72_stream_join",
       (s, d) => {
         import s.implicits._
-        val joined = q72Joined(s, d)
-
-        val name = "q72_stream_join_sink"
-        val query = joined.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name).select($"err_id", $"p_id").orderBy($"err_id", $"p_id")
+        Drive.drain(q72Joined(s, d), "q72_stream_join_sink", "append").table
+          .select($"err_id", $"p_id").orderBy($"err_id", $"p_id")
       },
       Some("""SELECT e.event_id AS err_id, p.event_id AS p_id
              |FROM events e JOIN events p
@@ -184,7 +138,7 @@ object StreamingQueries {
     // sink needs append). A window emits EXACTLY ONCE, when the watermark
     // passes its end — which is also what bounds the state store: closed
     // windows are evicted, so state holds only the open tail regardless
-    // of stream age. After processAllAvailable the final watermark is
+    // of stream age. After the drain the final watermark is
     // max(event time) − 10 min (the no-data micro-batch advances it and
     // flushes), so the emitted set is exactly the hour windows whose end
     // precedes that — a deterministic predicate DuckDB can mirror, which
@@ -193,25 +147,11 @@ object StreamingQueries {
     Q("q74_stream_append_windows",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = graft.Tables.normalizeTs(
-          s.readStream.schema(staticDf.schema)
-            .parquet(Staging.stageTable(d, "events")))
-        val agg = stream
+        val agg = Drive.source(s, d, "events")
           .withWatermark("ts", "10 minutes")
           .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
           .agg(count(lit(1)).as("n"), sum($"value").as("sv"))
-
-        val name = "q74_stream_append_windows_sink"
-        val query = agg.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name)
+        Drive.drain(agg, "q74_stream_append_windows_sink", "append").table
           .select($"w.start".as("hour"), $"event_type", $"n",
             round($"sv", 4).as("total_value"))
           .orderBy($"hour", $"event_type")
@@ -241,25 +181,11 @@ object StreamingQueries {
     Q("q75_stream_sessions",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = graft.Tables.normalizeTs(
-          s.readStream.schema(staticDf.schema)
-            .parquet(Staging.stageTable(d, "events")))
-        val agg = stream
+        val agg = Drive.source(s, d, "events")
           .withWatermark("ts", "10 minutes")
           .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
           .agg(count(lit(1)).as("n_events"))
-
-        val name = "q75_stream_sessions_sink"
-        val query = agg.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name)
+        Drive.drain(agg, "q75_stream_sessions_sink", "append").table
           .select($"user_id", $"w.start".as("s_start"), $"w.end".as("s_end"),
             $"n_events")
           .orderBy($"user_id", $"s_start")
@@ -321,27 +247,14 @@ object StreamingQueries {
     Q("q77_stream_enrich",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events"))
         val dim = broadcast(
           graft.Tables.customer(s, d).select($"c_custkey", $"c_mktsegment"))
-        val enriched = stream
+        val enriched = Drive.source(s, d, "events")
           .filter($"event_type" === "purchase")
           .join(dim, $"user_id" === $"c_custkey")
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), sum($"value").as("sv"))
-
-        val name = "q77_stream_enrich_sink"
-        val query = enriched.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name)
+        Drive.drain(enriched, "q77_stream_enrich_sink", "complete").table
           .select($"c_mktsegment", $"n", round($"sv", 4).as("total_value"))
           .orderBy($"c_mktsegment")
       },
@@ -363,24 +276,12 @@ object StreamingQueries {
     Q("q78_stream_dedup_wm",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events"))
-        val deduped = graft.Tables.normalizeTs(stream)
+        val deduped = Drive.source(s, d, "events")
           .withWatermark("ts", "90 days")
           .dropDuplicatesWithinWatermark("user_id", "event_type")
           .select($"user_id", $"event_type")
-
-        val name = "q78_stream_dedup_wm_sink"
-        val query = deduped.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name).orderBy($"user_id", $"event_type")
+        Drive.drain(deduped, "q78_stream_dedup_wm_sink", "append").table
+          .orderBy($"user_id", $"event_type")
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
              |ORDER BY 1, 2""".stripMargin)),
@@ -397,27 +298,15 @@ object StreamingQueries {
     Q("q79_stream_decontaminate",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/documents.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "documents"))
         val evalSet = broadcast(
           graft.Tables.documents(s, d).filter($"doc_id" < 20)
             .select($"text").distinct())
-        val survivors = stream
+        val survivors = Drive.source(s, d, "documents")
           .join(evalSet, Seq("text"), "left_anti")
           .groupBy($"source")
           .agg(count(lit(1)).as("n_clean"))
-
-        val name = "q79_stream_decontaminate_sink"
-        val query = survivors.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-
-        s.table(name).orderBy($"source")
+        Drive.drain(survivors, "q79_stream_decontaminate_sink", "complete").table
+          .orderBy($"source")
       },
       Some("""SELECT source, count(*) AS n_clean
              |FROM documents
@@ -436,21 +325,22 @@ object StreamingQueries {
       (s, d) => {
         import s.implicits._
         val events = graft.Tables.events(s, d)
-        val land = java.nio.file.Files
-          .createTempDirectory("graft_q181_land").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_q181_ckpt").toString
-        val b1 = events.filter($"event_id" % 2 === 0)
-        val b2 = events.filter($"event_id" % 2 === 1)
-        def agg() = graft.Tables.normalizeTs(
-            s.readStream.schema(s.read.parquet(land).schema).parquet(land))
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"), sum($"event_id").as("id_sum"))
-        b1.write.mode("append").parquet(land)
-        Restart.drain(agg(), "q181_stream_restart_sink", ckpt)
-        b2.write.mode("append").parquet(land)
-        val (tbl, _) = Restart.drain(agg(), "q181_stream_restart_sink", ckpt)
-        tbl.select($"event_type", $"n", $"id_sum").orderBy($"event_type")
+        val land = Files.createTempDirectory("graft_q181_land")
+        val ckpt = Files.createTempDirectory("graft_q181_ckpt")
+        // the landed rows are normalized already: the stream's schema
+        // comes from the landing dir, not from $d/events.parquet
+        def drain() = Drive.drain(
+          Drive.source(s, d, "events", Some(land.toString))
+            .groupBy($"event_type")
+            .agg(count(lit(1)).as("n"), sum($"event_id").as("id_sum")),
+          "q181_stream_restart_sink", "complete", Some(ckpt.toString)).table
+        // the memory sink holds the result: both dirs go once it is drained
+        try {
+          events.filter($"event_id" % 2 === 0).write.mode("append").parquet(land.toString)
+          drain()
+          events.filter($"event_id" % 2 === 1).write.mode("append").parquet(land.toString)
+          drain().select($"event_type", $"n", $"id_sum").orderBy($"event_type")
+        } finally Seq(land, ckpt).foreach(TempDirs.delete)
       },
       Some("""SELECT event_type, count(*) AS n,
              |  CAST(sum(event_id) AS BIGINT) AS id_sum
@@ -468,10 +358,7 @@ object StreamingQueries {
     Q("q172_stream_quota",
       (s, d) => {
         import s.implicits._
-        val staticDf = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events"))
-        val keyed = graft.Tables.normalizeTs(stream)
+        val keyed = Drive.source(s, d, "events")
           .select($"user_id", expr("unix_micros(ts) div 3600000000").as("hr"),
             expr("unix_micros(ts)").as("us"), $"event_id")
           .as[(Long, Long, Long, Long)]
@@ -490,16 +377,8 @@ object StreamingQueries {
               Iterator((key._1, key._2, batch.size.toLong, admitNow, rejected))
             else Iterator.empty
         }.toDF("user_id", "hr", "n_events", "n_admitted", "n_rejected")
-
-        val name = "q172_stream_quota_sink"
-        val query = quotas.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-        s.table(name).orderBy($"user_id", $"hr")
+        Drive.drain(quotas, "q172_stream_quota_sink", "append").table
+          .orderBy($"user_id", $"hr")
       },
       Some("""WITH r AS (
              |  SELECT user_id, epoch_ns(ts) // 3600000000000 AS hr,

@@ -69,18 +69,8 @@ object TwsAccount {
   def accountStats(s: SparkSession, d: String, sinkName: String,
       srcDir: Option[String] = None, filesPerTrigger: Option[Int] = None): DataFrame = {
     import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val staticDf = s.read.parquet(s"$d/events.parquet")
-      val reader = s.readStream.schema(staticDf.schema)
-      val stream = filesPerTrigger
-        .map(n => reader.option("maxFilesPerTrigger", n.toString))
-        .getOrElse(reader)
-        .parquet(srcDir.getOrElse(Staging.stageTable(d, "events")))
-      val out = graft.Tables.normalizeTs(stream)
+    Drive.withConf(s, Drive.rocksDbState) {
+      val out = Drive.source(s, d, "events", srcDir, filesPerTrigger)
         .select($"user_id", $"event_id", $"value", $"event_type")
         .as[(Long, Long, Double, String)]
         .groupByKey(_._1)
@@ -88,17 +78,7 @@ object TwsAccount {
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "n", "sum_value", "top1", "top2",
           "n_types", "top_type", "top_type_n")
-      val query = out.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      try query.processAllAvailable()
-      finally query.stop()
-      s.table(sinkName).orderBy($"user_id")
-    } finally prior match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
+      Drive.drain(out, sinkName, "update").table.orderBy($"user_id")
     }
   }
 }

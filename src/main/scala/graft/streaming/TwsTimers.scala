@@ -61,16 +61,8 @@ object TwsTimers {
     * expiry and the filter. */
   def inactiveUsers(s: SparkSession, d: String, sinkName: String): DataFrame = {
     import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val staticDf = s.read.parquet(s"$d/events.parquet")
-      val stream = graft.Tables.normalizeTs(
-        s.readStream.schema(staticDf.schema)
-          .parquet(Staging.stageTable(d, "events")))
-      val out = stream
+    Drive.withConf(s, Drive.rocksDbState) {
+      val out = Drive.source(s, d, "events")
         .withWatermark("ts", "10 minutes")
         .select($"user_id", unix_micros($"ts").as("us"))
         .as[(Long, Long)]
@@ -78,25 +70,14 @@ object TwsTimers {
         .transformWithState(new InactivityProcessor(30L * 60L * 1000L),
           TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "last_us")
-      val query = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      try query.processAllAvailable()
-      finally query.stop()
-      val cutoff = maxTs(s, d)
-      s.table(sinkName)
+      Drive.drain(out, sinkName, "append").table
         .groupBy($"user_id")
         .agg(timestamp_micros(max($"last_us")).as("last_seen"))
-        .crossJoin(broadcast(cutoff))
+        .crossJoin(broadcast(maxTs(s, d)))
         .filter($"last_seen" + expr("INTERVAL 31 MINUTES")
           <= $"mx" - expr("INTERVAL 10 MINUTES"))
         .select($"user_id", $"last_seen")
         .orderBy($"user_id")
-    } finally prior match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
     }
   }
 

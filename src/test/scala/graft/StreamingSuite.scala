@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.{RunningUserCounts, StatefulSessions}
+import graft.streaming.{Drive, RunningUserCounts, StatefulSessions}
 
 /** Structured Streaming specs: the stateful per-user counter must converge
   * to the same totals as the batch aggregation over the same events table.
@@ -61,7 +61,7 @@ class StreamingSuite extends SparkSuite {
     assert(rows("2026-01-01 10:00:00.0") === 2) // the late event did not count
   }
 
-  /** Two-phase arrival through [[graft.streaming.Restart]]: land half the
+  /** Two-phase arrival through [[Drive.drain]]: land half the
     * events, drain, land the rest, drain AGAIN off the same checkpoint —
     * asserting each drain reads exactly its phase's files and the recovered
     * state still produces the batch answer. */
@@ -69,6 +69,7 @@ class StreamingSuite extends SparkSuite {
     val d = "/root/testdata/sf0.001"
     val land = java.nio.file.Files.createTempDirectory(s"graft_${sinkName}_land").toString
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${sinkName}_ckpt").toString
+    Seq(land, ckpt).foreach(p => graft.util.TempDirs.deleteAtExit(java.nio.file.Paths.get(p)))
     val events = Tables.events(spark, d)
     val b1 = events.filter($"event_id" % 2 === 0)
     val b2 = events.filter($"event_id" % 2 === 1)
@@ -77,11 +78,11 @@ class StreamingSuite extends SparkSuite {
         spark.readStream.schema(spark.read.parquet(land).schema).parquet(land))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"event_id").as("s"))
-    val (_, read1) = graft.streaming.Restart.drain(agg(), sinkName, ckpt)
+    val read1 = Drive.drain(agg(), sinkName, "complete", Some(ckpt)).inputRows
     assert(read1 === b1.count())
     // more data lands; the SAME checkpoint must resume, not reprocess
     b2.write.mode("append").parquet(land)
-    val (tbl, read2) = graft.streaming.Restart.drain(agg(), sinkName, ckpt)
+    val Drive.Drained(tbl, read2) = Drive.drain(agg(), sinkName, "complete", Some(ckpt))
     assert(read2 === b2.count(), "restart must read only the newly-landed files")
     val streamed = tbl.collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -133,7 +134,7 @@ class StreamingSuite extends SparkSuite {
     // the Scale probe's counting foreachBatch sink drives the SAME join
     // (q72Joined) and must see the same pair count — pins that the probe
     // harness measures the real operator, not a divergent variant
-    val counted = streaming.StreamTuning.withStatePartitions(spark)(
+    val counted = Drive.withStatePartitions(spark)(
       streaming.StreamingQueries.q72CountRows(spark, sf))
     assert(counted === expected.size.toLong)
   }
@@ -142,7 +143,7 @@ class StreamingSuite extends SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val viewDir = java.nio.file.Files.createTempDirectory("graft_mview_spec")
-    viewDir.toFile.deleteOnExit()
+    graft.util.TempDirs.deleteAtExit(viewDir)
     val prevMode =
       spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -181,7 +182,7 @@ class StreamingSuite extends SparkSuite {
     // rebuild (count, sum, top-2, type counts) from the state store on
     // batches 2 and 3, not from the batch alone
     val dir = java.nio.file.Files.createTempDirectory("graft_tws_multi")
-    dir.toFile.deleteOnExit()
+    graft.util.TempDirs.deleteAtExit(dir)
     spark.read.parquet(s"$sf/events.parquet")
       .repartition(3).write.mode("overwrite").parquet(dir.toString)
     val sink = graft.streaming.TwsAccount.accountStats(
@@ -208,5 +209,47 @@ class StreamingSuite extends SparkSuite {
       assert(row.getAs[Long]("n_types") === nt, s"user $u types")
       assert(row.getAs[Double]("top1") >= row.getAs[Double]("top2"), s"user $u top order")
     }
+  }
+
+  /** The scratch dirs streaming runs make in `java.io.tmpdir`. */
+  private def scratchDirs(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list()
+      .filter(n => Seq("graft_stream_", "graft_q181_", "graft_mview_").exists(n.startsWith))
+      .toSet
+
+  test("streaming runs delete their scratch dirs once drained") {
+    val sf = "/root/testdata/sf0.001"
+    val before = scratchDirs()
+    // a staged table (documents), a caller-made landing + checkpoint pair
+    // (q181) and a caller-staged multi-file source (q206)
+    Seq("q79_stream_decontaminate", "q181_stream_restart")
+      .foreach(q => assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q))
+    val view = SparkEntry.queries("q206_stream_mview")(spark, sf)
+    val left = scratchDirs() -- before
+    // q206's frame still reads its view dir: that one goes at JVM exit
+    assert(left.size === 1 && left.head.startsWith("graft_mview_out"), left)
+    assert(view.collect().nonEmpty)
+  }
+
+  test("a failed drain reaches the caller, stops its query and restores the conf") {
+    val sf = "/root/testdata/sf0.001"
+    val boom = udf((id: Long) =>
+      if (id >= 0) throw new IllegalStateException("boom in the stream") else id)
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.graft.test.unsetAroundDrain"
+    val prior = spark.conf.get(set)
+    val before = scratchDirs()
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Drive.withConf(spark, set -> "3", unset -> "x") {
+        Drive.drain(Drive.source(spark, sf, "events").select(boom($"event_id")),
+          "failing_drain_sink", "append")
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("boom in the stream")))
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.get(set) === prior)
+    assert(spark.conf.getOption(unset).isEmpty)
+    assert(scratchDirs() -- before === Set.empty[String], "the staged dir goes on failure too")
   }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Per-user running event counts via `mapGroupsWithState`, the
   * one-row-per-group state surface: StreamingSuite checks the final state
   * against the batch count. The library's stateful query (q73) is
-  * [[StatefulSessions.countMilestones]]. In package `graft.streaming` for
-  * `Staging`.
+  * [[StatefulSessions.countMilestones]].
   */
 object RunningUserCounts {
 
@@ -16,10 +15,7 @@ object RunningUserCounts {
     * The latest state per user must equal the batch per-user count. */
   def runningUserCounts(s: SparkSession, d: String, sinkName: String): DataFrame = {
     import s.implicits._
-    val staticDf = s.read.parquet(s"$d/events.parquet")
-    val stream = s.readStream.schema(staticDf.schema)
-      .parquet(Staging.stageTable(d, "events"))
-    val counts = stream.selectExpr("user_id").as[Long]
+    val counts = Drive.source(s, d, "events").selectExpr("user_id").as[Long]
       .groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, events: Iterator[Long], state: GroupState[Long]) =>
@@ -28,14 +24,6 @@ object RunningUserCounts {
           (uid, total)
       }
       .toDF("user_id", "n")
-
-    val query = counts.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    s.table(sinkName)
+    Drive.drain(counts, sinkName, "update").table
   }
 }
